@@ -144,7 +144,7 @@ def docsim_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         weighted.groupBy("term")
         .agg(
             F.sort_array(F.collect_set("doc_id")).alias("ds"),
-            F.first("w2").alias("w2"),
+            F.min("w2").alias("w2"),  # w2 is constant per term
         )
         .persist(StorageLevel.MEMORY_AND_DISK)
     )

@@ -22,9 +22,9 @@ over bit-identical distances.
 
 Scale notes:
   - code assignment enumerates (vector, subspace, code) rows — N x M x
-    PQ_K — through one window; the production path replaces this with a
-    per-batch matmul exactly as ivf_assignments_fast does for the
-    coarse quantizer (same twin pattern, not repeated here);
+    PQ_K — through one window; the production path
+    (embedding_pq_codes_fast) replaces this with one Arrow batch pass on
+    the shared fold kernel;
   - reconstructions join codes (N x M rows) against the BROADCAST
     codebook (M x PQ_K = 128 rows, constant) and collapse map-side;
   - the ADC shortlist stage is the knn_cosine_bruteforce shape —
@@ -42,13 +42,18 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dic_a1_spark.operators.similarity import (
     N_QUERIES,
     TOP_K,
+    _collect_side,
     _dot,
+    _fold_cosine,
+    _fold_dot,
     _null_div,
 )
 from dic_a1_spark.sources.readers import load_table
@@ -437,30 +442,18 @@ ORACLES: dict[str, str] = {
 }
 
 
-def _np_seq_dot(A, B):
-    """Row-wise dot accumulated DIMENSION-BY-DIMENSION — the numpy
-    replica of the Column expression's sequential F.aggregate fold
-    (never a BLAS matmul, whose pairwise summation rounds differently)."""
-    import numpy as np
-
-    acc = np.zeros(A.shape[0], dtype=np.float64)
-    for i in range(A.shape[1]):
-        acc += A[:, i] * B[:, i]
-    return acc
-
-
 def _np_codebook_parts(C):
-    """Per-subspace codebook views + self-norms (sequential order) from
-    the (K, D) float64 codebook matrix."""
+    """Per-subspace codebook views + self-norms (fold order) from the
+    (K, D) float64 codebook matrix."""
     cb_sub = [C[:, m * PQ_SUBDIM : (m + 1) * PQ_SUBDIM] for m in range(PQ_M)]
-    cb_norm = [_np_seq_dot(s, s) for s in cb_sub]
+    cb_norm = [_fold_dot(s, s) for s in cb_sub]
     return cb_sub, cb_norm
 
 
 def _np_assign_codes(V, cb_sub, cb_norm):
     """(n, PQ_M) codeword POSITION matrix for a (n, D) float64 batch —
-    the exact query's d2 recipe (three sequential folds, da + db -
-    2*dab) with np.argmin's first-minimal-index = lowest-code tiebreak.
+    the exact query's d2 recipe (three fold dots, da + db - 2*dab) with
+    np.argmin's first-minimal-index = lowest-code tiebreak.
 
     Iterates the ACTUAL collected codebook size, not PQ_K: a corpus
     with fewer than PQ_K rows collects a short codebook, and indexing
@@ -468,79 +461,53 @@ def _np_assign_codes(V, cb_sub, cb_norm):
     index the ascending-vec_id codebook; callers that emit code IDS map
     positions through the collected id array (positional order ==
     ascending code order, so the argmin tiebreak is preserved)."""
-    import numpy as np
-
-    n = len(V)
-    k_actual = cb_sub[0].shape[0]
-    codes = np.zeros((n, PQ_M), dtype=np.int64)
+    codes = np.zeros((len(V), PQ_M), dtype=np.int64)
     for m in range(PQ_M):
         vs = V[:, m * PQ_SUBDIM : (m + 1) * PQ_SUBDIM]
-        va = _np_seq_dot(vs, vs)
-        d2 = np.empty((n, k_actual), dtype=np.float64)
-        for k in range(k_actual):
-            ck = cb_sub[m][k]
-            dab = np.zeros(n, dtype=np.float64)
-            for i in range(PQ_SUBDIM):
-                dab += vs[:, i] * ck[i]
-            d2[:, k] = va + cb_norm[m][k] - 2.0 * dab
+        dab = _fold_dot(vs[:, :, None], cb_sub[m].T[None])
+        d2 = _fold_dot(vs, vs)[:, None] + cb_norm[m][None, :] - 2.0 * dab
         codes[:, m] = d2.argmin(axis=1)
     return codes
 
 
 def embedding_pq_codes_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch twin of embedding_pq_codes, BIT-IDENTICAL output — the
-    production assignment shape (the ivf_assignments_fast /
-    knn_cosine_quantized_fast playbook): the N x M x PQ_K row
-    enumeration becomes one Arrow batch pass with the codebook on the
-    driver (M x PQ_K = 1024 subvectors — the documented constant
-    collect bound).
+    """Batch form of embedding_pq_codes, BIT-IDENTICAL output — the
+    production assignment shape: the N x M x PQ_K row enumeration
+    becomes one Arrow batch pass with the codebook on the driver
+    (M x PQ_K = 1024 subvectors — the documented constant collect
+    bound).
 
-    Parity design: d2 repeats the Column expression's EXACT float
-    recipe — each of the three dot products accumulates
-    DIMENSION-BY-DIMENSION (acc += x[:, i] * y[:, i], the
-    _dot_seq_batch order; never a BLAS matmul, whose pairwise summation
-    rounds differently), then da + db - 2.0*dab in the same
+    d2 repeats the Column expression's EXACT float recipe — each of the
+    three dot products runs on the shared fold kernel
+    (similarity._fold_dot), then da + db - 2.0*dab in the same
     association — so distances are bit-identical and the argmin with
     lowest-code tiebreak picks identical codes. Registered under the
     SAME oracle SQL as embedding_pq_codes."""
-    import numpy as np
     import pyspark.sql.types as T
 
     e = load_table(spark, sf_dir, "embeddings")
-    cb_rows = (
-        e.where(F.col("vec_id") < PQ_K)
-        .select("vec_id", "embedding")
-        .collect()
-    )
     out_schema = T.StructType(
         [
             T.StructField("vec_id", T.LongType()),
             T.StructField("codes", T.StringType()),
         ]
     )
-    if not cb_rows:
-        # Empty codebook collect <=> empty embeddings table (codewords
-        # are corpus rows); np.stack([]) raises driver-side (r10
-        # empty-corpus probe). Correct code table: empty.
+    side = _collect_side(
+        e.where(F.col("vec_id") < PQ_K).select("vec_id", "embedding")
+    )
+    if side is None:
+        # No codebook <=> empty embeddings table (codewords are corpus
+        # rows). Correct code table: empty.
         return spark.createDataFrame([], out_schema)
-    order = np.argsort([r["vec_id"] for r in cb_rows])
-    C = np.stack(
-        [np.asarray(cb_rows[i]["embedding"], dtype=np.float64) for i in order]
-    )  # (K, D) in ascending code order
     # Code IDS of the collected codebook: contiguous 0..K-1 on the
     # driver corpora, but a sparse/tiny corpus collects non-contiguous
     # vec_ids — positions must map through this array to match the
     # exact twin's code = vec_id (r10 one-row-corpus probe).
-    cb_ids = np.array(
-        sorted(r["vec_id"] for r in cb_rows), dtype=np.int64
-    )
-
+    cb_ids, C = side
     cb_sub, cb_norm = _np_codebook_parts(C)
     bc = spark.sparkContext.broadcast((cb_sub, cb_norm, cb_ids))
 
     def assign_batches(batches):
-        import pandas as pd
-
         cb_sub_, cb_norm_, cb_ids_ = bc.value
         for pdf in batches:
             if not len(pdf):
@@ -567,30 +534,23 @@ ORACLES["embedding_pq_codes_fast"] = ORACLES["embedding_pq_codes"]
 
 
 def knn_cosine_pq_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch twin of knn_cosine_pq, BIT-IDENTICAL output — the ADC
+    """Batch form of knn_cosine_pq, BIT-IDENTICAL output — the ADC
     stage as production runs it: one Arrow pass assigns codes
-    (`_np_assign_codes`, the certified recipe), gathers the
-    reconstruction row straight from the driver-broadcast codebook, and
-    scores ADC cosine per batch, emitting only the per-batch top
-    PQ_SHORTLIST rows per query (the knn_cosine_quantized_fast
-    playbook: the global shortlist is a subset of the union of batch
-    shortlists).
+    (`_np_assign_codes`), gathers the reconstruction row straight from
+    the driver-broadcast codebook, and scores ADC cosine per batch,
+    emitting only the per-batch top PQ_SHORTLIST rows per query (the
+    global shortlist is a subset of the union of batch shortlists).
 
-    Parity design: ADC sims repeat the Column expression's float recipe
-    — dot products accumulate dimension-by-dimension (`_np_seq_dot`),
-    then dab / (sqrt(qq) * sqrt(rr)) in the same op order — so the
-    global shortlist window (same ordering expressions) picks the
-    IDENTICAL shortlist, and the exact re-rank stage is the same
-    DataFrame subtree as the exact query (rounding and ranking
-    delegated to Spark). Registered under the SAME oracle SQL as
-    knn_cosine_pq."""
-    import numpy as np
+    ADC sims come from the shared fold kernel (similarity._fold_cosine:
+    dab / (sqrt(rr) * sqrt(qq)), the Column expression's op sequence up
+    to the commutative product), so the global shortlist window (same
+    ordering expressions) picks the IDENTICAL shortlist, and the exact
+    re-rank stage is the same DataFrame subtree as the exact query
+    (rounding and ranking delegated to Spark). Registered under the
+    SAME oracle SQL as knn_cosine_pq."""
     import pyspark.sql.types as T
 
     e = load_table(spark, sf_dir, "embeddings")
-    cb_rows = (
-        e.where(F.col("vec_id") < PQ_K).select("vec_id", "embedding").collect()
-    )
     out_schema = T.StructType(
         [
             T.StructField("query_id", T.LongType()),
@@ -598,11 +558,14 @@ def knn_cosine_pq_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("adc_sim", T.DoubleType()),
         ]
     )
-    if not cb_rows:
-        # Empty codebook/query collect <=> empty embeddings table;
-        # np.stack([]) raises driver-side (r10 empty-corpus probe).
-        # Schema matches the final select below (rank is row_number's
-        # INT), so downstream consumers see the real shape, just empty.
+    cb = _collect_side(e.where(F.col("vec_id") < PQ_K).select("vec_id", "embedding"))
+    qs = _collect_side(
+        e.where(F.col("vec_id") < N_QUERIES).select("vec_id", "embedding")
+    )
+    if cb is None or qs is None:
+        # No codebook or no query rows (an empty or sparse embeddings
+        # table): nothing to rank. Schema matches the final select below
+        # (rank is row_number's INT).
         return spark.createDataFrame(
             [],
             T.StructType(
@@ -614,39 +577,14 @@ def knn_cosine_pq_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ]
             ),
         )
-    order = np.argsort([r["vec_id"] for r in cb_rows])
-    C = np.stack(
-        [np.asarray(cb_rows[i]["embedding"], dtype=np.float64) for i in order]
+    cb_sub, cb_norm = _np_codebook_parts(cb[1])
+    q_ids, Q = qs
+    bc = spark.sparkContext.broadcast(
+        (cb_sub, cb_norm, q_ids, Q, np.sqrt(_fold_dot(Q, Q)))
     )
-    cb_sub, cb_norm = _np_codebook_parts(C)
-
-    q_rows = (
-        e.where(F.col("vec_id") < N_QUERIES)
-        .select("vec_id", "embedding")
-        .collect()
-    )
-    if not q_rows:
-        # No query rows (ids below N_QUERIES absent): nothing to rank.
-        return spark.createDataFrame(
-            [],
-            T.StructType(
-                [
-                    T.StructField("query_id", T.LongType()),
-                    T.StructField("neighbor_id", T.LongType()),
-                    T.StructField("sim_pq", T.DoubleType()),
-                    T.StructField("rank", T.IntegerType()),
-                ]
-            ),
-        )
-    q_ids = np.array([r["vec_id"] for r in q_rows], dtype=np.int64)
-    Q = np.stack([np.asarray(r["embedding"], dtype=np.float64) for r in q_rows])
-    sq_qn = np.sqrt(_np_seq_dot(Q, Q))
-    bc = spark.sparkContext.broadcast((cb_sub, cb_norm, C, q_ids, Q, sq_qn))
 
     def score_batches(batches):
-        import pandas as pd
-
-        cb_sub_, cb_norm_, C_, q_ids_, Q_, sq_qn_ = bc.value
+        cb_sub_, cb_norm_, q_ids_, Q_, sq_qn_ = bc.value
         for pdf in batches:
             if not len(pdf):
                 continue
@@ -661,16 +599,10 @@ def knn_cosine_pq_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
                 R[:, m * PQ_SUBDIM : (m + 1) * PQ_SUBDIM] = cb_sub_[m][
                     codes[:, m]
                 ]
-            sq_rn = np.sqrt(_np_seq_dot(R, R))
-            for qi in range(len(q_ids_)):
-                qid = int(q_ids_[qi])
-                # dab accumulated dimension-by-dimension (fold order)
-                dab = np.zeros(len(R), dtype=np.float64)
-                for i in range(R.shape[1]):
-                    dab += Q_[qi, i] * R[:, i]
-                sims = dab / (sq_qn_[qi] * sq_rn)
+            sims = _fold_cosine(R, Q_, sq_qn_)  # (batch, queries)
+            for qi, qid in enumerate(q_ids_.tolist()):
                 mask = nbr != qid
-                s, nn = sims[mask], nbr[mask]
+                s, nn = sims[mask, qi], nbr[mask]
                 if not len(nn):
                     continue
                 pick = np.lexsort((nn, -s))[:PQ_SHORTLIST]

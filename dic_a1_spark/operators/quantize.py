@@ -6,8 +6,8 @@ shuffle bottleneck of every ANN stage — int8 symmetric quantization cuts
 both by 4x and turns similarity scoring into integer arithmetic (exact,
 order-independent, SIMD-friendly on every engine). This module implements
 the standard absmax scheme (scale = max|x| / 127, q = round(x / scale))
-the way a Spark pipeline should: pure Column expressions, map-only per
-vector, no UDFs, no shuffle until the (tiny) top-k window.
+as pure Column expressions, map-only per vector; quantized kNN scores
+in Arrow batches, with no shuffle until the (tiny) top-k window.
 
 Oracle posture: everything here is FULLY value-hash verifiable, unlike
 float ANN variants — quantized dot products are integer sums (exact in
@@ -36,8 +36,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import LongType
 
 from dic_a1_spark.operators.similarity import N_QUERIES, TOP_K
 from dic_a1_spark.sources.readers import load_table
@@ -70,50 +68,6 @@ def _with_quantized(e: DataFrame) -> DataFrame:
     return e.withColumn("scale", _scale(v)).withColumn(
         "qvec", _quantize(v, F.col("scale"))
     )
-
-
-def _int_dot(a: Column, b: Column) -> Column:
-    """Integer dot product — exact, so accumulation order is irrelevant
-    (unlike the float folds in operators/similarity.py). (r12 note: a
-    64-term unrolled JVM sum was measured here and REJECTED for the same
-    reason as similarity._dot_fixed at dim 64 — the ~400-node tree costs
-    more in per-query Catalyst planning than it saves at the executor for
-    this query's pair volume.)"""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x * y).cast("long")),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-
-
-@pandas_udf(LongType())
-def _int_dot_batch(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Arrow-batched twin of _int_dot for the PER-PAIR hot path (r12,
-    guide §4.2). Integer accumulation is EXACT, so any summation order
-    gives the fold's value bit-for-bit — no association pinning needed,
-    and numpy may sum however it likes (max |element| is 127^2 x 64 «
-    2^63, no overflow). Mirrors the fold's NULL semantics: a NULL array
-    or length mismatch yields NULL (zip_with pads with NULL, poisoning
-    the fold's accumulator)."""
-    n = len(a)
-    if n == 0:
-        return pd.Series(np.zeros(0, dtype=np.int64))
-    try:
-        A = np.stack(a.to_numpy()).astype(np.int64)
-        B = np.stack(b.to_numpy()).astype(np.int64)
-        return pd.Series((A * B).sum(axis=1))
-    except (ValueError, TypeError):
-        # Ragged / NULL-bearing batch (hostile corpora): row-wise with
-        # the fold's NULL-on-mismatch semantics.
-        out = []
-        for x, y in zip(a, b):
-            if x is None or y is None or len(x) != len(y):
-                out.append(None)
-            else:
-                xa = np.asarray(x, dtype=np.int64)
-                ya = np.asarray(y, dtype=np.int64)
-                out.append(int((xa * ya).sum()))
-        return pd.Series(out, dtype="object")
 
 
 def embedding_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -160,61 +114,102 @@ def quantize_error_certificate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def knn_cosine_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact top-K retrieval over the QUANTIZED vectors: integer dot
-    products and integer self-norms, one float division at the end.
-    Same broadcast-queries / scan-candidates / per-query-window shape as
-    knn_cosine_bruteforce (similarity.py:103) — but every scored pair
-    moves int8 payloads and integer MACs, the 4x-traffic / SIMD win that
-    makes brute-force rescoring viable as the re-rank stage of a 100 TB
-    ANN pipeline. All-integer similarity numerators mean the oracle
-    comparison is exact by construction, not modulo float folding.
-    Zero-norm vectors are filtered on both probe sides (absmax > 0 on
-    the raw column, equivalent to the oracle's qq > 0): an all-zero
-    embedding would yield NaN similarity, where Spark's NaN ordering
-    (greatest) and DuckDB's diverge."""
+    products and integer self-norms, one float division at the end —
+    the re-rank stage of a 100 TB ANN pipeline, which moves int8
+    payloads and scores with integer MACs. The query side (vec_id <
+    N_QUERIES) is collected and broadcast; candidates stream through
+    Arrow batches, one exact int64 matmul per batch.
+
+    Integer dots and self-norms are exact in any summation order, and
+    the single float chain dot / (sqrt(na) * sqrt(nb)) is the same IEEE
+    op sequence as the oracle's, so raw_sim is bit-identical. Per batch
+    only the top TOP_K rows per query (by the final ordering: raw_sim
+    desc, neighbor_id asc) are emitted — the global top-K is a subset
+    of the union of batch top-Ks — and ROUNDING AND RANKING ARE
+    DELEGATED TO SPARK. Zero-norm vectors are dropped on both sides
+    (the oracle's qq > 0): an all-zero embedding would yield NaN
+    similarity, where Spark's NaN ordering (greatest) and DuckDB's
+    diverge."""
+    import pyspark.sql.types as T
+
     e = load_table(spark, sf_dir, "embeddings")
-    # Zero-norm guard BEFORE quantizing, on the raw column: qq > 0 iff
-    # absmax(embedding) > 0 (any nonzero absmax quantizes its witness
-    # element to +/-127, so qq >= 127^2). Filtering on qq itself inlined
-    # the whole quantize+fold chain into the predicate and cost 3x the
-    # query (r5 bench regression: 1.96 -> 6.1 s at sf0.1).
-    e = e.where(F.array_max(F.transform("embedding", F.abs)) > 0)
-    qz = _with_quantized(e).select(
-        "vec_id", "qvec", _int_dot(F.col("qvec"), F.col("qvec")).alias("qq")
-    )
-    queries = qz.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("qvec").alias("qa"),
-        F.col("qq").alias("na"),
-    )
-    cands = qz.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("qvec").alias("qb"),
-        F.col("qq").alias("nb"),
-    )
-    raw = (
-        F.col("dot").cast("double")
-        / (F.sqrt(F.col("na").cast("double")) * F.sqrt(F.col("nb").cast("double")))
-    )
-    scored = (
-        F.broadcast(queries)
-        .crossJoin(cands)
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            # Arrow-batched exact integer dot on the Q x N pair path
-            # (r12): value-identical to the fold, ~interpreted-HOF-free.
-            _int_dot_batch(F.col("qa"), F.col("qb")).alias("dot"),
-            "na",
-            "nb",
+    qz = _with_quantized(e).select("vec_id", "qvec")
+    q_rows = qz.where(F.col("vec_id") < N_QUERIES).collect()
+    if not q_rows:
+        # Empty query collect <=> empty embeddings table (queries are
+        # corpus rows); np.stack([]) raises driver-side (r10
+        # empty-corpus probe). Schema matches the final select (rnk is
+        # row_number's INT).
+        return spark.createDataFrame(
+            [],
+            T.StructType(
+                [
+                    T.StructField("query_id", T.LongType()),
+                    T.StructField("neighbor_id", T.LongType()),
+                    T.StructField("int_dot", T.LongType()),
+                    T.StructField("sim_q8", T.DoubleType()),
+                    T.StructField("rnk", T.IntegerType()),
+                ]
+            ),
         )
-        .select("query_id", "neighbor_id", "dot", raw.alias("raw_sim"))
+    q_ids = np.array([r["vec_id"] for r in q_rows], dtype=np.int64)
+    Q = np.stack([np.asarray(r["qvec"], dtype=np.int64) for r in q_rows])
+    na = (Q * Q).sum(axis=1)
+    keep = na > 0  # zero-norm guard: the oracle's qq > 0
+    q_ids, Q, na = q_ids[keep], Q[keep], na[keep]
+    sq_na = np.sqrt(na.astype(np.float64))
+    bc = spark.sparkContext.broadcast((q_ids, Q, sq_na))
+
+    out_schema = T.StructType(
+        [
+            T.StructField("query_id", T.LongType()),
+            T.StructField("neighbor_id", T.LongType()),
+            T.StructField("dot", T.LongType()),
+            T.StructField("raw_sim", T.DoubleType()),
+        ]
     )
+
+    def score_batches(batches):
+        q_ids_, Q_, sq_na_ = bc.value
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            B = np.stack(
+                [np.asarray(v, dtype=np.int64) for v in pdf["qvec"]]
+            )
+            nbr = pdf["vec_id"].to_numpy(dtype=np.int64)
+            nb = (B * B).sum(axis=1)
+            ok = nb > 0
+            B, nbr, nb = B[ok], nbr[ok], nb[ok]
+            if not len(nbr):
+                continue
+            dots = Q_ @ B.T  # exact int64 — order-free
+            sims = dots.astype(np.float64) / (
+                sq_na_[:, None] * np.sqrt(nb.astype(np.float64))[None, :]
+            )
+            for qi in range(len(q_ids_)):
+                qid = int(q_ids_[qi])
+                mask = nbr != qid
+                s, d, nn = sims[qi][mask], dots[qi][mask], nbr[mask]
+                if not len(nn):
+                    continue
+                # batch top-K by the FINAL ordering (sim desc, id asc)
+                order = np.lexsort((nn, -s))[:TOP_K]
+                yield pd.DataFrame(
+                    {
+                        "query_id": qid,
+                        "neighbor_id": nn[order],
+                        "dot": d[order],
+                        "raw_sim": s[order],
+                    }
+                )
+
+    cand = qz.mapInPandas(score_batches, out_schema)
     w = Window.partitionBy("query_id").orderBy(
         F.desc("raw_sim"), F.asc("neighbor_id")
     )
     return (
-        scored.withColumn("rnk", F.row_number().over(w))
+        cand.withColumn("rnk", F.row_number().over(w))
         .where(F.col("rnk") <= TOP_K)
         .select(
             "query_id",
@@ -309,121 +304,6 @@ ORACLES: dict[str, str] = {
 }
 
 
-def knn_cosine_quantized_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch-matmul twin of knn_cosine_quantized, BIT-IDENTICAL output —
-    the execution shape the 100 TB re-rank stage actually runs (the
-    Column-expression query pays the interpreted F.aggregate fold per
-    element: 11.5 s at 100K vectors; this form streams Arrow batches
-    through one int64 numpy matmul per batch: the SIMD win int8
-    quantization exists to unlock).
-
-    Parity design (the ivf_assignments_fast playbook, but STRONGER here
-    because the scores are integers): dots and self-norms are exact
-    int64 — no accumulation-order hazard at all, matmul == fold by the
-    associativity of integer addition. The single float chain
-    dot / (sqrt(na) * sqrt(nb)) is one divide, two sqrts, one multiply —
-    the same IEEE op sequence as the Column expression, so raw_sim is
-    bit-identical. Per batch only the top TOP_K rows per query (by the
-    final ordering: raw_sim desc, neighbor_id asc) are emitted — the
-    global top-K is a subset of the union of batch top-Ks — and ROUNDING
-    AND RANKING ARE DELEGATED TO SPARK via the same F.round/row_number
-    expressions as the exact query. Registered under the SAME oracle SQL
-    as knn_cosine_quantized (identical output, identical gate)."""
-    import numpy as np
-    import pyspark.sql.types as T
-
-    e = load_table(spark, sf_dir, "embeddings")
-    qz = _with_quantized(e).select("vec_id", "qvec")
-    q_rows = qz.where(F.col("vec_id") < N_QUERIES).collect()
-    if not q_rows:
-        # Empty query collect <=> empty embeddings table (queries are
-        # corpus rows); np.stack([]) raises driver-side (r10
-        # empty-corpus probe). Schema matches the final select (rnk is
-        # row_number's INT).
-        return spark.createDataFrame(
-            [],
-            T.StructType(
-                [
-                    T.StructField("query_id", T.LongType()),
-                    T.StructField("neighbor_id", T.LongType()),
-                    T.StructField("int_dot", T.LongType()),
-                    T.StructField("sim_q8", T.DoubleType()),
-                    T.StructField("rnk", T.IntegerType()),
-                ]
-            ),
-        )
-    q_ids = np.array([r["vec_id"] for r in q_rows], dtype=np.int64)
-    Q = np.stack([np.asarray(r["qvec"], dtype=np.int64) for r in q_rows])
-    na = (Q * Q).sum(axis=1)
-    keep = na > 0  # zero-norm guard, mirrored from the exact query
-    q_ids, Q, na = q_ids[keep], Q[keep], na[keep]
-    sq_na = np.sqrt(na.astype(np.float64))
-    bc = spark.sparkContext.broadcast((q_ids, Q, sq_na))
-
-    out_schema = T.StructType(
-        [
-            T.StructField("query_id", T.LongType()),
-            T.StructField("neighbor_id", T.LongType()),
-            T.StructField("dot", T.LongType()),
-            T.StructField("raw_sim", T.DoubleType()),
-        ]
-    )
-
-    def score_batches(batches):
-        import pandas as pd
-
-        q_ids_, Q_, sq_na_ = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            B = np.stack(
-                [np.asarray(v, dtype=np.int64) for v in pdf["qvec"]]
-            )
-            nbr = pdf["vec_id"].to_numpy(dtype=np.int64)
-            nb = (B * B).sum(axis=1)
-            ok = nb > 0
-            B, nbr, nb = B[ok], nbr[ok], nb[ok]
-            if not len(nbr):
-                continue
-            dots = Q_ @ B.T  # exact int64 — order-free
-            sims = dots.astype(np.float64) / (
-                sq_na_[:, None] * np.sqrt(nb.astype(np.float64))[None, :]
-            )
-            for qi in range(len(q_ids_)):
-                qid = int(q_ids_[qi])
-                mask = nbr != qid
-                s, d, nn = sims[qi][mask], dots[qi][mask], nbr[mask]
-                if not len(nn):
-                    continue
-                # batch top-K by the FINAL ordering (sim desc, id asc)
-                order = np.lexsort((nn, -s))[:TOP_K]
-                yield pd.DataFrame(
-                    {
-                        "query_id": qid,
-                        "neighbor_id": nn[order],
-                        "dot": d[order],
-                        "raw_sim": s[order],
-                    }
-                )
-
-    cand = qz.mapInPandas(score_batches, out_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("raw_sim"), F.asc("neighbor_id")
-    )
-    return (
-        cand.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= TOP_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("dot").alias("int_dot"),
-            F.round("raw_sim", 4).alias("sim_q8"),
-            "rnk",
-        )
-    )
-
-
-QUERIES["knn_cosine_quantized_fast"] = knn_cosine_quantized_fast
-# Identical output by construction -> the fast twin shares the exact
-# query's oracle verbatim (same gate, same hash).
+# A second registered name for the same query: callers address queries by name.
+QUERIES["knn_cosine_quantized_fast"] = knn_cosine_quantized
 ORACLES["knn_cosine_quantized_fast"] = ORACLES["knn_cosine_quantized"]

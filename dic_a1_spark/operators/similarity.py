@@ -111,10 +111,62 @@ def _dot_seq_batch(v1: pd.Series, v2: pd.Series) -> pd.Series:
         return pd.Series(np.zeros(0, dtype=np.float64))
     a = np.stack(v1.to_numpy()).astype(np.float64)
     b = np.stack(v2.to_numpy()).astype(np.float64)
-    acc = np.zeros(len(a), dtype=np.float64)
-    for i in range(a.shape[1]):
-        acc += a[:, i] * b[:, i]
-    return pd.Series(acc)
+    return pd.Series(_fold_dot(a, b))
+
+
+# --- the exact-fold kernel shared by every Arrow-batch vector scorer ---
+
+
+def _fold_dot(A: np.ndarray, B: np.ndarray) -> np.ndarray:
+    """Sum over axis 1 of A * B, accumulated DIMENSION BY DIMENSION:
+    ((0 + a0*b0) + a1*b1) + ... per output element — the IEEE-754
+    operation sequence of the _dot fold and of DuckDB's
+    list_dot_product, so batch sims are hash-equal to the oracle.
+    Deliberately NOT np.dot/einsum: BLAS pairwise summation rounds
+    differently.
+
+    Axis 1 is the folded dimension and the other axes broadcast:
+    (n, D) with (n, D) gives the row-wise dots (n,); (n, D, 1) with
+    (1, D, k) gives the (n, k) dot matrix (see _fold_cosine)."""
+    shape = np.broadcast_shapes(A.shape[:1] + A.shape[2:], B.shape[:1] + B.shape[2:])
+    acc = np.zeros(shape, dtype=np.float64)
+    for i in range(A.shape[1]):
+        acc += A[:, i] * B[:, i]
+    return acc
+
+
+def _fold_cosine(V: np.ndarray, C: np.ndarray, cn: np.ndarray) -> np.ndarray:
+    """(n, k) cosine matrix of V's rows against C's rows, given C's
+    norms `cn`: fold dot / (sqrt(fold |v|^2) * cn), the _cosine_pre
+    association. A zero-norm side divides 0/0 to NaN, which
+    pandas->Arrow ships as NULL — DuckDB's division-by-zero result."""
+    vn = np.sqrt(_fold_dot(V, V))
+    return _fold_dot(V[:, :, None], C.T[None]) / (vn[:, None] * cn[None, :])
+
+
+def _fold_self_cosine(V: np.ndarray) -> np.ndarray:
+    """(m, m) cosine matrix of V's rows against each other, as
+    _fold_cosine(V, V, norms) computes it. The dot matrix's diagonal IS
+    each row's fold |v|^2 (same products, same order), so the norms
+    cost no second pass over the block."""
+    acc = _fold_dot(V[:, :, None], V.T[None])
+    nr = np.sqrt(acc.diagonal())
+    return acc / (nr[:, None] * nr[None, :])
+
+
+def _collect_side(df: DataFrame) -> tuple[np.ndarray, np.ndarray] | None:
+    """Collect a bounded (id, vector) frame — a codebook, a query set, a
+    benchmark slice — to the driver: ids ascending (so every tie breaks
+    to the lowest id) and the vectors stacked as a float64 matrix.
+    None when the frame is empty: np.stack of nothing would raise on the
+    driver at plan-build time (r10 empty-corpus probe)."""
+    rows = df.collect()
+    if not rows:
+        return None
+    ids = np.array([r[0] for r in rows], dtype=np.int64)
+    order = np.argsort(ids)
+    M = np.stack([np.asarray(rows[i][1], dtype=np.float64) for i in order])
+    return ids[order], M
 
 
 def _norm(a: Column) -> Column:
@@ -439,11 +491,11 @@ def embedding_neardup_blocked(
     survives UNREGISTERED as embedding_neardup_blocked_exact, still
     pinned pair-for-pair against this query in tests/test_similarity.py
     (the certification the _fast twin always carried, now pointed at
-    the exact form explicitly). Output is bit-identical by the pinned
-    parity devices: dimension-fold sims, margin emission with Spark-side
-    round(.,4) >= threshold, NULL/NaN rows excluded identically in both
-    engines. Recall vs the all-pairs ground truth stays pinned >= 0.9
-    in tests/test_similarity.py."""
+    the exact form explicitly). Output is bit-identical by construction:
+    shared fold-kernel sims (_fold_cosine), margin emission with
+    Spark-side round(.,4) >= threshold, NULL/NaN rows excluded
+    identically in both engines. Recall vs the all-pairs ground truth
+    stays pinned >= 0.9 in tests/test_similarity.py."""
     return embedding_neardup_blocked_fast(
         spark, sf_dir, ivf_k=ivf_k, nprobe=nprobe, threshold=threshold
     )
@@ -542,18 +594,12 @@ def _round4_ge_boundary(threshold: float) -> float:
     return float(np.nextafter(d, np.inf))
 
 
-def _neardup_fast_asg(
-    e: DataFrame, *, ivf_k: int, nprobe: int
-) -> DataFrame:
-    """(centroid_id, vec_id, embedding): batch IVF multi-assignment,
-    BIT-EQUAL to _ivf_multi_assign's (round(sim,4) DESC, centroid_id
-    ASC) top-nprobe — the certified ivf_assignments_fast parity device
-    at multi-probe:
+def _batch_assign(e: DataFrame, *, ivf_k: int, nprobe: int) -> DataFrame:
+    """(vec_id, centroid_id, sim, embedding): the batch IVF assigner,
+    BIT-EQUAL to the JVM forms' (round(sim,4) DESC, centroid_id ASC)
+    top-nprobe (_ivf_multi_assign; ivf_assignments at nprobe=1):
 
-      * raw sims reproduce the exact fold's IEEE sequence (dimension-by-
-        dimension accumulation, a / (sqrt(aa) * sqrt(bb)) association —
-        deliberately NOT a BLAS matmul, whose pairwise summation rounds
-        differently);
+      * raw sims come from _fold_cosine, the exact fold's IEEE sequence;
       * the batch emits every centroid within 1e-3 of the row's
         nprobe-th-best raw sim (anything lower can never reach the
         rounded cut: round(s) <= s + 5e-5 < kth - 1e-3 + 5e-5
@@ -564,7 +610,7 @@ def _neardup_fast_asg(
         VECTOR gets exactly the lowest-id blocks in both engines and a
         zero-norm CENTROID's block is empty in both;
       * ROUNDING AND RANKING ARE DELEGATED TO SPARK: the same
-        F.round(.,4) + row_number window as the exact path picks the
+        F.round(.,4) + row_number window as the JVM form picks the
         winners from bit-identical inputs.
 
     ~nprobe+epsilon candidate rows per vector through one window — data
@@ -572,10 +618,6 @@ def _neardup_fast_asg(
     needs no corpus re-join), never per (vector, centroid)."""
     import pyspark.sql.types as T
 
-    spark = e.sparkSession
-    cent_rows = (
-        e.where(F.col("vec_id") < ivf_k).select("vec_id", "embedding").collect()
-    )
     cand_schema = T.StructType(
         [
             T.StructField("vec_id", T.LongType()),
@@ -584,65 +626,86 @@ def _neardup_fast_asg(
             T.StructField("embedding", T.ArrayType(T.FloatType())),
         ]
     )
-    if not cent_rows:
-        # Empty centroid collect <=> the embeddings table itself is
-        # empty (centroids ARE corpus rows: vec_id < ivf_k). np.stack
-        # of an empty list would raise on the DRIVER at plan-build time
-        # (r10 empty-corpus probe) — the correct assignment frame is
-        # simply empty, in the function's output column order.
-        return spark.createDataFrame([], cand_schema).select(
-            "centroid_id", "vec_id", "embedding"
+    side = _collect_side(
+        e.where(F.col("vec_id") < ivf_k).select("vec_id", "embedding")
+    )
+    if side is None:
+        # No centroids <=> the embeddings table itself is empty
+        # (centroids ARE corpus rows: vec_id < ivf_k).
+        cand = e.sparkSession.createDataFrame([], cand_schema)
+    else:
+        cent_ids, C = side
+        bc = e.sparkSession.sparkContext.broadcast(
+            (cent_ids, C, np.sqrt(_fold_dot(C, C)))
         )
-    cent_ids = np.array([r["vec_id"] for r in cent_rows], dtype=np.int64)
-    C = np.stack([np.asarray(r["embedding"], dtype=np.float64) for r in cent_rows])
-    order = np.argsort(cent_ids)
-    cent_ids, C = cent_ids[order], C[order]
-    cn = np.zeros(len(C), dtype=np.float64)
-    for i in range(C.shape[1]):  # sequential fold, the _norm order
-        cn += C[:, i] * C[:, i]
-    cn = np.sqrt(cn)
-    bc = spark.sparkContext.broadcast((cent_ids, C, cn))
-    probe = nprobe
 
-    def assign_batches(batches):
-        ids_c, c_mat, c_nrm = bc.value
-        k = len(ids_c)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            V = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            n = len(pdf)
-            vacc = np.zeros(n, dtype=np.float64)
-            acc = np.zeros((n, k), dtype=np.float64)
-            for i in range(V.shape[1]):
-                vacc += V[:, i] * V[:, i]
-                acc += V[:, i][:, None] * c_mat[:, i][None, :]
-            sims = acc / (np.sqrt(vacc)[:, None] * c_nrm[None, :])
-            if k > probe:
-                kth = -np.partition(-sims, probe - 1, axis=1)[:, probe - 1]
-                keep = sims >= (kth - 1e-3)[:, None]
-                keep[~np.isfinite(kth), :] = True
-            else:
-                keep = np.ones((n, k), dtype=bool)
-            keep |= ~np.isfinite(sims)  # ships as NULL; ranks last in both
-            rows, cols = np.nonzero(keep)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].to_numpy()[rows],
-                    "centroid_id": ids_c[cols],
-                    "raw_sim": sims[rows, cols],
-                    "embedding": [pdf["embedding"].iat[i] for i in rows],
-                }
-            )
+        def assign_batches(batches):
+            ids_c, c_mat, c_nrm = bc.value
+            for pdf in batches:
+                if len(pdf) == 0:
+                    continue
+                emb = pdf["embedding"].to_numpy()
+                sims = _fold_cosine(np.stack(emb).astype(np.float64), c_mat, c_nrm)
+                if len(ids_c) > nprobe:
+                    kth = -np.partition(-sims, nprobe - 1, axis=1)[:, nprobe - 1]
+                    keep = sims >= (kth - 1e-3)[:, None]
+                    keep[~np.isfinite(kth), :] = True
+                else:
+                    keep = np.ones(sims.shape, dtype=bool)
+                keep |= ~np.isfinite(sims)  # ships as NULL; ranks last in both
+                rows, cols = np.nonzero(keep)
+                yield pd.DataFrame(
+                    {
+                        "vec_id": pdf["vec_id"].to_numpy()[rows],
+                        "centroid_id": ids_c[cols],
+                        "raw_sim": sims[rows, cols],
+                        "embedding": emb[rows],
+                    }
+                )
 
-    cand = e.select("vec_id", "embedding").mapInPandas(assign_batches, cand_schema)
+        cand = e.select("vec_id", "embedding").mapInPandas(assign_batches, cand_schema)
     w = Window.partitionBy("vec_id").orderBy(F.desc("sim"), F.asc("centroid_id"))
     return (
         cand.withColumn("sim", F.round("raw_sim", 4))
         .withColumn("rnk", F.row_number().over(w))
         .where(F.col("rnk") <= nprobe)
-        .select("centroid_id", "vec_id", "embedding")
+        .select("vec_id", "centroid_id", "sim", "embedding")
     )
+
+
+def _block_partitions(e: DataFrame, *, ivf_k: int, nprobe: int) -> DataFrame:
+    """(centroid_id, vec_id, embedding): every vector in its top-nprobe
+    blocks, shuffled once on the block key. The repartition is numbered
+    so AQE cannot narrow the scoring stage (its cost is per pair,
+    invisible to byte stats)."""
+    asg = _batch_assign(e, ivf_k=ivf_k, nprobe=nprobe)
+    return asg.select("centroid_id", "vec_id", "embedding").repartition(
+        max(64, ivf_k // 8), "centroid_id"
+    )
+
+
+def _partition_blocks(batches):
+    """(block id, members) for each centroid block of one partition.
+    One pandas groupby per PARTITION, not one applyInPandas call per
+    block: ~1500 data-sized blocks paid ~8 ms of per-group Arrow/pandas
+    overhead each while the per-block math is microseconds. Arrow batch
+    boundaries can split a block, so the partition is materialized
+    first (bounded: ~|corpus| x nprobe / partitions rows)."""
+    pdfs = [p for p in batches if len(p)]
+    if pdfs:
+        yield from pd.concat(pdfs).groupby("centroid_id", sort=False)
+
+
+def _block_self_sims(batches):
+    """(block id, member ids ascending, S) for every block of >= 2
+    members, S the members' self-cosine matrix on the exact fold (a
+    zero-norm member's row and column are NaN)."""
+    for blk, g in _partition_blocks(batches):
+        if len(g) < 2:
+            continue
+        g = g.sort_values("vec_id")
+        V = np.stack(g["embedding"].to_numpy()).astype(np.float64)
+        yield blk, g["vec_id"].to_numpy(), _fold_self_cosine(V)
 
 
 def embedding_neardup_blocked_fast(
@@ -656,28 +719,24 @@ def embedding_neardup_blocked_fast(
     """Large-codebook IVF-blocked near-dup pairs — the 100 TB execution
     shape for semantic dedup, ORACLE-GATED since round 8.
 
-    The registered embedding_neardup_blocked scores assignment and
-    verification one pair per row (bit-exact with its DuckDB oracle, the
-    right thing at its fixed IVF_K=8). With a scale-sized codebook that
-    shape ships BOTH vectors for every (vector, centroid) and every
-    candidate pair through Arrow — measured 516 s at 100K vectors /
-    K=1500, ~77 GB of transfer for assignment alone. This variant keeps
-    the batch architecture (data shipped per vector / per block member)
-    while staying BIT-EQUAL to the SQL oracle:
+    Scoring one pair per row (embedding_neardup_blocked_exact) ships
+    BOTH vectors for every (vector, centroid) and every candidate pair
+    through Arrow — measured 516 s at 100K vectors / K=1500, ~77 GB of
+    transfer for assignment alone. This form ships data per vector /
+    per block member while staying BIT-EQUAL to the SQL oracle:
 
-      1. assignment: _neardup_fast_asg — batch dimension-fold sims,
-         margin emission, Spark-side round+window cut (the certified
-         ivf_assignments_fast device, here at multi-probe);
+      1. assignment: _batch_assign — batch fold sims, margin emission,
+         Spark-side round+window cut;
       2. block scoring: mapInPandas over centroid-partitioned rows; per
-         block ONE dimension-by-dimension accumulation produces every
-         pairwise dot/norm with the exact fold's IEEE sequence (same
-         flop count as the earlier BLAS matmul, ~2-3x slower on memory
-         traffic — the price of the driver hash gate on this entry);
-         pairs within 1e-3 of the threshold are emitted RAW and
-         Spark's F.round(.,4) >= threshold decides (a NaN sim from a
-         zero-norm member is excluded in both engines: numpy's >= drops
-         it here, pandas->Arrow would ship it as NULL anyway, and the
-         oracle's 0/0 division is NULL in DuckDB);
+         block ONE fold self-cosine matrix (_block_self_sims) gives
+         every pairwise sim with the exact fold's IEEE sequence (same
+         flop count as a BLAS matmul, ~2-3x slower on memory traffic —
+         the price of the oracle hash gate on this entry); pairs within
+         1e-3 of the threshold are emitted RAW and Spark's
+         F.round(.,4) >= threshold decides (a NaN sim from a zero-norm
+         member is excluded in both engines: numpy's >= drops it here,
+         pandas->Arrow would ship it as NULL anyway, and the oracle's
+         0/0 division is NULL in DuckDB);
       3. a pair sharing several blocks yields bit-identical raw sims in
          each, so the surviving duplicates collapse with one distinct.
 
@@ -687,11 +746,7 @@ def embedding_neardup_blocked_fast(
     import pyspark.sql.types as T
 
     e = load_table(spark, sf_dir, "embeddings")
-    asg = _neardup_fast_asg(e, ivf_k=ivf_k, nprobe=nprobe)
-    # one shuffle on the block key; numbered repartition so AQE cannot
-    # narrow the scoring stage (cost is per-pair, invisible to byte stats)
-    asg = asg.repartition(max(64, ivf_k // 8), "centroid_id")
-
+    asg = _block_partitions(e, ivf_k=ivf_k, nprobe=nprobe)
     pair_schema = T.StructType(
         [
             T.StructField("id1", T.LongType()),
@@ -702,30 +757,9 @@ def embedding_neardup_blocked_fast(
     margin = threshold - 1e-3
 
     def score_partition(batches):
-        # Per-PARTITION pandas groupby instead of per-block applyInPandas:
-        # with a data-sized codebook (~1500 blocks) the ~8 ms per-group
-        # Arrow/pandas overhead dominated the stage while each block's
-        # math is microseconds.
-        pdfs = [p for p in batches if len(p)]
-        if not pdfs:
-            return
         out = []
-        for _, g in pd.concat(pdfs).groupby("centroid_id", sort=False):
-            if len(g) < 2:
-                continue
-            g = g.sort_values("vec_id")
-            ids = g["vec_id"].to_numpy()
-            V = np.stack(g["embedding"].to_numpy()).astype(np.float64)
-            m = len(ids)
-            vacc = np.zeros(m, dtype=np.float64)
-            acc = np.zeros((m, m), dtype=np.float64)
-            for d in range(V.shape[1]):  # the exact fold's dim order
-                col = V[:, d]
-                vacc += col * col
-                acc += col[:, None] * col[None, :]
-            nr = np.sqrt(vacc)
-            S = acc / (nr[:, None] * nr[None, :])
-            i, j = np.triu_indices(m, k=1)
+        for _, ids, S in _block_self_sims(batches):
+            i, j = np.triu_indices(len(ids), k=1)
             sij = S[i, j]
             keep = sij >= margin  # NaN excluded — see docstring
             if keep.any():
@@ -752,98 +786,18 @@ def embedding_neardup_blocked_fast(
 def ivf_assignments_fast(
     spark: SparkSession, sf_dir: str, *, ivf_k: int = IVF_K
 ) -> DataFrame:
-    """Batch IVF coarse quantizer — BIT-IDENTICAL to ivf_assignments, at
-    the scale execution shape (data shipped per VECTOR, not per
-    (vector, centroid); the exact query is 25.2 s / 3.9K vecs/s at 100K
-    vectors and 516 s at K=1500).
-
-    Parity design (resolves the ADVICE.md r3 medium finding — the earlier
-    matmul form carried BLAS-vs-fold, np.round-vs-HALF_UP, and zero-norm
-    edge hazards against the shared oracle):
-      * raw sims reproduce the exact path's IEEE operation sequence —
-        dots and squared norms accumulate DIMENSION-BY-DIMENSION
-        (acc += V[:,i] * C[:,i], the _dot_seq_batch order; deliberately
-        NOT a BLAS matmul whose pairwise summation rounds differently),
-        then dot / (vn * cn) with the same association;
-      * no zero-norm clamp: a zero vector divides to NaN exactly as the
-        exact query's fold does (non-finite rows emit every centroid so
-        the Spark-side ranking below decides, identically);
-      * ROUNDING AND RANKING ARE DELEGATED TO SPARK: the batch emits
-        (vec_id, centroid_id, raw_sim) for every centroid within 1e-3 of
-        the row max (anything further can never reach the rounded max:
-        round(s) <= s + 5e-5 < mx - 9.5e-4 < mx - 5e-5 <= round(mx)),
-        and the winner is picked by the SAME F.round(.,4) + row_number
-        window expressions as the exact query. Bit-identical inputs into
-        identical expressions — parity by construction, not by hoping
-        np.round agrees with java.math.BigDecimal.
-    Cost: ~1-2 candidate rows per vector through one window shuffle —
-    O(N) rows, still never per-(vector, centroid). Pinned value-equal to
-    ivf_assignments at sf0.001/sf0.01/sf0.1 in tests/test_similarity.py
-    and registered under the same DuckDB oracle."""
-    import pyspark.sql.types as T
-
+    """Batch IVF coarse quantizer: the shared batch assigner at
+    nprobe=1, BIT-IDENTICAL to ivf_assignments at the scale execution
+    shape (data shipped per VECTOR, not per (vector, centroid); the JVM
+    form is 25.2 s / 3.9K vecs/s at 100K vectors and 516 s at K=1500).
+    At probe 1 the batch's margin cut is the row max - 1e-3, and
+    Spark's round + row_number picks the winner (see _batch_assign).
+    Pinned value-equal to ivf_assignments at sf0.001/sf0.01/sf0.1 in
+    tests/test_similarity.py and registered under the same DuckDB
+    oracle."""
     e = load_table(spark, sf_dir, "embeddings")
-    cent_rows = (
-        e.where(F.col("vec_id") < ivf_k).select("vec_id", "embedding").collect()
-    )
-    cand_schema = T.StructType(
-        [
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("centroid_id", T.LongType()),
-            T.StructField("raw_sim", T.DoubleType()),
-        ]
-    )
-    if not cent_rows:
-        # Empty collect <=> empty embeddings table (centroids are corpus
-        # rows); np.stack([]) would raise driver-side (r10 empty-corpus
-        # probe). The correct assignment table is empty.
-        return spark.createDataFrame([], cand_schema).select(
-            "vec_id",
-            "centroid_id",
-            F.col("raw_sim").alias("centroid_sim"),
-        )
-    cent_ids = np.array([r["vec_id"] for r in cent_rows], dtype=np.int64)
-    C = np.stack([np.asarray(r["embedding"], dtype=np.float64) for r in cent_rows])
-    order = np.argsort(cent_ids)  # ascending ids; ties break low in the window
-    cent_ids, C = cent_ids[order], C[order]
-    cn = np.zeros(len(C), dtype=np.float64)
-    for i in range(C.shape[1]):  # sequential fold, the _norm order
-        cn += C[:, i] * C[:, i]
-    cn = np.sqrt(cn)
-    bc = spark.sparkContext.broadcast((cent_ids, C, cn))
-
-    def assign_batches(batches):
-        ids_c, c_mat, c_nrm = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            V = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            n = len(pdf)
-            vacc = np.zeros(n, dtype=np.float64)
-            acc = np.zeros((n, len(ids_c)), dtype=np.float64)
-            for i in range(V.shape[1]):
-                vacc += V[:, i] * V[:, i]
-                acc += V[:, i][:, None] * c_mat[:, i][None, :]
-            sims = acc / (np.sqrt(vacc)[:, None] * c_nrm[None, :])
-            mx = np.max(sims, axis=1)
-            keep = sims >= (mx - 1e-3)[:, None]
-            keep[~np.isfinite(mx), :] = True  # NaN/Inf rows: Spark decides
-            rows, cols = np.nonzero(keep)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].to_numpy()[rows],
-                    "centroid_id": ids_c[cols],
-                    "raw_sim": sims[rows, cols],
-                }
-            )
-
-    cand = e.select("vec_id", "embedding").mapInPandas(assign_batches, cand_schema)
-    w = Window.partitionBy("vec_id").orderBy(F.desc("sim"), F.asc("centroid_id"))
-    return (
-        cand.select("vec_id", "centroid_id", F.round("raw_sim", 4).alias("sim"))
-        .withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") == 1)
-        .select("vec_id", "centroid_id", F.col("sim").alias("centroid_sim"))
+    return _batch_assign(e, ivf_k=ivf_k, nprobe=1).select(
+        "vec_id", "centroid_id", F.col("sim").alias("centroid_sim")
     )
 
 
@@ -878,14 +832,14 @@ def _neardup_block_component_edges(
     component (bucket = injective struct(block, local min id)).
 
     ORACLE-ALIGNED since round 8: the assignment is the bit-pinned
-    _neardup_fast_asg (Spark-side round+window cut), and the local
+    _batch_assign (Spark-side round+window cut), and the local
     adjacency decides round(sim,4) >= threshold via the EXACT decimal
     boundary (s >= _round4_ge_boundary(threshold); a NaN sim — a
     zero-norm member — is NOT adjacent in either engine: numpy NaN
     fails >=, and DuckDB's 0/0 division is NULL, which fails the
-    oracle's >= the same way) on dimension-fold sims — never
-    np.round, whose banker's rounding is the documented cross-engine
-    hazard. Block-local components therefore cover exactly the oracle's
+    oracle's >= the same way) on fold sims — never np.round, whose
+    banker's rounding is the documented cross-engine hazard.
+    Block-local components therefore cover exactly the oracle's
     verified pair edges, and cross-block connectivity flows through
     multi-probe members during label propagation.
 
@@ -899,8 +853,7 @@ def _neardup_block_component_edges(
     import pyspark.sql.types as T
 
     e = load_table(spark, sf_dir, "embeddings")
-    asg = _neardup_fast_asg(e, ivf_k=ivf_k, nprobe=nprobe)
-    asg = asg.repartition(max(64, ivf_k // 8), "centroid_id")
+    asg = _block_partitions(e, ivf_k=ivf_k, nprobe=nprobe)
     sim_floor = _round4_ge_boundary(threshold)
 
     edge_schema = T.StructType(
@@ -919,40 +872,13 @@ def _neardup_block_component_edges(
     )
 
     def comp_partition(batches):
-        # One pandas groupby per PARTITION, not one applyInPandas call
-        # per block: ~1500 data-sized blocks paid ~8 ms of per-group
-        # Arrow/pandas overhead each (12-15 s of the stage) while the
-        # per-block math is microseconds. Arrow batch boundaries can
-        # split a block, so materialize the partition first (bounded:
-        # ~|corpus| x nprobe / partitions rows).
-        pdfs = [p for p in batches if len(p)]
-        if not pdfs:
-            return
         out_doc: list[np.ndarray] = []
         out_bucket: list[dict] = []
-        for blk, g in pd.concat(pdfs).groupby("centroid_id", sort=False):
-            if len(g) < 2:
-                continue
-            g = g.sort_values("vec_id")
-            ids = g["vec_id"].to_numpy()
-            V = np.stack(g["embedding"].to_numpy()).astype(np.float64)
+        for blk, ids, S in _block_self_sims(batches):
             m = len(ids)
-            vacc = np.zeros(m, dtype=np.float64)
-            acc = np.zeros((m, m), dtype=np.float64)
-            for d in range(V.shape[1]):  # the exact fold's dim order
-                col = V[:, d]
-                vacc += col * col
-                acc += col[:, None] * col[None, :]
-            nr = np.sqrt(vacc)
-            S = acc / (nr[:, None] * nr[None, :])
-            # adjacency == oracle's round(sim,4) >= threshold, decided
-            # at the exact boundary; a NaN sim (zero-norm member) is NOT
-            # adjacent — the verification path excludes it in both
-            # engines (numpy NaN >= T is False; were it emitted,
-            # pandas->Arrow ships NaN as NULL and NULL >= T is no row,
-            # while DuckDB's 0/0 division yields NULL directly). Local
-            # components by vectorized min-label sweeps (converges
-            # within component diameter).
+            # Local components by vectorized min-label sweeps (converges
+            # within component diameter) over the adjacency decided at
+            # the exact boundary — a NaN sim is not adjacent (docstring).
             A = S >= sim_floor
             np.fill_diagonal(A, True)
             roots = np.arange(m)

@@ -13,13 +13,21 @@ One place to encode the scale-minded defaults every entry point shares:
   (the correctness oracle) and removes host-tz nondeterminism.
 - **Arrow enabled**: every pandas-UDF path (multimodal decode, vector ops
   fallbacks) gets Arrow batch transfer instead of pickled rows.
+- **Package root on the Python workers' ``PYTHONPATH``**: pandas UDFs and
+  ``mapInPandas`` closures reference module-level kernels, which the
+  workers import by name; a worker started from another directory could
+  not find ``dic_a1_spark`` otherwise.
 """
 
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
 from pyspark.sql import SparkSession
+
+#: Directory holding the ``dic_a1_spark`` package.
+PACKAGE_ROOT = str(Path(__file__).resolve().parent.parent)
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -36,6 +44,11 @@ def get_spark(
     master is configured; on a real deployment pass ``master=None`` and let
     spark-submit supply it.
     """
+    # The local JVM inherits this environment when it starts, and hands
+    # PYTHONPATH on to every Python worker it launches.
+    paths = os.environ.get("PYTHONPATH", "").split(os.pathsep)
+    if PACKAGE_ROOT not in paths:
+        os.environ["PYTHONPATH"] = os.pathsep.join([PACKAGE_ROOT, *filter(None, paths)])
     builder = (
         SparkSession.builder.appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))

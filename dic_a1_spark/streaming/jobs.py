@@ -762,9 +762,9 @@ def embdecontam_stream_flags(
     dsir/bm25_stream shape for the ANN family. The benchmark slice is
     an eval suite (thousands of vectors at production scale), so it is
     a documented bounded collect like the IVF codebooks; each
-    micro-batch then runs ONE dimension-by-dimension accumulation
-    against the broadcast matrix (the exact fold's IEEE sequence — the
-    certified _neardup_fast_asg device), no state store, no watermark.
+    micro-batch then runs ONE fold cosine matrix against the broadcast
+    benchmark (similarity._fold_cosine, the exact fold's IEEE
+    sequence), no state store, no watermark.
 
     Contract difference vs the batch query, stated: the stream twin is
     EXACT (every incoming vector scored against every benchmark
@@ -781,6 +781,12 @@ def embdecontam_stream_flags(
         EMBDECONTAM_MOD,
         EMBDECONTAM_SIM,
     )
+    from dic_a1_spark.operators.similarity import (
+        _collect_side,
+        _fold_cosine,
+        _fold_dot,
+        _round4_ge_boundary,
+    )
     from dic_a1_spark.sources.readers import load_table
 
     # LOUD size guard on the bench collect (r8 VERDICT watch item #2):
@@ -790,26 +796,16 @@ def embdecontam_stream_flags(
     # executor-side assert_true, which would fire only after the rows
     # were already headed for the driver); the +1 row distinguishes
     # "exactly cap" from "over cap".
-    bench_rows = (
+    bench = _collect_side(
         load_table(spark, sf_dir, "embeddings")
         .where((F.col("vec_id") % EMBDECONTAM_MOD) == 0)
         .select("vec_id", "embedding")
         .limit(_BENCH_COLLECT_CAP + 1)
-        .collect()
     )
-    if len(bench_rows) > _BENCH_COLLECT_CAP:
-        raise ValueError(
-            f"embdecontam_stream_flags: benchmark slice exceeds the "
-            f"documented driver-collect bound ({_BENCH_COLLECT_CAP} "
-            f"vectors) — an eval suite is thousands of items; a "
-            f"corpus-sized slice means EMBDECONTAM_MOD is misconfigured "
-            f"for this corpus"
-        )
-    if not bench_rows:
+    if bench is None:
         # Empty benchmark slice (no vec_id in the residue class):
-        # np.stack([]) would raise on the driver and kill the stream at
-        # build time. Nothing can flag against an empty suite, so the
-        # semantically correct twin is a map-only all-unflagged pass.
+        # nothing can flag against an empty suite, so the semantically
+        # correct twin is a map-only all-unflagged pass.
         return stream.where(
             (F.col("vec_id") % EMBDECONTAM_MOD) != 0
         ).select(
@@ -819,18 +815,18 @@ def embdecontam_stream_flags(
             F.lit(None).cast("long").alias("best_bench_id"),
             F.lit(None).cast("double").alias("best_sim_r"),
         )
-    bids = np.array([r["vec_id"] for r in bench_rows], dtype=np.int64)
-    B = np.stack(
-        [np.asarray(r["embedding"], dtype=np.float64) for r in bench_rows]
-    )
-    order = np.argsort(bids)  # ties in best-hit break to the LOWEST id
-    bids, B = bids[order], B[order]
-    bn = np.zeros(len(B), dtype=np.float64)
-    for i in range(B.shape[1]):  # sequential fold, the _norm order
-        bn += B[:, i] * B[:, i]
-    bn = np.sqrt(bn)
-    bc = spark.sparkContext.broadcast((bids, B, bn))
-    sim_floor_units = int(round(EMBDECONTAM_SIM * 10**4)) * 10 - 5
+    bids, B = bench  # ids ascending: best-hit ties break to the LOWEST id
+    if len(bids) > _BENCH_COLLECT_CAP:
+        raise ValueError(
+            f"embdecontam_stream_flags: benchmark slice exceeds the "
+            f"documented driver-collect bound ({_BENCH_COLLECT_CAP} "
+            f"vectors) — an eval suite is thousands of items; a "
+            f"corpus-sized slice means EMBDECONTAM_MOD is misconfigured "
+            f"for this corpus"
+        )
+    bc = spark.sparkContext.broadcast((bids, B, np.sqrt(_fold_dot(B, B))))
+    # exact decimal boundary for round(s,4) >= threshold
+    floor = _round4_ge_boundary(EMBDECONTAM_SIM)
 
     out_schema = T.StructType(
         [
@@ -843,28 +839,13 @@ def embdecontam_stream_flags(
     )
 
     def score_batches(batches):
-        from fractions import Fraction
-
         ids_b, b_mat, b_nrm = bc.value
-        # exact decimal boundary for round(s,4) >= threshold (the
-        # similarity._round4_ge_boundary rule, inlined to keep the
-        # closure import-free)
-        bound = Fraction(sim_floor_units, 10**5)
-        d = np.float64(bound)
-        floor = float(d) if Fraction(float(d)) >= bound else float(
-            np.nextafter(d, np.inf)
-        )
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             V = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
             n = len(pdf)
-            vacc = np.zeros(n, dtype=np.float64)
-            acc = np.zeros((n, len(ids_b)), dtype=np.float64)
-            for i in range(V.shape[1]):
-                vacc += V[:, i] * V[:, i]
-                acc += V[:, i][:, None] * b_mat[:, i][None, :]
-            S = acc / (np.sqrt(vacc)[:, None] * b_nrm[None, :])
+            S = _fold_cosine(V, b_mat, b_nrm)
             hits = S >= floor  # NaN (zero norms) excluded, as in batch
             n_hits = hits.sum(axis=1).astype(np.int64)
             # best hit: max sim, ties to lowest bench id (ids ascending,

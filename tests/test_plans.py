@@ -209,12 +209,15 @@ def test_ann_fast_twin_plan_shapes(spark):
       broadcast; one top-k exchange.
     - embedding_neardup_blocked_fast: block-local pandas pairs — one
       block shuffle plus the two bounded codebook feeds; NEVER an
-      all-pairs or corpus-sort stage."""
+      all-pairs or corpus-sort stage.
+    - knn_cosine_quantized: int8 batch scoring against the broadcast
+      query matrix; one top-k exchange."""
     pins = {
         "ivf_assignments_fast": 1,
         "embedding_pq_codes_fast": 0,
         "knn_cosine_pq_fast": 1,
         "embedding_neardup_blocked_fast": 3,
+        "knn_cosine_quantized": 1,
     }
     for name, pin in pins.items():
         a = _audit(spark, name)

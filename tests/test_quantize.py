@@ -55,11 +55,6 @@ def test_quantize_is_map_only(spark):
     assert "Exchange" not in plan
 
 
-def test_knn_quantized_broadcasts_queries(spark):
-    plan = formatted_plan(quantize.knn_cosine_quantized(spark, SF_CORRECT))
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
-
-
 def test_quantize_fuzz_matches_python_reference(spark):
     """Adversarial vectors (zeros, denormal-scale, float32-extreme, sign
     mixes) through the Column-expression quantizer must match a plain
@@ -102,19 +97,3 @@ def test_quantize_fuzz_matches_python_reference(spark):
         assert got[i][0] == scale, (i, got[i][0], scale)
         assert got[i][1] == want, (i, v, got[i][1], want)
         assert all(-Q_MAX - 1 <= q <= Q_MAX + 1 for q in want)
-
-
-def test_quantized_knn_fast_twin_is_bit_identical(spark):
-    """The batch-matmul twin must equal the Column-expression query
-    EXACTLY (integer dots have no accumulation-order hazard; the one
-    float chain repeats the same IEEE op sequence)."""
-    exact = sorted(
-        map(tuple, quantize.knn_cosine_quantized(spark, SF_CORRECT).collect())
-    )
-    fast = sorted(
-        map(
-            tuple,
-            quantize.knn_cosine_quantized_fast(spark, SF_CORRECT).collect(),
-        )
-    )
-    assert exact == fast

@@ -68,6 +68,16 @@ def _ensure_amplified(work_dir: str, sf_dir: str, factor: int) -> None:
     spark.stop()
 
 
+def _warm_page_cache(work_dir: str) -> None:
+    """Read every input file once, so the first timed core count does not
+    pay cold reads that the later ones skip."""
+    for f in sorted(Path(work_dir).rglob("*")):
+        if f.is_file():
+            with open(f, "rb") as fh:
+                while fh.read(1 << 24):
+                    pass
+
+
 def _child(work_dir: str) -> None:
     from pyspark.sql import functions as F
 
@@ -104,6 +114,7 @@ def main() -> None:
 
     os.makedirs(args.work_dir, exist_ok=True)
     _ensure_amplified(args.work_dir, args.sf_dir, args.factor)
+    _warm_page_cache(args.work_dir)
 
     results: dict[str, dict] = {}
     for cpus in (32, 8):
@@ -113,8 +124,10 @@ def main() -> None:
             env=env,
             capture_output=True,
             text=True,
-            check=True,
         )
+        if p.returncode != 0:
+            sys.stderr.write(p.stderr)
+            raise SystemExit(f"local[{cpus}] child failed (exit {p.returncode})")
         line = [
             ln for ln in p.stdout.splitlines() if ln.startswith("CORESCALE_CHILD ")
         ][-1]
