@@ -76,18 +76,9 @@ def chi2_scores(
     category_col: str = "category",
     text_col: str = "text",
 ) -> DataFrame:
-    """(category, word, chi2) for every non-degenerate (word, category).
-
-    Contingency cells (reference src/chiSquaredJob.py:84-93):
-      A = docs in category with word            = n
-      B = docs in other categories with word    = word_n - n
-      C = docs in category without word         = cat_n - n
-      D = everything else                       = N - A - B - C
-    The per-word total (B's ingredient) is a window sum over the already
-    (word, category)-aggregated frame; category totals and the global count
-    join back via broadcast — the Spark-native form of the reference's
-    counters.txt distributed-cache map-side join (src/chiSquaredJob.py:37-57).
-    """
+    """(category, word, chi2) for every non-degenerate (word, category) of
+    a documents frame: doc frequencies and category totals, each from its
+    own column-pruned scan, scored by ``chi2_from_counts``."""
     # NULL-category docs are excluded from the ENTIRE contingency
     # universe (the engine-side analogue of the reference's
     # malformed-record skip, src/chiSquaredJob.py field-missing guard):
@@ -98,10 +89,29 @@ def chi2_scores(
     docs = docs.where(F.col(category_col).isNotNull())
     wc = doc_frequency(docs, id_col, category_col, text_col)
     cat = category_totals(docs, category_col)
+    return chi2_from_counts(wc, cat, category_col)
+
+
+def chi2_from_counts(
+    wc: DataFrame, cat: DataFrame, category_col: str = "category"
+) -> DataFrame:
+    """(category, word, chi2) from doc frequencies ``wc`` (word,
+    category_col, n) and category totals ``cat`` (category_col, cat_n) —
+    the contingency cells and score shared by every chi-square caller.
+
+    Contingency cells (reference src/chiSquaredJob.py:84-93):
+      A = docs in category with word            = n
+      B = docs in other categories with word    = word_n - n
+      C = docs in category without word         = cat_n - n
+      D = everything else                       = N - A - B - C
+    The per-word total (B's ingredient) is a window sum over the already
+    (word, category)-aggregated frame; category totals and the global count
+    join back via broadcast — the Spark-native form of the reference's
+    counters.txt distributed-cache map-side join (src/chiSquaredJob.py:37-57).
+    Tables with a zero margin are dropped, as the reference skips them.
+    """
     # Derive the global total from the category totals (sum of 22-ish rows)
-    # instead of a third scan of docs — at 100 TB that's one fewer pass
-    # over the corpus; the remaining two scans are column-pruned to
-    # (text, category) and (category) respectively.
+    # instead of another scan of the corpus.
     total = cat.agg(F.sum("cat_n").alias("n_total"))
 
     word_win = Window.partitionBy("word")
@@ -138,13 +148,15 @@ def chi2_topk(
     category, chi2 descending. The reference relies on Python's stable sort
     for ties (src/chiSquaredJob.py:105); here the tiebreak is explicit
     (word ascending) so results are deterministic on any cluster."""
-    rank_win = Window.partitionBy("category").orderBy(
-        F.desc("chi2"), F.asc("word")
-    )
-    return (
-        chi2_scores(docs, id_col, category_col, text_col)
-        .withColumn("rank", F.row_number().over(rank_win))
-        .where(F.col("rank") <= k)
+    return top_k_per_category(chi2_scores(docs, id_col, category_col, text_col), k)
+
+
+def top_k_per_category(chi: DataFrame, k: int = CHI2_TOP_K) -> DataFrame:
+    """(category, word, chi2, rank) for the k best-scoring words of each
+    category of a (category, word, chi2) frame; ties break word ascending."""
+    rank_win = Window.partitionBy("category").orderBy(F.desc("chi2"), F.asc("word"))
+    return chi.withColumn("rank", F.row_number().over(rank_win)).where(
+        F.col("rank") <= k
     )
 
 

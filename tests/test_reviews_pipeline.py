@@ -164,3 +164,145 @@ def test_full_reference_stopword_file_parity(spark, tmp_path):
     crow = counters.collect()
     assert crow[0]["n_total"] == exp_total
     assert {r["category"]: r["cat_n"] for r in crow} == exp_cats
+
+
+def _run_files(spark, reviews_path, stopwords_path, out_dir):
+    from dic_a1_spark.operators.reviews import run_pipeline
+
+    lines = run_pipeline(spark, reviews_path, str(out_dir), stopwords_path=stopwords_path)
+    files = {name: (out_dir / name).read_bytes() for name in ("chisq_output.txt", "counters.txt")}
+    return lines, files
+
+
+def test_output_files_byte_stable_across_shuffle_partitions(spark, fixture_paths, tmp_path):
+    """Aggregates are deterministic: the written files do not depend on
+    how many partitions the shuffles use."""
+    reviews_path, stopwords_path, _ = fixture_paths
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        runs = []
+        for parts in ("1", "8"):
+            spark.conf.set("spark.sql.shuffle.partitions", parts)
+            runs.append(_run_files(spark, reviews_path, stopwords_path, tmp_path / parts))
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", before)
+    assert runs[0] == runs[1]
+
+
+def _sql_executions(spark) -> dict[int, str]:
+    """{execution id: final physical plan text} from Spark's SQL status
+    store, after the listener bus has delivered every event. The store is
+    a private API (the same one perfbench reads); this is the one place
+    that touches it, so a Spark upgrade that changes it fails here."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    it = store.executionsList().iterator()
+    out = {}
+    while it.hasNext():
+        e = it.next()
+        out[e.executionId()] = e.physicalPlanDescription()
+    return out
+
+
+def test_run_pipeline_is_one_scan_one_action(spark, fixture_paths, tmp_path):
+    """One run_pipeline call runs one SQL execution whose final plan scans
+    the reviews JSON once, and it leaves no persisted RDD behind."""
+    import re
+
+    from dic_a1_spark.operators.reviews import run_pipeline
+
+    reviews_path, stopwords_path, _ = fixture_paths
+    persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
+    seen = _sql_executions(spark)
+    run_pipeline(spark, reviews_path, str(tmp_path / "out"), stopwords_path=stopwords_path)
+    new = {i: plan for i, plan in _sql_executions(spark).items() if i not in seen}
+
+    assert len(new) == 1, f"expected one SQL execution, got {len(new)}"
+    (plan,) = new.values()
+    # The executed tree comes before AQE's "Initial Plan"; the node details
+    # after both trees give each scan's location.
+    executed = plan.split("== Initial Plan ==")[0]
+    locations = [
+        re.search(rf"^\({node}\) Scan text.*?^Location: (.*?)$", plan, flags=re.M | re.S)[1]
+        for node in re.findall(r"Scan text\s+\((\d+)\)", executed)
+    ]
+    assert sum(reviews_path in loc for loc in locations) == 1, locations
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
+
+
+def _assert_pipeline_matches_reference(spark, lines, tmp_path, stopwords=None):
+    """run_pipeline's two files against tests/reference_impl.pipeline, with
+    the stopword file ``stopwords`` or (None) the built-in list."""
+    import ast
+
+    from dic_a1_spark.config import STOPWORDS
+    from dic_a1_spark.sources.sinks import parse_counters_line
+
+    reviews = tmp_path / "reviews.json"
+    reviews.write_text("".join(line + "\n" for line in lines))
+    stopwords_path = None
+    if stopwords is not None:
+        sw = tmp_path / "stopwords.txt"
+        sw.write_text("\n".join(stopwords) + "\n")
+        stopwords_path = str(sw)
+    expected, exp_total, exp_cats = reference_impl.pipeline(
+        lines, set(STOPWORDS if stopwords is None else stopwords), k=75
+    )
+
+    got_lines, files = _run_files(spark, str(reviews), stopwords_path, tmp_path / "out")
+    assert files["chisq_output.txt"].decode().splitlines() == got_lines
+    got = {}
+    for line in got_lines[:-1]:
+        cat, scores = line.split("\t", 1)
+        got[cat] = ast.literal_eval(scores)
+    assert set(got) == set(expected)
+    for cat, scores in expected.items():
+        assert set(got[cat]) == set(scores), cat
+        for w, chi in scores.items():
+            assert math.isclose(got[cat][w], chi, rel_tol=1e-12), (cat, w)
+    assert ast.literal_eval(got_lines[-1]) == sorted({w for s in expected.values() for w in s})
+    assert parse_counters_line(files["counters.txt"].decode()) == (exp_total, exp_cats)
+    return got_lines
+
+
+def _review(cat, text):
+    return json.dumps({"category": cat, "reviewText": text})
+
+
+def test_wordless_reviews_count_but_add_no_words(spark, tmp_path):
+    """Reviews whose text is empty, punctuation or only stopwords count in
+    their category and in N but add no words; a category made only of such
+    reviews has a counter and no output line."""
+    rng = random.Random(3)
+    lines = []
+    for i in range(60):
+        cat = CATS[i % 3]
+        lines.append(_review(cat, " ".join(rng.sample(VOCAB, rng.randint(1, 5)))))
+        if i % 4 == 0:
+            lines.append(_review(cat, ["", "the and", "  ...!! 42 ", "A of THE"][i % 16 // 4]))
+    lines += [_review("Quiet", ""), _review("Quiet", "the a of"), json.dumps({"category": "Quiet"})]
+    got = _assert_pipeline_matches_reference(spark, lines, tmp_path, stopwords=STOP)
+    assert not any(line.startswith("Quiet\t") for line in got)
+
+
+def test_single_category_corpus_is_all_degenerate(spark, tmp_path):
+    lines = [_review("Book", " ".join(VOCAB[i % 5 : i % 5 + 3])) for i in range(20)]
+    assert _assert_pipeline_matches_reference(spark, lines, tmp_path, stopwords=STOP) == ["[]"]
+
+
+def test_all_malformed_file(spark, tmp_path):
+    lines = ['{"category": "Book", "reviewText": broken', "not json", "[1, 2]"]
+    assert _assert_pipeline_matches_reference(spark, lines, tmp_path, stopwords=STOP) == ["[]"]
+    assert (tmp_path / "out" / "counters.txt").read_text() == "0 {}\n"
+
+
+def test_builtin_stopword_list(spark, tmp_path):
+    """stopwords_path=None filters with the built-in list and keeps the
+    per-review markers, including those of stopword-only reviews."""
+    rng = random.Random(5)
+    lines = [
+        _review(CATS[i % 3], " ".join(rng.sample(VOCAB, 3) + ["the", "and", "of"]))
+        for i in range(45)
+    ]
+    lines += [_review("Book", "the and of"), _review("Electronic", "")]
+    _assert_pipeline_matches_reference(spark, lines, tmp_path, stopwords=None)
