@@ -533,18 +533,20 @@ def cte_chain(
     plus every column no later layer consumes (the fold outputs)."""
     import re
 
-    patterns = {
-        c: re.compile(rf"(?<![A-Za-z0-9_]){re.escape(c)}(?![A-Za-z0-9_])")
-        for layer in layers
-        for c in layer
-    }
+    # An expression references column c iff one of its maximal
+    # [A-Za-z0-9_]+ runs equals c (no identifier character on either
+    # side), which holds for every c of that alphabet — so one token scan
+    # per layer replaces a search per (column, layer).
+    word = re.compile(r"[A-Za-z0-9_]+")
+    columns = {c for layer in layers for c in layer}
+    assert all(word.fullmatch(c) for c in columns), "column names must be [A-Za-z0-9_]+"
     # last_ref[c]: highest layer index whose exprs reference c; a defined
     # column no layer references is a fold OUTPUT — kept to the end.
     last_ref: dict[str, int] = {}
     for k, layer in enumerate(layers):
-        for c, pat in patterns.items():
-            if any(pat.search(e) for e in layer.values()):
-                last_ref[c] = k
+        tokens = {t for e in layer.values() for t in word.findall(e)}
+        for c in columns & tokens:
+            last_ref[c] = k
     frags = []
     cur = base
     defined: dict[str, int] = {}  # col -> defining layer

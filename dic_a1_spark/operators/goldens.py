@@ -39,6 +39,7 @@ from pyspark.sql.types import (
 )
 
 from dic_a1_spark.config import CHI2_TOP_K
+from dic_a1_spark.operators.chisq import top_k_per_category
 
 #: Devset total review count, recovered as described in the module docstring.
 DEVSET_TOTAL = 78829
@@ -163,12 +164,7 @@ def golden_topk(
     """(category, word, chi2, rank): top-k per category under exact math,
     deterministic tiebreak (word asc) — reference src/chiSquaredJob.py:105
     relies on Python's stable sort instead."""
-    rank_win = Window.partitionBy("category").orderBy(F.desc("chi2"), F.asc("word"))
-    return (
-        chi2_exact(hist, total, cat_counts)
-        .withColumn("rank", F.row_number().over(rank_win))
-        .where(F.col("rank") <= k)
-    )
+    return top_k_per_category(chi2_exact(hist, total, cat_counts), k)
 
 
 # --- driver surface (r10, VERDICT item 6) ---------------------------------

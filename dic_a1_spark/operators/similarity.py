@@ -675,12 +675,20 @@ def _batch_assign(e: DataFrame, *, ivf_k: int, nprobe: int) -> DataFrame:
 
 def _block_partitions(e: DataFrame, *, ivf_k: int, nprobe: int) -> DataFrame:
     """(centroid_id, vec_id, embedding): every vector in its top-nprobe
-    blocks, shuffled once on the block key. The repartition is numbered
-    so AQE cannot narrow the scoring stage (its cost is per pair,
-    invisible to byte stats)."""
+    blocks, hash-shuffled once on the block key into
+    min(ivf_k, max(cores, ivf_k // 8)) partitions, cores being the
+    session's default parallelism. The scoring stage that follows runs
+    one Python task per partition, and a Python task costs a fixed
+    slice of worker CPU whether or not any block hashed into it: so no
+    more partitions than blocks, at least one per core, and ~8 blocks a
+    partition at scale (187 at 1,500 blocks). The count is explicit, so
+    AQE cannot narrow the stage (its cost is per pair, invisible to byte
+    stats); hash partitioning keeps every block whole in one partition,
+    so the count changes no result."""
     asg = _batch_assign(e, ivf_k=ivf_k, nprobe=nprobe)
+    cores = e.sparkSession.sparkContext.defaultParallelism
     return asg.select("centroid_id", "vec_id", "embedding").repartition(
-        max(64, ivf_k // 8), "centroid_id"
+        min(ivf_k, max(cores, ivf_k // 8)), "centroid_id"
     )
 
 
@@ -947,14 +955,16 @@ def embedding_neardup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     # count(*) — saves one corpus action per invocation (r9).
     n = table_rowcount(sf_dir, "embeddings")
     k = max(IVF_K, min(n, n * NEARDUP_NPROBE // 200, 1500))
-    # Edges come out of the scoring stage in its (wide, per-block)
-    # partitioning; squeeze to core-count partitions before the persist —
-    # three consumers below each scan the cached frame, and task-launch
-    # overhead on ~200 near-empty partitions was a measurable share of
-    # the iteration loop.
+    # One partition per core for every frame of the label loop: the
+    # edges and the contracted graph hold a few rows per vector, every
+    # round scans them, and each extra task is launch cost with nothing
+    # to compute. Edges leave the scoring stage in its per-block
+    # partitioning; spread them over the cores before the persist —
+    # three consumers below scan the cached frame.
+    cores = spark.sparkContext.defaultParallelism
     edges = (
         _neardup_block_component_edges(spark, sf_dir, ivf_k=k)
-        .repartition(32)
+        .repartition(cores)
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
 
@@ -999,10 +1009,17 @@ def embedding_neardup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 8 rounds — the slow tail is scattered 1-2-bucket updates, not one
     # long pointer chain — while its extra groupBy+join slowed every
     # round. Rejected by measurement.)
+    # symx unions three shuffle outputs (sym's two halves and the
+    # self-loops), so uncoalesced it would hold three times the shuffle
+    # partition count and every round would scan it in that many tasks.
     buckets = edges.select("bucket").distinct()
-    symx = sym.unionByName(
-        buckets.select(F.col("bucket").alias("src"), F.col("bucket").alias("dst"))
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    symx = (
+        sym.unionByName(
+            buckets.select(F.col("bucket").alias("src"), F.col("bucket").alias("dst"))
+        )
+        .coalesce(cores)
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
     labels = buckets.select(
         "bucket", F.col("bucket.root").alias("label")
     ).localCheckpoint()

@@ -3,6 +3,7 @@ from __future__ import annotations
 import pytest
 
 from dic_a1_spark.operators import similarity
+from dic_a1_spark.sources.readers import load_table
 from tests.conftest import SF_CORRECT, SF_SMOKE
 from tests.oracle_utils import compare
 
@@ -12,6 +13,32 @@ def test_similarity_oracle(spark, name):
     compare(
         spark, similarity.ORACLES[name], similarity.QUERIES[name], SF_CORRECT, name
     )
+
+
+def test_block_stage_partitions_sized_to_blocks_and_cores(spark):
+    """The block scoring stage runs one Python task per partition, so its
+    repartition holds no more partitions than blocks at the test shape
+    (8 blocks) and keeps ~8 blocks per partition at the 1,500-block scale
+    shape. Read from the plan: no job beyond the centroid collect."""
+    sc = spark.sparkContext
+    e = load_table(spark, SF_SMOKE, "embeddings")
+    group = "block-partitions-pin"
+    sc.setJobGroup(group, group)
+    try:
+        counts = {}
+        for ivf_k in (8, 1500):
+            plan = similarity._block_partitions(
+                e, ivf_k=ivf_k, nprobe=3
+            )._jdf.queryExecution().optimizedPlan()
+            assert plan.nodeName() == "RepartitionByExpression"
+            counts[ivf_k] = plan.numPartitions()
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert counts[8] <= 8
+    assert counts[8] == min(8, sc.defaultParallelism)
+    assert counts[1500] == 187
+    assert len(jobs) == 2  # one centroid collect per call
 
 
 def test_ivf_recall_vs_bruteforce(spark):

@@ -17,6 +17,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from dic_a1_spark.functions.xxh64_sql import (
+    cte_chain,
     py_to_signed,
     py_xxh64_bytes,
     py_xxh64_int,
@@ -116,3 +117,29 @@ def test_nondefault_seeds_roundtrip(seed):
     con = duckdb.connect()
     h = con.sql(f"SELECT {xxh64_str_sql(repr('seeded input'), seed)}").fetchone()[0]
     assert h == py_to_signed(py_xxh64_bytes(b"seeded input", seed))
+
+
+def test_cte_chain_liveness_respects_word_boundaries():
+    """A defined column stays in the chain exactly until the last layer
+    whose expressions name it, as a whole word: `xh1`, `h1_k` and `h10`
+    never keep `h1` alive. Columns no layer reads (`o1`, `t`) are the
+    outputs and reach the final CTE."""
+    layers = [
+        {"h1": "a + 1", "h10": "a + 10"},
+        {"xh1": "h1 * 2", "h1_k": "h1 * 3", "o1": "h1 - 1"},
+        {"s": "xh1 + h1_k + h10"},
+        {"t": "s * 2"},
+    ]
+    frag, last = cte_chain("base", layers, "c", ["id", "a"])
+    assert last == "c3"
+    assert frag == (
+        ",\nc0 AS MATERIALIZED (SELECT id, a, a + 1 AS h1, a + 10 AS h10 FROM base)"
+        ",\nc1 AS MATERIALIZED (SELECT id, a, h10, h1 * 2 AS xh1, h1 * 3 AS h1_k,"
+        " h1 - 1 AS o1 FROM c0)"
+        ",\nc2 AS MATERIALIZED (SELECT id, a, o1, xh1 + h1_k + h10 AS s FROM c1)"
+        ",\nc3 AS MATERIALIZED (SELECT id, a, o1, s * 2 AS t FROM c2)"
+    )
+    con = duckdb.connect()
+    rel = con.sql(f"WITH base AS (SELECT 7 AS id, 5 AS a){frag} SELECT * FROM {last}")
+    assert rel.columns == ["id", "a", "o1", "t"]
+    assert rel.fetchall() == [(7, 5, 5, 90)]
