@@ -243,7 +243,8 @@ def min_sig_batch(transforms):
     int64 base values; per-doc minima come from one minimum.reduceat per
     transform. PURE INTEGER arithmetic throughout, so the result is
     bit-identical to the interpreted array_min(transform(hs, ...)) folds
-    it replaces by construction: the transforms are wraparound uint64 /
+    it replaces (kept as the test reference in tests/reference_impl.py)
+    by construction: the transforms are wraparound uint64 /
     bounded int64 ops stated identically in both forms (no float
     association to pin), and min over int64 is order-free. Exists
     because Spark higher-order functions are CodegenFallback:
@@ -339,29 +340,6 @@ def _minhash_transforms():
     ]
 
 
-def _minhash_signatures_fold(hashed_shingles: DataFrame) -> DataFrame:
-    """The interpreted 16-fold form of minhash_signatures — UNREGISTERED
-    parity twin kept for the bit-equality pin in tests/test_dedup.py
-    (the Arrow packer must match it exactly on every corpus).
-
-    SQL-text lambdas, NOT F.transform(col, python_lambda): with multiple
-    Python-lambda HOFs in one projection, PySpark 4.1 cross-wires the
-    lambda variables (h0 silently returns another column's hash, and the
-    wiring varies run to run). SQL-parsed lambdas scope their variables
-    correctly. Regression-pinned by test_minhash_signatures_deterministic."""
-    hashes = [
-        F.expr(f"array_min(transform(hs, h -> xxhash64({i}, h)))").alias(f"h{i}")
-        for i in range(MINHASH_HASHES)
-    ]
-    return (
-        hashed_shingles.select("doc_id", *hashes)
-        .select(
-            "doc_id",
-            F.array(*[f"h{i}" for i in range(MINHASH_HASHES)]).alias("sig"),
-        )
-    )
-
-
 def minhash_signatures(
     docs: DataFrame,
     shingle_arrays: DataFrame | None = None,
@@ -380,9 +358,9 @@ def minhash_signatures(
     string concats + string hashes per shingle meant string allocation
     dominated the whole LSH pipeline (56.6s of the 250K-doc signature
     pass). The 16 per-hash minima run as ONE Arrow pass over the bound
-    hs column (min_sig_batch — bit-identical integer arithmetic; the
-    interpreted fold twin survives as _minhash_signatures_fold under a
-    pinned equality test, r12 guide §4.2)."""
+    hs column (min_sig_batch — bit-identical integer arithmetic, r12
+    guide §4.2; tests/reference_impl.py keeps the interpreted fold form
+    as the equality reference)."""
     if hashed_shingles is None:
         hashed_shingles = _with_hashed_shingles(docs, shingle_arrays)
     return hashed_shingles.select(

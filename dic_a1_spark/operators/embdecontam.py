@@ -54,6 +54,7 @@ from dic_a1_spark.operators.similarity import (
     IVF_K,
     NEARDUP_NPROBE,
     _block_partitions,
+    _data_sized_k,
     _fold_cosine,
     _fold_dot,
     _partition_blocks,
@@ -73,12 +74,6 @@ EMBDECONTAM_MOD = 97
 
 def _is_bench(col: F.Column) -> F.Column:
     return (col % EMBDECONTAM_MOD) == 0
-
-
-def _data_sized_k(n: int) -> int:
-    """The similarity.py codebook sizing (target ~200 resident vectors
-    per block after multi-probe, floor IVF_K, 1500 cap)."""
-    return max(IVF_K, min(n, n * NEARDUP_NPROBE // 200, 1500))
 
 
 def embdecontam_flagged(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -101,25 +101,6 @@ def _affine_transform(a: int, b: int, m: int):
     return t
 
 
-def _md5_minhash_signatures_fold(hashed_shingles: DataFrame) -> DataFrame:
-    """The interpreted 16-fold form — UNREGISTERED parity twin kept for
-    the bit-equality pin in tests/test_lsh.py (the Arrow packer must
-    match it exactly on every corpus)."""
-    hashes = [
-        F.expr(f"array_min(transform(hs, h -> ({_A[i]}L * h + {_B[i]}L) % {_M}L))").alias(
-            f"h{i}"
-        )
-        for i in range(MINHASH_HASHES)
-    ]
-    return (
-        hashed_shingles.select("doc_id", *hashes)
-        .select(
-            "doc_id",
-            F.array(*[f"h{i}" for i in range(MINHASH_HASHES)]).alias("sig"),
-        )
-    )
-
-
 def _md5_minhash_signatures(hashed_shingles: DataFrame) -> DataFrame:
     """(doc_id, sig: array<bigint>) — MINHASH_HASHES min-hashes of the
     md5-affine family, computed MAP-ONLY over the per-doc base array (no
@@ -127,9 +108,9 @@ def _md5_minhash_signatures(hashed_shingles: DataFrame) -> DataFrame:
     a bound column, so the signature pass never re-runs the md5
     transform (the expression-inlining trap, SCALING.md §text). The 16
     per-hash minima run as ONE Arrow pass (dedup.min_sig_batch —
-    bit-identical integer arithmetic; the interpreted fold twin survives
-    as _md5_minhash_signatures_fold under a pinned equality test, r12
-    guide §4.2)."""
+    bit-identical integer arithmetic, r12 guide §4.2; tests/
+    reference_impl.py keeps the interpreted fold form as the equality
+    reference)."""
     from dic_a1_spark.operators.dedup import min_sig_batch
 
     transforms = [

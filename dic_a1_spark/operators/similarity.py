@@ -36,58 +36,18 @@ IVF_NPROBE = 2
 EMBED_DIM = 64
 
 
-def _dot_fold(a: Column, b: Column) -> Column:
-    """Sequential fold dot-product over double-cast elements — the
-    length-generic form. Higher-order functions are CodegenFallback
+def _dot(a: Column, b: Column) -> Column:
+    """Sequential fold dot-product over double-cast elements:
+    ((0 + x0*y0) + x1*y1) + ..., the operation sequence of DuckDB's
+    list_dot_product. Higher-order functions are CodegenFallback
     (interpreted), so this costs ~6 us per 64-dim pair; per-PAIR hot
-    paths use the Arrow batch twin (_dot_seq_batch) or, for short fixed
-    widths, the unrolled hybrid (dim= below)."""
+    paths use the Arrow batch twin (_dot_seq_batch) or the fold kernel
+    (_fold_dot) instead."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
-
-
-def _dot_fixed(a: Column, b: Column, dim: int) -> Column:
-    """Unrolled fixed-width dot: lit(0.0) + a1*b1 + a2*b2 + ... with
-    left-associated addition — per element the EXACT IEEE-754 operation
-    sequence of the _dot_fold accumulate ((0 + x0*y0) + x1*y1) + ..., so
-    results are BIT-IDENTICAL (verified: 0 differing bit patterns over
-    100K sf0.1 pairs), and the whole chain lives inside whole-stage
-    codegen — no interpreted lambda per element, no Python boundary
-    (guide §4.1). Callers must guard size(a) == size(b) == dim:
-    element_at past the end throws under ANSI.
-
-    r12 measurement note — WHY ONLY SHORT WIDTHS USE THIS: the unroll
-    costs ~8 Catalyst nodes per term, and optimizer rule sweeps are
-    linear in plan nodes, so a 64-wide unroll added 0.5-2.3 s of
-    per-query PLANNING (measured: ivf_assignments executedPlan 0.51 s
-    -> 2.8 s; ml_kmeans_clusters 4.1 s -> 11.8 s across its 4 round
-    plans) while saving only ~2.5 us/pair at the executor — a net loss
-    at any realistic pair volume per plan. At dim<=8 the tree is ~50
-    nodes and the unroll is a pure win (embedding_pq_codes isolated
-    median 5.97 s -> 3.10 s, the N x M x K assignment stage)."""
-    acc: Column = F.lit(0.0)
-    for i in range(1, dim + 1):
-        acc = acc + (
-            F.element_at(a, i).cast("double") * F.element_at(b, i).cast("double")
-        )
-    return acc
-
-
-def _dot(a: Column, b: Column, dim: int | None = None) -> Column:
-    """Sequential-order dot product. With `dim` (opt-in, short widths
-    only — see _dot_fixed): unrolled codegen when both sides are exactly
-    `dim` wide, interpreted fold otherwise (the branch predicate makes
-    the hybrid total: NULL or odd-length arrays fall through to the fold
-    and produce the value they always produced). Without `dim`: the
-    length-generic interpreted fold, unchanged since r2."""
-    if dim is None:
-        return _dot_fold(a, b)
-    return F.when(
-        (F.size(a) == dim) & (F.size(b) == dim), _dot_fixed(a, b, dim)
-    ).otherwise(_dot_fold(a, b))
 
 
 # DoubleType() instance, not the "double" DDL string: the string form is
@@ -211,8 +171,8 @@ def _cosine_pre(a: Column, b: Column, na: Column, nb: Column) -> Column:
     note: a 64-wide unrolled JVM dot was measured here and REJECTED —
     faster at the executor (~2.0 s vs 4.6 s over 2M pairs) but its
     ~520-node tree adds 0.5-2.3 s of Catalyst planning per query, a net
-    loss for every registered caller; _dot_fixed docstring has the
-    numbers.)"""
+    loss for every registered caller: optimizer rule sweeps are linear
+    in plan nodes.)"""
     return _null_div(_dot_seq_batch(a, b), na * nb)
 
 
@@ -296,8 +256,7 @@ def ivf_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
     # default NULLS LAST ranked it; the id tiebreak negates the INTEGER
     # id, never the double, so +-0.0 sims keep their window ordering).
     # The K-way centroid fan-out collapses map-side before the exchange
-    # and the window's sort disappears (r12, guide §2.3; see
-    # pq._with_codes for the measured twin of this rewrite).
+    # and the window's sort disappears (r12, guide §2.3).
     return (
         scored.groupBy("vec_id")
         .agg(
@@ -416,158 +375,13 @@ def embedding_neardup_pairs(
 # corpora would run the same plan at 0.9.
 NEARDUP_SIM = 0.4
 NEARDUP_NPROBE = 3
-# Sub-bucket factor for the within-block pair join: with few centroids the
-# block key alone gives at most IVF_K-way parallelism for the (expensive)
-# pair scoring; salting multiplies the key space so every core scores.
-NEARDUP_SALTS = 8
 
 
-def _ivf_multi_assign(e: DataFrame, nprobe: int, ivf_k: int = IVF_K) -> DataFrame:
-    """(vec_id, centroid_id, cids, embedding, nrm) for the top-`nprobe`
-    centroids per vector. Centroids broadcast; the embedding AND its
-    precomputed L2 norm ride along so the blocked self-join below needs no
-    extra id->vector join and scores each candidate pair with a single dot
-    product (the standard IVF replicate-by-list trade: ~nprobe x vector
-    bytes). `cids` is the vector's FULL sorted assignment set — the pair
-    join uses it to keep each pair only in its lowest shared block, so no
-    post-join distinct is needed. The collect_list window runs on the same
-    vec_id partitioning as the rank window: no extra exchange."""
-    cent = e.where(F.col("vec_id") < ivf_k).select(
-        F.col("vec_id").alias("centroid_id"),
-        F.col("embedding").alias("cv"),
-        _norm(F.col("embedding")).alias("cn"),
-    )
-    scored = F.broadcast(cent).crossJoin(
-        e.select(
-            "vec_id",
-            F.col("embedding").alias("v"),
-            _norm(F.col("embedding")).alias("vn"),
-        )
-    ).select(
-        "vec_id",
-        "centroid_id",
-        "v",
-        "vn",
-        F.round(
-            _cosine_pre(F.col("v"), F.col("cv"), F.col("vn"), F.col("cn")),
-            4,
-        ).alias("sim"),
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.desc("sim"), F.asc("centroid_id"))
-    wv = Window.partitionBy("vec_id")
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= nprobe)
-        .withColumn("cids", F.array_sort(F.collect_list("centroid_id").over(wv)))
-        .select(
-            "vec_id",
-            "centroid_id",
-            "cids",
-            F.col("v").alias("embedding"),
-            F.col("vn").alias("nrm"),
-        )
-    )
-
-
-def embedding_neardup_blocked(
-    spark: SparkSession,
-    sf_dir: str,
-    *,
-    ivf_k: int = IVF_K,
-    nprobe: int = NEARDUP_NPROBE,
-    threshold: float = NEARDUP_SIM,
-) -> DataFrame:
-    """Scale-safe semantic dedup: IVF-blocked near-duplicate pairs at the
-    fixed IVF_K codebook the oracle states.
-
-    r12: now executes through the SAME block-local batch scorer as the
-    data-sized-codebook twin (embedding_neardup_blocked_fast) — the
-    guide-§8 shape that ships each vector to its blocks ONCE instead of
-    shipping both vectors for every candidate pair through the Arrow
-    boundary. The per-pair join form this replaces shipped ~2 x 64
-    floats x ~4.5M joined rows per run (measured: the single most
-    expensive bench query, 10-27 s at sf0.1 with GC-driven variance vs
-    ~1.5 s for the batch twin); its JVM-expression implementation
-    survives UNREGISTERED as embedding_neardup_blocked_exact, still
-    pinned pair-for-pair against this query in tests/test_similarity.py
-    (the certification the _fast twin always carried, now pointed at
-    the exact form explicitly). Output is bit-identical by construction:
-    shared fold-kernel sims (_fold_cosine), margin emission with
-    Spark-side round(.,4) >= threshold, NULL/NaN rows excluded
-    identically in both engines. Recall vs the all-pairs ground truth
-    stays pinned >= 0.9 in tests/test_similarity.py."""
-    return embedding_neardup_blocked_fast(
-        spark, sf_dir, ivf_k=ivf_k, nprobe=nprobe, threshold=threshold
-    )
-
-
-def embedding_neardup_blocked_exact(
-    spark: SparkSession,
-    sf_dir: str,
-    *,
-    ivf_k: int = IVF_K,
-    nprobe: int = NEARDUP_NPROBE,
-    threshold: float = NEARDUP_SIM,
-) -> DataFrame:
-    """TEST-ONLY certification twin: the pair-per-row JVM-expression form
-    of the blocked near-dup query (every candidate pair scored by one
-    _cosine_pre expression after an equi-join on the block key). NOT
-    registered since r12 — the registered query runs the block-local
-    batch scorer (see embedding_neardup_blocked) — but kept as the
-    independent implementation the parity pin in tests/test_similarity.py
-    compares against, exactly as embedding_neardup_pairs stays as the
-    unregistered all-pairs ground truth for the recall pin.
-
-    Pairs are enumerated ONLY within shared centroid blocks (equi-join on
-    centroid_id), then verified with exact cosine >= threshold. A pair
-    sharing several blocks is kept only in its LOWEST shared block
-    (checked map-side against the carried assignment sets) — exactly-once
-    output with no post-join distinct shuffle."""
-    e = load_table(spark, sf_dir, "embeddings")
-    asg = _ivf_multi_assign(e, nprobe, ivf_k=ivf_k)
-    # Deterministic bucket salt: side B lands in exactly one of
-    # NEARDUP_SALTS sub-buckets (hash of its id — a stable fact column),
-    # side A replicates across all of them, so every (id1, id2) pair still
-    # meets exactly once but the join key space is IVF_K x NEARDUP_SALTS
-    # instead of IVF_K — without this, 8 centroid blocks cap the scoring
-    # stage at 8 parallel tasks no matter the cluster size.
-    a = asg.select(
-        "centroid_id", F.col("vec_id").alias("id1"), F.col("cids").alias("cids1"),
-        F.col("embedding").alias("v1"), F.col("nrm").alias("n1"),
-    ).withColumn(
-        "bkt", F.explode(F.sequence(F.lit(0), F.lit(NEARDUP_SALTS - 1)))
-    )
-    b = asg.select(
-        "centroid_id", F.col("vec_id").alias("id2"), F.col("cids").alias("cids2"),
-        F.col("embedding").alias("v2"), F.col("nrm").alias("n2"),
-    ).withColumn(
-        "bkt", F.pmod(F.xxhash64("id2"), F.lit(NEARDUP_SALTS)).cast("int")
-    )
-    # Numbered repartition on the join key: the salted shuffle is only a
-    # few MB, so AQE would coalesce it to ONE partition — correct for
-    # shuffle bytes, wrong for a stage whose cost is per-PAIR scoring
-    # (output rows >> input rows). An explicit numbered repartition is
-    # exempt from AQE coalescing and keeps the scoring stage wide.
-    a = a.repartition(64, "centroid_id", "bkt")
-    b = b.repartition(64, "centroid_id", "bkt")
-    return (
-        a.join(b, ["centroid_id", "bkt"])
-        .where(F.col("id1") < F.col("id2"))
-        # lowest-shared-block dedup: this (pair, block) row survives only
-        # if the current block is min(cids1 ∩ cids2) — each pair scored
-        # and emitted exactly once, no distinct
-        .where(
-            F.col("centroid_id")
-            == F.array_min(F.array_intersect(F.col("cids1"), F.col("cids2")))
-        )
-        .select(
-            "id1", "id2",
-            F.round(
-                _cosine_pre(F.col("v1"), F.col("v2"), F.col("n1"), F.col("n2")), 4
-            ).alias("sim"),
-        )
-        .where(F.col("sim") >= threshold)
-    )
+def _data_sized_k(n: int) -> int:
+    """Codebook size for an n-vector corpus: ~200 resident vectors per
+    block after multi-probe, floor IVF_K, capped at n and at the
+    1500-row driver-side collect bound."""
+    return max(IVF_K, min(n, n * NEARDUP_NPROBE // 200, 1500))
 
 
 def _round4_ge_boundary(threshold: float) -> float:
@@ -596,8 +410,8 @@ def _round4_ge_boundary(threshold: float) -> float:
 
 def _batch_assign(e: DataFrame, *, ivf_k: int, nprobe: int) -> DataFrame:
     """(vec_id, centroid_id, sim, embedding): the batch IVF assigner,
-    BIT-EQUAL to the JVM forms' (round(sim,4) DESC, centroid_id ASC)
-    top-nprobe (_ivf_multi_assign; ivf_assignments at nprobe=1):
+    BIT-EQUAL to the (round(sim,4) DESC, centroid_id ASC) top-nprobe cut
+    the oracles state (ivf_assignments' at nprobe=1):
 
       * raw sims come from _fold_cosine, the exact fold's IEEE sequence;
       * the batch emits every centroid within 1e-3 of the row's
@@ -610,7 +424,7 @@ def _batch_assign(e: DataFrame, *, ivf_k: int, nprobe: int) -> DataFrame:
         VECTOR gets exactly the lowest-id blocks in both engines and a
         zero-norm CENTROID's block is empty in both;
       * ROUNDING AND RANKING ARE DELEGATED TO SPARK: the same
-        F.round(.,4) + row_number window as the JVM form picks the
+        F.round(.,4) + row_number window as ivf_assignments picks the
         winners from bit-identical inputs.
 
     ~nprobe+epsilon candidate rows per vector through one window — data
@@ -716,22 +530,25 @@ def _block_self_sims(batches):
         yield blk, g["vec_id"].to_numpy(), _fold_self_cosine(V)
 
 
-def embedding_neardup_blocked_fast(
+def embedding_neardup_blocked(
     spark: SparkSession,
     sf_dir: str,
     *,
-    ivf_k: int,
+    ivf_k: int = IVF_K,
     nprobe: int = NEARDUP_NPROBE,
     threshold: float = NEARDUP_SIM,
 ) -> DataFrame:
-    """Large-codebook IVF-blocked near-dup pairs — the 100 TB execution
-    shape for semantic dedup, ORACLE-GATED since round 8.
+    """Scale-safe semantic dedup: IVF-blocked near-duplicate pairs, each
+    vector in its top-nprobe centroid blocks (multi-probe soft
+    assignment), pairs scored only within shared blocks — join fan-out
+    bounded by the largest block, never N^2. The registered entry runs
+    the fixed IVF_K codebook the oracle states;
+    embedding_neardup_blocked_fast sizes ivf_k from the data.
 
-    Scoring one pair per row (embedding_neardup_blocked_exact) ships
-    BOTH vectors for every (vector, centroid) and every candidate pair
-    through Arrow — measured 516 s at 100K vectors / K=1500, ~77 GB of
-    transfer for assignment alone. This form ships data per vector /
-    per block member while staying BIT-EQUAL to the SQL oracle:
+    Data ships per vector / per block member, never per candidate pair
+    (a pair-per-row join ships BOTH vectors for every candidate pair
+    through Arrow — measured 516 s at 100K vectors / K=1500), while
+    staying BIT-EQUAL to the SQL oracle:
 
       1. assignment: _batch_assign — batch fold sims, margin emission,
          Spark-side round+window cut;
@@ -748,9 +565,8 @@ def embedding_neardup_blocked_fast(
       3. a pair sharing several blocks yields bit-identical raw sims in
          each, so the surviving duplicates collapse with one distinct.
 
-    The oracle restates the pipeline with the codebook size computed
-    from count(*) (the same max/min/floor-div arithmetic as
-    embedding_neardup_blocked_fast_query)."""
+    Recall vs the all-pairs ground truth (embedding_neardup_pairs) is
+    pinned >= 0.9 in tests/test_similarity.py."""
     import pyspark.sql.types as T
 
     e = load_table(spark, sf_dir, "embeddings")
@@ -810,20 +626,15 @@ def ivf_assignments_fast(
 
 
 def embedding_neardup_blocked_fast_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registered form of the batch blocked near-dup: the codebook is
-    SIZED FROM THE DATA exactly as tools/scale_bench.py sizes it
-    (target ~200 resident vectors per block after multi-probe, floor
-    IVF_K, driver-side codebook capped at 1500 rows — the documented
-    collect bound). HASH-GATED since round 8: the oracle restates the
+    """Registered form of the blocked near-dup with the codebook SIZED
+    FROM THE DATA (_data_sized_k). HASH-GATED since round 8: the oracle restates the
     same greatest/least/floor-div codebook arithmetic from count(*),
     and the pipeline's decisions are bit-pinned (see
-    embedding_neardup_blocked_fast)."""
-    e = load_table(spark, sf_dir, "embeddings")
+    embedding_neardup_blocked)."""
     # Footer-metadata count, byte-equal to e.count() and the oracle's
     # count(*) — saves one corpus action per invocation (r9).
-    n = table_rowcount(sf_dir, "embeddings")
-    k = max(IVF_K, min(n, n * NEARDUP_NPROBE // 200, 1500))
-    return embedding_neardup_blocked_fast(spark, sf_dir, ivf_k=k)
+    k = _data_sized_k(table_rowcount(sf_dir, "embeddings"))
+    return embedding_neardup_blocked(spark, sf_dir, ivf_k=k)
 
 
 def _neardup_block_component_edges(
@@ -1251,16 +1062,6 @@ ORACLES: dict[str, str] = {
 # ranking, ascending-id ties), so it shares the same oracle and gets the
 # full hash gate rather than rows-only.
 ORACLES["ivf_assignments_fast"] = ORACLES["ivf_assignments"]
-
-# Ground-truth oracle for the TEST-ONLY all-pairs form (not registered).
-NEARDUP_EXACT_ORACLE = f"""
-    SELECT a.vec_id AS id1, b.vec_id AS id2,
-           round({_COS_12}, 4) AS sim
-    FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-    WHERE a.vec_id < 300 AND b.vec_id < 300
-      AND round({_COS_12}, 4) >= 0.9
-"""
-
 
 # --- round-8: oracles for the previously rows-only fast/groups entries ---
 # The fast pair path and the groups path are now bit-pinned against SQL

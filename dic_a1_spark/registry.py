@@ -21,6 +21,11 @@ from pyspark.sql import DataFrame, SparkSession
 _MODULES = (
     "dic_a1_spark.operators.similarity",
     "dic_a1_spark.operators.pq",
+    (
+        "dic_a1_spark.operators.lsh",
+        ("dedup_minhash_md5_groups", "dedup_simhash_md5_groups"),
+    ),
+    ("dic_a1_spark.operators.provenance", ("source_overlap_matrix",)),
     "dic_a1_spark.operators.quantize",
     "dic_a1_spark.operators.embdecontam",
     "dic_a1_spark.operators.lexical",

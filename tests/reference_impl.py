@@ -2,11 +2,20 @@
 SEMANTICS (tokenize -> per-review dedup -> stopword filter -> doc frequency
 -> chi-square -> top-k), written from the spec in SURVEY.md §2 for use as a
 test oracle. Deliberately structured nothing like either the reference or
-the Spark engine: single-threaded dict folding over parsed lines."""
+the Spark engine: single-threaded dict folding over parsed lines.
+
+Also holds the interpreted Spark-expression forms of the MinHash
+signatures, the references the Arrow signature packer is pinned to."""
 
 from __future__ import annotations
 
 import json
+
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+
+from dic_a1_spark.operators.dedup import MINHASH_HASHES
+from dic_a1_spark.operators.lsh import _A, _B, _M
 
 PUNCT = '()[]{}.!?,;:+=-_"~#@&*%€$§/\\1234567890\t' + "'"
 _TABLE = {ord(ch): " " for ch in PUNCT}
@@ -56,3 +65,47 @@ def pipeline(lines: list[str], stopwords: set[str], k: int):
         pairs.sort(key=lambda t: (-t[1], t[0]))
         out[cat] = dict(pairs[:k])
     return out, total, cat_counts
+
+
+# --- MinHash signature references -----------------------------------------
+# The interpreted 16-fold forms the Arrow min-signature packer
+# (dedup.min_sig_batch) replaced: Spark expressions, kept as the
+# bit-equality references of test_dedup and test_lsh, whose hostile
+# arrays (empty, NULL, [0], int64 extremes) no oracle reaches.
+
+def _minhash_signatures_fold(hashed_shingles: DataFrame) -> DataFrame:
+    """The interpreted 16-fold form of dedup.minhash_signatures.
+
+    SQL-text lambdas, NOT F.transform(col, python_lambda): with multiple
+    Python-lambda HOFs in one projection, PySpark 4.1 cross-wires the
+    lambda variables (h0 silently returns another column's hash, and the
+    wiring varies run to run). SQL-parsed lambdas scope their variables
+    correctly. Regression-pinned by test_minhash_signatures_deterministic."""
+    hashes = [
+        F.expr(f"array_min(transform(hs, h -> xxhash64({i}, h)))").alias(f"h{i}")
+        for i in range(MINHASH_HASHES)
+    ]
+    return (
+        hashed_shingles.select("doc_id", *hashes)
+        .select(
+            "doc_id",
+            F.array(*[f"h{i}" for i in range(MINHASH_HASHES)]).alias("sig"),
+        )
+    )
+
+
+def _md5_minhash_signatures_fold(hashed_shingles: DataFrame) -> DataFrame:
+    """The interpreted 16-fold form of lsh._md5_minhash_signatures."""
+    hashes = [
+        F.expr(f"array_min(transform(hs, h -> ({_A[i]}L * h + {_B[i]}L) % {_M}L))").alias(
+            f"h{i}"
+        )
+        for i in range(MINHASH_HASHES)
+    ]
+    return (
+        hashed_shingles.select("doc_id", *hashes)
+        .select(
+            "doc_id",
+            F.array(*[f"h{i}" for i in range(MINHASH_HASHES)]).alias("sig"),
+        )
+    )

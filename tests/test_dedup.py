@@ -5,6 +5,7 @@ from pyspark.sql import functions as F
 import pytest
 
 from dic_a1_spark.operators import dedup
+from tests import reference_impl
 from tests.conftest import SF_CORRECT, SF_SMOKE
 from tests.oracle_utils import compare
 
@@ -205,7 +206,7 @@ def test_minhash_sig_batch_matches_fold_form(spark):
     docs = spark.read.parquet(f"{SF_CORRECT}/documents.parquet")
     hs = dedup._with_hashed_shingles(docs)
     pack = {r["doc_id"]: tuple(r["sig"]) for r in dedup.minhash_signatures(docs).collect()}
-    fold = {r["doc_id"]: tuple(r["sig"]) for r in dedup._minhash_signatures_fold(hs).collect()}
+    fold = {r["doc_id"]: tuple(r["sig"]) for r in reference_impl._minhash_signatures_fold(hs).collect()}
     assert pack == fold
 
     schema = T.StructType(
@@ -226,5 +227,5 @@ def test_minhash_sig_batch_matches_fold_form(spark):
     )
     sig = dedup.min_sig_batch(dedup._minhash_transforms())
     got = {r["doc_id"]: r["sig"] for r in hostile.select("doc_id", sig("hs").alias("sig")).collect()}
-    exp = {r["doc_id"]: r["sig"] for r in dedup._minhash_signatures_fold(hostile).collect()}
+    exp = {r["doc_id"]: r["sig"] for r in reference_impl._minhash_signatures_fold(hostile).collect()}
     assert got == exp

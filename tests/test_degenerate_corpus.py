@@ -197,13 +197,47 @@ _QUERIES, _ORACLES = _registry()
 _SWEEP_FULL = sorted(n for n in _QUERIES if not n.startswith("goldens_"))
 
 
+# Past hostile-corpus incidents: query -> the corpus tags whose shape
+# exposed it. Each runs on those corpora on every default run, whatever
+# the rotation below assigns it.
+_INCIDENTS: dict[str, tuple[str, ...]] = {
+    # r9 zero-norm ANSI throw (degen's zero vectors); r10 empty-corpus
+    # probe: np.stack over an empty centroid collect.
+    "embedding_neardup_blocked": ("degen", "empty"),
+    "embedding_neardup_groups": ("degen", "empty"),
+    # r10 empty-corpus probe: np.stack over an empty codebook collect.
+    "embdecontam_flagged": ("empty",),
+    # r10 empty-corpus probe: hll rollup sum() NULL where count(*) is 0.
+    "events_approx_stats": ("empty",),
+    # r10: KMeans.fit refuses an empty dataset (empty), and k > n and
+    # k < 2 (onerow).
+    "ml_kmeans_clusters": ("empty", "onerow"),
+    # r10 empty-corpus probe: the dsir stats oracle fabricated a 1-row
+    # NULL panel from a bare scalar aggregate.
+    "dsir_selected": ("empty",),
+    # r10 merge exhaustion: a pair census that empties before BPE_ROUNDS
+    # wiped the vocabulary — from round one on an empty corpus, within a
+    # round or two on a one-document one.
+    "bpe_segmented_vocab": ("empty", "onerow"),
+    # degen's identical-length source: variance 0 -> z-score / sqrt(0).
+    "quality_outlier_zscore": ("degen",),
+    # Collects its codebook on the driver: the empty and short/sparse
+    # codebook shapes (r10 empty and one-row probes) that crashed the
+    # batch PQ twins.
+    "pq_recon_certificate": ("empty", "onerow"),
+}
+# Pins added after the rotation was fixed stay out of it, so adding a
+# pin never moves another query's rotation slot.
+_PIN_ONLY = {"pq_recon_certificate"}
+
+
 def _representative(names: list[str]) -> list[str]:
     """Deterministic per-family subset: for every family prefix (the
     name's first '_'-separated token, e.g. dedup/embedding/events) keep
     the alphabetically-first query AND the first `_fast` twin if the
     family has one (the driver-side collected-statistics twins are where
     the r10 empty-corpus probe found its np.stack crashes), plus every
-    query a past hostile-corpus incident implicated."""
+    incident query not in _PIN_ONLY."""
     by_family: dict[str, str] = {}
     by_family_fast: dict[str, str] = {}
     for n in names:
@@ -212,20 +246,7 @@ def _representative(names: list[str]) -> list[str]:
         if n.endswith("_fast"):
             by_family_fast.setdefault(fam, n)
     picked = set(by_family.values()) | set(by_family_fast.values())
-    # Past incident queries (r9 zero-norm ANSI throw, r10 empty-corpus
-    # probe: np.stack crashes, KMeans/vocabulary refusals, hll NULL-vs-0
-    # rollup, dsir stats 1-row fabrication).
-    incidents = {
-        "embedding_neardup_blocked",
-        "embedding_neardup_groups",
-        "embdecontam_flagged",
-        "events_approx_stats",
-        "ml_kmeans_clusters",
-        "dsir_selected",
-        "bpe_segmented_vocab",
-        "quality_outlier_zscore",
-    }
-    picked |= incidents & set(names)
+    picked |= (set(_INCIDENTS) - _PIN_ONLY) & set(names)
     return sorted(picked)
 
 
@@ -249,9 +270,12 @@ _CORPUS_TAGS = [
 
 
 def _sweep_for(tag: str) -> list[str]:
+    """The rotation slice for `tag` plus the incident queries pinned to
+    it (the full registry under SPARK_GRAFT_HOSTILE=1)."""
     if _HOSTILE_FULL:
         return _SWEEP_FULL
-    return _REPR[_CORPUS_TAGS.index(tag) % 4 :: 4]
+    pinned = {n for n, tags in _INCIDENTS.items() if tag in tags}
+    return sorted(set(_REPR[_CORPUS_TAGS.index(tag) % 4 :: 4]) | pinned)
 
 
 @pytest.mark.parametrize("name", _sweep_for("degen"))

@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from dic_a1_spark.operators import dedup, lsh
+from tests import reference_impl
 from tests.conftest import SF_CORRECT, SF_SMOKE
 from tests.oracle_utils import compare
 
@@ -220,5 +221,5 @@ def test_md5_minhash_sig_batch_matches_fold_form(spark):
     arrs = lsh._with_shingle_arrays(docs)
     hs = lsh._md5_hashed_shingles(arrs)
     pack = {r["doc_id"]: tuple(r["sig"]) for r in lsh._md5_minhash_signatures(hs).collect()}
-    fold = {r["doc_id"]: tuple(r["sig"]) for r in lsh._md5_minhash_signatures_fold(hs).collect()}
+    fold = {r["doc_id"]: tuple(r["sig"]) for r in reference_impl._md5_minhash_signatures_fold(hs).collect()}
     assert pack == fold

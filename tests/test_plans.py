@@ -196,26 +196,30 @@ def test_vocab_probe_is_broadcast(spark):
 
 
 def test_ann_fast_twin_plan_shapes(spark):
-    """The production ANN `_fast` twins exist ONLY for their plan shape
-    (the oracle-gated siblings pay sequential-fold exactness): exact
+    """The production ANN batch paths exist for their plan shape: exact
     exchange pins so a refactor that adds a corpus-wide sort or
-    de-broadcasts the codebook fails here, not in a 100 TB run.
+    de-broadcasts the codebook fails here, not in a 100 TB run. Each
+    `_fast` alias is pinned with its base name.
 
     - ivf_assignments_fast: matmul assignment is map-only; the single
       exchange is the codebook's bounded aggregation feed.
-    - embedding_pq_codes_fast: pure map against the broadcast collected
-      codebooks — ZERO exchanges.
-    - knn_cosine_pq_fast: ADC shortlist + re-rank with the query row
+    - embedding_pq_codes[_fast], pq_recon_certificate: pure map against
+      the broadcast collected codebooks — ZERO exchanges.
+    - knn_cosine_pq[_fast]: ADC shortlist + re-rank with the query row
       broadcast; one top-k exchange.
-    - embedding_neardup_blocked_fast: block-local pandas pairs — one
+    - embedding_neardup_blocked[_fast]: block-local pandas pairs — one
       block shuffle plus the two bounded codebook feeds; NEVER an
       all-pairs or corpus-sort stage.
     - knn_cosine_quantized: int8 batch scoring against the broadcast
       query matrix; one top-k exchange."""
     pins = {
         "ivf_assignments_fast": 1,
+        "embedding_pq_codes": 0,
         "embedding_pq_codes_fast": 0,
+        "pq_recon_certificate": 0,
+        "knn_cosine_pq": 1,
         "knn_cosine_pq_fast": 1,
+        "embedding_neardup_blocked": 3,
         "embedding_neardup_blocked_fast": 3,
         "knn_cosine_quantized": 1,
     }
@@ -225,12 +229,12 @@ def test_ann_fast_twin_plan_shapes(spark):
             f"{name}: {a['exchanges']} exchanges vs the designed {pin} — "
             f"if intentional, update this pin and PLANS.md together"
         )
-        # every _fast scan stays pruned to (vec_id, embedding)
+        # every batch-path scan stays pruned to (vec_id, embedding)
         assert all(
             s == "struct<vec_id:bigint,embedding:array<float>>"
             for s in a["read_schemas"]
         ), (name, a["read_schemas"])
-    assert _audit(spark, "knn_cosine_pq_fast")["broadcast_join"]
+    assert _audit(spark, "knn_cosine_pq")["broadcast_join"]
 
 
 def test_multimodal_header_meta_is_map_only(spark):

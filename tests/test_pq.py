@@ -52,28 +52,3 @@ def test_pq_rerank_recall_vs_fp32(spark):
     assert len(got) == len(fp)
     recall = len(fp & got) / len(fp)
     assert recall >= 0.85, f"PQ rerank top-{TOP_K} recall {recall:.2f}"
-
-
-def test_pq_codes_fast_twin_is_bit_identical(spark):
-    """The Arrow-batched assignment must equal the Column-expression
-    query exactly (sequential-fold distances, first-minimum tiebreak)."""
-    exact = sorted(
-        map(tuple, pq.embedding_pq_codes(spark, SF_CORRECT).collect())
-    )
-    fast = sorted(
-        map(tuple, pq.embedding_pq_codes_fast(spark, SF_CORRECT).collect())
-    )
-    assert exact == fast
-
-
-def test_knn_pq_fast_twin_is_bit_identical(spark):
-    """The registered batch path must reproduce the UNREGISTERED
-    JVM-expression twin row-for-row — same shortlist (bit-equal ADC
-    sims), same exact re-rank. r13: the registered knn_cosine_pq now
-    executes the batch scorer, so the expression pipeline survives as
-    knn_cosine_pq_exact and this pin is the certification seam."""
-    exact = sorted(
-        map(tuple, pq.knn_cosine_pq_exact(spark, SF_CORRECT).collect())
-    )
-    fast = sorted(map(tuple, pq.knn_cosine_pq(spark, SF_CORRECT).collect()))
-    assert exact == fast

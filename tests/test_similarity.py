@@ -110,21 +110,16 @@ def test_ivf_assignments_fast_matches_exact(spark, sf_dir):
 
 def test_neardup_fast_registered_query_runs_with_data_sized_codebook(spark):
     """The registered fast near-dup sizes K from the corpus; at sf0.001
-    that floors to IVF_K, so its pair set must equal the exact
-    (pair-per-row JVM certification) blocked form's."""
-    slow = {
-        (r["id1"], r["id2"])
-        for r in similarity.embedding_neardup_blocked_exact(
-            spark, SF_SMOKE
-        ).collect()
-    }
-    fast = {
-        (r["id1"], r["id2"])
-        for r in similarity.QUERIES["embedding_neardup_blocked_fast"](
-            spark, SF_SMOKE
-        ).collect()
-    }
-    assert fast == slow
+    that floors to IVF_K, so its pairs and sims must equal the
+    registered fixed-K query's."""
+    fixed, sized = (
+        sorted(map(tuple, similarity.QUERIES[name](spark, SF_SMOKE).collect()))
+        for name in ("embedding_neardup_blocked", "embedding_neardup_blocked_fast")
+    )
+    assert similarity._data_sized_k(
+        spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet").count()
+    ) == similarity.IVF_K
+    assert fixed and sized == fixed
 
 
 def test_neardup_groups_cover_pairs_one_row_per_vector(spark):
@@ -143,30 +138,6 @@ def test_neardup_groups_cover_pairs_one_row_per_vector(spark):
     assert pairs, "no verified pairs at sf0.001 — vacuous"
     for r in pairs:
         assert labels[r["id1"]] == labels[r["id2"]], (r["id1"], r["id2"])
-
-
-def test_neardup_blocked_fast_matches_exact_path(spark):
-    """The batch-linear-algebra variant (the registered execution shape
-    since r12) must emit the same pair set as the UNREGISTERED
-    pair-per-row certification form when run with the same codebook
-    (K=IVF_K): identical blocking decisions, identical >= threshold
-    verdicts (sims differ only in batch-vs-fold ULPs, rounded away at
-    4dp)."""
-    slow = {
-        (r["id1"], r["id2"]): r["sim"]
-        for r in similarity.embedding_neardup_blocked_exact(
-            spark, SF_SMOKE
-        ).collect()
-    }
-    fast = {
-        (r["id1"], r["id2"]): r["sim"]
-        for r in similarity.embedding_neardup_blocked_fast(
-            spark, SF_SMOKE, ivf_k=similarity.IVF_K
-        ).collect()
-    }
-    assert set(fast) == set(slow)
-    for p, s in fast.items():
-        assert abs(s - slow[p]) <= 1e-4, (p, s, slow[p])
 
 
 @pytest.mark.parametrize(

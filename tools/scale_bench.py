@@ -307,7 +307,7 @@ def main() -> None:
     # path grows K); the scale-sized run below is the honest number.
     from dic_a1_spark.operators.similarity import (
         NEARDUP_NPROBE,
-        embedding_neardup_blocked_fast,
+        embedding_neardup_blocked,
     )
 
     emb_queries: dict[str, dict] = {}
@@ -347,7 +347,7 @@ def main() -> None:
     scaled_k = max(8, min(n_vec_base, n_vecs * NEARDUP_NPROBE // 200))
     spark.catalog.clearCache()
     t0 = time.perf_counter()
-    rows_out = embedding_neardup_blocked_fast(
+    rows_out = embedding_neardup_blocked(
         spark, args.work_dir, ivf_k=scaled_k
     ).count()
     sec = round(time.perf_counter() - t0, 3)
