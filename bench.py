@@ -4,9 +4,9 @@
 JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec, ...}, "sf": ...}.
 
-Each query is executed to completion via a cheap terminal action
-(count after a write-less materialization) — we time the full pipeline
-including scan, shuffle, and aggregation, not plan construction.
+Each query is timed by dic_a1_spark.runner.timed: cold cache, warm JVM
+and Python workers, first materialization, plan construction included
+(iterative operators run jobs while they build).
 """
 
 from __future__ import annotations
@@ -14,7 +14,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 from pathlib import Path
 
 _REPO = str(Path(__file__).resolve().parent)
@@ -23,9 +22,11 @@ if _REPO not in sys.path:
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# Headline set: the flagship chi-square pipeline plus representative
-# relational / events / dedup / similarity workloads. Kept in sync with
-# the registry by name.
+# The flagship chi-square pipeline plus representative relational, events,
+# dedup, similarity and curation workloads, by registry name. The
+# 16-round label-propagation certifiers (dedup_simhash_md5_groups,
+# dedup_ladder_report) are left to the hostile sweep: too heavy for a
+# wall-clock set.
 HEADLINE = [
     "chisq_top75",
     "chisq_doc_frequency",
@@ -49,36 +50,20 @@ HEADLINE = [
     "q13_order_count_distribution",
     "q19_bracketed_revenue",
     "text_bigram_topk",
-    # r4->r5 note: text_tfidf_top_terms printed 0.91 s (r3) then 1.58 s
-    # (r4) here; 3 isolated repeats at sf0.1 (r5 session) measure
-    # 0.74-0.84 s warm with the code byte-identical between rounds, and
-    # the physical plan (pruned scan -> partial agg -> WindowGroupLimit
-    # top-k -> 1-row broadcast N) unchanged — the +73% was in-bench
-    # scheduling noise, same class as the doc_chunk_windows note below.
     "text_tfidf_top_terms",
     "q9_product_profit",
     "q21_sole_late_supplier",
     "decontam_ngram_overlap",
     "decontam_ngram_overlap_fast",
-    # r3->r4 note: doc_chunk_windows printed 1.15 s (r2) then 1.82 s (r3)
-    # here; 4 isolated repeats at sf0.1 (r4 session) measure 0.86-0.99 s
-    # with the code byte-identical between rounds — the +58% was in-bench
-    # scheduling noise, not a regression.
     "doc_chunk_windows",
-    # round 3 additions: oracle-gated LSH band join, linear-output simhash
-    # dedup, and the batch-matmul ANN paths
     "dedup_minhash_md5_pairs",
     "dedup_simhash_groups",
     "ivf_assignments_fast",
     "embedding_neardup_blocked_fast",
-    # round 4 additions: hash-verified label propagation, contracted-graph
-    # embedding groups, and the composed curation DAG
     "dedup_minhash_md5_groups",
     "embedding_neardup_groups",
     "curation_pipeline",
     "doc_pack_bins",
-    # round 4 additions: PII scrub, batch-vs-corpus dedup, int8 retrieval,
-    # corpus shape diagnostics
     "text_pii_scrub",
     "dedup_incremental_keep",
     "knn_cosine_quantized",
@@ -88,143 +73,28 @@ HEADLINE = [
     "events_funnel_depth",
     "dedup_incremental_minhash",
     "lsh_recall_report",
-    # round 5 additions: unigram-LM quality scoring, Bloom-filter
-    # decontamination, per-domain quotas, z-score outlier flags
     "text_unigram_surprisal",
     "decontam_bloom",
     "domain_quota_cap",
     "quality_outlier_zscore",
     "knn_cosine_quantized_fast",
     "corpus_hygiene_pipeline",
-    # r7->r8 note: the 8 shared-set queries that regressed >1.3x in
-    # BENCH_r07 (text_bigram_topk 0.99->1.73, events_range_join_error_
-    # clicks 0.49->0.85, q19 0.57->0.94, q4 0.86->1.36, domain_quota_cap
-    # 0.39->0.58, q13 0.76->1.04, sql_top_returned_customers 1.74->2.37,
-    # dedup_simhash_md5_pairs 2.37->3.22 s) were re-run ISOLATED on an
-    # idle machine in the r8 session (tools/drift_check.py, 4 cold-cache
-    # repeats each): medians 0.81 / 0.53 / 0.60 / 0.87 / 0.49 / 0.71 /
-    # 1.37 / 2.87 s — all at or below their r6 values except
-    # dedup_simhash_md5_pairs (min 2.71, code untouched since r5). The
-    # r7 +5.5% shared-set drift was in-bench scheduling noise, the same
-    # class as the text_tfidf/doc_chunk/knn_pq notes above.
-    # simhash md5 certification family (pairs only: the groups twin is a
-    # 16-iteration label-prop certification vehicle, covered by the sweep)
     "dedup_simhash_md5_pairs",
-    # dedup_ladder_report runs all four certified group families incl.
-    # the 16-iteration simhash label prop — sweep-covered, too heavy for
-    # the headline wall-clock set
-    # round 5: product quantization (ADC shortlist + exact re-rank)
-    # r6->r7 note: knn_cosine_pq printed 6.62 s (r6) then 10.26 s in an
-    # r7 mid-session run, and dedup_simhash_groups 6.34 -> 9.60 s — both
-    # with byte-identical code. Isolated repeats on an idle machine
-    # (r7 session) measure 7.00 s / 6.55 s warm: the delta was OS
-    # page-cache state plus concurrent verify jobs, the same
-    # measurement-noise class as the text_tfidf/doc_chunk notes above.
     "embedding_pq_codes",
     "embedding_pq_codes_fast",
     "knn_cosine_pq",
-    # round 6: corpus line dedup (CCNet-style boilerplate scrub),
-    # SemDeDup (cluster-local semantic dedup over embeddings), and the
-    # batch ADC twin of PQ retrieval
     "line_dedup_kept",
     "semdedup_keep",
     "knn_cosine_pq_fast",
-    # round 6: cross-document exact-substring span dedup (Lee et al.
-    # ExactSubstr, windowed form)
     "substr_dup_spans",
-    # round 6: winnowing fingerprints (MOSS), DSIR importance selection,
-    # and the global-sort-free perplexity decile census
     "winnow_fingerprints",
     "dsir_selected",
     "ppl_decile_census",
     "cdc_stats",
     "colloc_pmi_topk",
-    # round 7: BM25 retrieval (batched), BPE merge induction, weighted
-    # PageRank over the corpus-discovered trade graph, per-source
-    # diversity, taxonomy labeling, linear quality inference, and the
-    # retrieval->packing composition
     "bm25_batch_topk",
     "bpe_merges",
     "graph_pagerank",
-    # r9 local pre-round check: the three shared-set queries >1.4x vs
-    # the r8 tail (winnow_fingerprints 1.43->2.18, text_bigram_topk
-    # 0.74->1.15, knn_cosine_pq_fast 0.76->1.10 s) re-ran isolated
-    # (drift_check, 5 cold-cache repeats): medians 1.37 / 0.69 / 1.00 s
-    # — all at their r8 values; in-bench scheduling noise.
-    # r10 POST-bench drift rows (VERDICT r9 item 2 — the evidence now
-    # POSTDATES the bench run it explains): a full sf0.1 bench ran in
-    # the r10 session (q4_late_shipment_priority 0.79, text_bigram_topk
-    # 0.76 in-bench — both back at their r8 values), and drift_check
-    # then re-ran both isolated AFTER that bench (6 cold-cache repeats):
-    # q4 min 0.87 / med 1.00 / max 1.64; bigram min 0.69 / med 0.70 /
-    # max 2.68. The r9 committed-tail regressions (1.20 / 1.01) were
-    # in-bench scheduling noise; steady-state medians hold at ~1.0 /
-    # ~0.7 s. The same session also re-ran the md5-simhash sweep
-    # oscillation (VERDICT item 5): dedup_simhash_md5_groups isolated
-    # med 13.5 s across 3 repeats (min 13.4 / max 16.0) — STABLE, so
-    # the r8 sweep's 7.2 s was the outlier, not r9's 16.9; the cost is
-    # ~13 label-propagation rounds x per-round floor plus the banded
-    # md5 pair join — certification-family by design, not in this
-    # headline set.
-    # r11 POST-BENCH_r10 drift rows (VERDICT r10 item 1 — the 16-query
-    # r10 tail regression coincided with the r10 pq/similarity/quantize
-    # edits, so noise had to be DEMONSTRATED): tools/drift_check.py ran
-    # 6 cold-cache isolated repeats each in the r11 session, AFTER
-    # BENCH_r10. Medians: embedding_pq_codes_fast 0.613,
-    # knn_cosine_pq_fast 0.936 (vs the r9 session's own isolated median
-    # 1.00 — STABLE isolated-vs-isolated), knn_cosine_quantized_fast
-    # 1.336 (below r9's in-bench 1.433), semdedup_keep 1.181 (inside
-    # its r6-r10 in-bench band 0.88-1.33), line_dedup_kept 0.630 (vs
-    # r10's 0.822, module untouched), dedup_simhash_md5_pairs 2.503 (vs
-    # the r8 session's isolated 2.87), corpus_hygiene_pipeline 1.899
-    # (below r10's 2.203). The one query above ALL bench history,
-    # embedding_pq_codes_fast (iso 0.613 vs r5-r9 band 0.38-0.49), was
-    # then A/B'd DIRECTLY: the r9 file (daa1239, pre-guards, pre-
-    # position->id map) and the current file ran INTERLEAVED in one
-    # session, 8 repeats each — r9 code med 0.552, current med 0.529.
-    # The r10 edits cost nothing (the id map is one vectorized numpy
-    # fancy-index; the guards are plan-build-time); the whole r10 tail
-    # was in-bench scheduling noise, same class as every prior round's.
-    # r12 POST-BENCH_r11 drift rows (VERDICT r11 item 1 — the flagship
-    # chisq drop and the 16-query r11 tail, NONE coinciding with a
-    # Spark-side edit): the r12 session's own fresh full bench (idle
-    # machine, post-optimization) recovered the flagship in the bench
-    # run itself — chisq amplified 118,926 docs/s (r11: 109,636; r10:
-    # 141,812 on a faster machine), cold sf0.1 rate 3,980 (r11: 2,734)
-    # — and tools/drift_check.py then ran 5 cold-cache isolated repeats
-    # per suspect AFTER that bench (drift_r12.out). Medians:
-    # chisq_top75 1.042, colloc_pmi_topk 1.814 (vs r11 in-bench 2.806),
-    # index_compression 0.590 (vs 0.722), repselect_best_of_group 1.030
-    # (vs 1.195), events_attribution 0.289, events_attribution_rollup
-    # 0.701 (vs 0.826) — every r11-tail suspect at or below its r10
-    # steady state on a machine measured 1.3-1.9x SLOWER than the r11
-    # bench host. The r11 chisq drop was session contention (the class
-    # SCALING.md:999-1004 documents), not a code regression: the chisq
-    # Spark path is byte-identical since r9. The same file also pins
-    # this session's OWN in-bench outliers (dedup_repeated_ngrams
-    # in-bench 1.530 vs isolated med 0.986 ~= r11's 0.938; cdc_stats
-    # 1.414 vs 0.928; text_unigram_surprisal 0.917 vs 0.677;
-    # corpus_hygiene_pipeline 2.302 vs 1.893; knn_cosine_quantized_fast
-    # in-bench 2.355 vs isolated med 1.494 — steady state for this
-    # host) — in-bench scheduling noise, same class as r9/r10/r11.
-    # r12 SECOND-session rows (the MinHash Arrow-packer change): a fresh
-    # idle full bench post-change printed total 115.4 s / amplified
-    # chisq 138,667 docs/s (this sandbox's best), and drift_check then
-    # re-ran the touched family isolated AFTER it (drift_r12.out,
-    # second block): dedup_minhash_pairs med 2.003, minhash_groups
-    # 2.083, md5_pairs 2.126, md5_groups 3.157 (r11 in-bench: 4.532),
-    # incremental_minhash 1.760, chisq_top75 0.752 — all at or below
-    # steady state. The in-bench dedup_minhash_pairs row (~4.7 s) pays
-    # one-time JVM codegen of the ~200-node band-join plan on its FIRST
-    # materialization — measured equal for the old fold form (4.56 s
-    # fresh-session first run) and the packer (4.84 s), repeats 2.3/2.0;
-    # the class predates r12 and is not a packer regression.
-    # r8->r9 note: diversity_simpson was the one r8 shared-set
-    # regression >1.3x (0.5695 -> 0.818 s, module untouched). Isolated
-    # re-run in the r9 session (tools/drift_check.py, 6 cold-cache
-    # repeats, idle machine): min 0.550 / med 0.624 / max 1.014 s —
-    # median back at the r7 value; in-bench scheduling noise, the same
-    # class as the r7/r8 notes above.
     "diversity_simpson",
     "taxonomy_doc_topics",
     "qlin_doc_scores",
@@ -232,9 +102,6 @@ HEADLINE = [
     "index_postings",
     "events_attribution_rollup",
     "source_overlap_matrix",
-    # round 8: corpus token budgets under the induced BPE vocabulary,
-    # embedding decontamination (bipartite blocked ANN), best-of-cluster
-    # representative selection
     "bpe_corpus_token_counts",
     "embdecontam_flagged",
     "repselect_best_of_group",
@@ -243,84 +110,32 @@ HEADLINE = [
 
 
 def main() -> None:
+    from dic_a1_spark.operators.chisq import chi2_topk
     from dic_a1_spark.registry import all_queries
+    from dic_a1_spark.runner import amplified_table, timed, warm_up
     from dic_a1_spark.session import get_spark
 
     spark = get_spark(app_name="dic_a1_spark-bench")
     qs = all_queries()
     names = [n for n in HEADLINE if n in qs]
 
-    # One untimed pipeline run up front absorbs JVM class-loading/codegen
-    # warmup; after that every query is timed on its FIRST materialization
-    # with the cache cleared, so persisted frames and shuffle reuse inside
-    # a query are PAID INSIDE its measured run. Timings are cold-cache,
-    # warm-JVM — comparable to the reference's end-to-end numbers.
-    qs[names[0]](spark, SF_DIR).count()
-    # r12 measurement fix (recorded in OPTIMIZATION_r12.md): ALSO warm the
-    # Python worker fleet untimed. The one-time worker spawn + Arrow init
-    # (~3 s across 32 cores) previously landed inside whichever HEADLINE
-    # query first hit a Python node — dedup_simhash_pairs through r11,
-    # dedup_minhash_pairs after the r12 Arrow signature packer — making
-    # cross-round per-query diffs misleading whenever that first-Python
-    # position moved. One tiny pandas_udf materialization here charges the
-    # spawn to session setup, like the JVM warmup above; every query's
-    # own Arrow traffic stays inside its measured run.
-    from pyspark.sql import functions as F
-
-    # r13: the warmup uses a self-contained pandas_udf instead of the
-    # private dedup._minhash_transforms/min_sig_batch pair (VERDICT r12
-    # minor item: the harness must not couple to an internal symbol —
-    # any Arrow-batched materialization spawns the worker fleet).
-    spark.range(64).select(
-        F.pandas_udf(lambda s: s, "long")(F.col("id")).alias("s")
-    ).count()
-    timings: dict[str, float] = {}
-    for name in names:
-        spark.catalog.clearCache()
-        # Build inside the timed region: free for declarative queries,
-        # and charges iterative operators their construction-time actions.
-        t0 = time.perf_counter()
-        qs[name](spark, SF_DIR).count()
-        # 3 decimals (not 4) since r13: 79+ queries at 4 decimals pushed
-        # the one-line JSON past the driver's ~2,000-char tail capture
-        # (BENCH_r11 was lost to exactly that — VERDICT r12 item 2);
-        # millisecond resolution is already below this bench's noise.
-        timings[name] = round(time.perf_counter() - t0, 3)
-    spark.catalog.clearCache()
+    warm_up(spark, lambda: qs[names[0]](spark, SF_DIR))
+    timings = {
+        name: timed(spark, lambda: qs[name](spark, SF_DIR))[0] for name in names
+    }
 
     # Reference-comparable throughput: documents/second through the full
-    # chi-square pipeline (the reference reports ~55K reviews/s end-to-end
-    # on its 56 GB cluster run — BASELINE.md).
-    n_docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").count()
-    docs_per_sec = (
-        round(n_docs / timings["chisq_top75"], 1) if timings.get("chisq_top75") else None
-    )
-
-    # The sf0.1 number above is dominated by fixed Spark job overhead
-    # (~5K docs). For a number honestly comparable to the baseline's
-    # cluster rate, ALSO measure the flagship on an amplified in-memory
-    # corpus large enough for steady-state throughput (50x -> ~250K docs;
-    # tools/scale_bench.py records the full per-query story).
-    from pyspark import StorageLevel
-    from pyspark.sql import functions as F
-
-    from dic_a1_spark.operators.chisq import chi2_topk
-
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    amp = (
-        docs.crossJoin(F.broadcast(spark.range(50).withColumnRenamed("id", "rep")))
-        .withColumn("doc_id", F.col("doc_id") + F.col("rep") * F.lit(n_docs * 10))
-        .drop("rep")
-        .repartition(64)
-        .withColumnRenamed("lang", "category")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    n_amp = amp.count()  # materialize OUTSIDE the timed region
-    t0 = time.perf_counter()
-    chi2_topk(amp).count()
-    amp_sec = time.perf_counter() - t0
-    amp.unpersist()
-    amp_docs_per_sec = round(n_amp / amp_sec, 1)
+    # chi-square pipeline (the reference reports ~55K reviews/s end to end
+    # on its 56 GB cluster run, BASELINE.md). At sf0.1 fixed job overhead
+    # dominates, so the flagship is also timed over a 50x corpus. The
+    # crossJoin keeps the source's single partition, hence the
+    # repartition; the eager localCheckpoint materializes the corpus
+    # outside the timer and, not being a cache entry, survives the cache
+    # clear that opens timed().
+    n_docs, amp = amplified_table(spark, SF_DIR, "documents", "doc_id", 50)
+    amp = amp.repartition(64).withColumnRenamed("lang", "category").localCheckpoint()
+    n_amp = n_docs * 50
+    amp_sec = timed(spark, lambda: chi2_topk(amp))[0]
 
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
     print(
@@ -329,22 +144,19 @@ def main() -> None:
                 "metric": "headline query wall-clock",
                 "value": round(sum(timings.values()), 3),
                 "unit": "sec",
-                # r01 timed a second count() after warmup (warm-cache);
-                # timings here are cold-cache/warm-JVM — not comparable to
-                # r01's smaller numbers, by design (see ADVICE r1).
                 "timing": "cold-cache, warm-JVM, first materialization",
                 "queries": timings,
                 "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-                "chisq_docs_per_sec": docs_per_sec,
-                # steady-state flagship throughput on a 50x amplified
-                # corpus (~250K docs at sf0.1) — the number comparable to
-                # BASELINE.md's ~55K reviews/s cluster rate; the per-query
-                # amplified story is tools/scale_bench.py -> SCALEBENCH.json
-                "chisq_docs_per_sec_amplified": amp_docs_per_sec,
+                "chisq_docs_per_sec": (
+                    round(n_docs / timings["chisq_top75"], 1)
+                    if timings.get("chisq_top75")
+                    else None
+                ),
+                "chisq_docs_per_sec_amplified": round(n_amp / amp_sec, 1),
                 "n_docs_amplified": n_amp,
             },
-            # Compact separators (r13): every byte of this one-line JSON
-            # competes with the driver's finite tail capture.
+            # Compact: readers that keep only the tail of the output lose
+            # a line much past 2,000 chars.
             separators=(",", ":"),
         )
     )

@@ -48,6 +48,7 @@ def _cmd_chisq(args: argparse.Namespace) -> int:
 
 def _cmd_query(args: argparse.Namespace) -> int:
     from dic_a1_spark.registry import all_queries
+    from dic_a1_spark.runner import timed
     from dic_a1_spark.session import get_spark
 
     qs = all_queries()
@@ -57,17 +58,15 @@ def _cmd_query(args: argparse.Namespace) -> int:
         return 0 if args.name == "list" else 2
 
     spark = get_spark(app_name=f"dic_a1_spark-{args.name}", master=args.master)
-    t0 = time.perf_counter()
-    df = qs[args.name](spark, args.sf_dir)
-    rows = df.limit(args.limit).collect() if args.limit else df.collect()
-    n = df.count()
+    sec, n, df = timed(spark, lambda: qs[args.name](spark, args.sf_dir))
+    sample = df.limit(min(args.limit or 10, 10)).collect()
     print(
         json.dumps(
             {
                 "query": args.name,
                 "rows": n,
-                "elapsed_sec": round(time.perf_counter() - t0, 3),
-                "sample": [r.asDict() for r in rows[:10]],
+                "elapsed_sec": sec,
+                "sample": [r.asDict() for r in sample],
             },
             default=str,
         )
@@ -98,11 +97,13 @@ def _cmd_explain(args: argparse.Namespace) -> int:
 def _cmd_bench(args: argparse.Namespace) -> int:
     import os
     import subprocess
+    from pathlib import Path
 
     env = dict(os.environ)
     if args.sf_dir:
         env["SPARK_GRAFT_SF_DIR"] = args.sf_dir
-    return subprocess.call([sys.executable, "bench.py"], env=env)
+    bench = Path(__file__).resolve().parent.parent / "bench.py"
+    return subprocess.call([sys.executable, str(bench)], env=env)
 
 
 def main(argv: list[str] | None = None) -> int:

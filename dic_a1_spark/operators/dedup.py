@@ -523,7 +523,9 @@ def label_propagate(docs: DataFrame, edges: DataFrame, n_iter: int = 3) -> DataF
     chains of near-dups converge within graph diameter (n_iter bounds it;
     components with larger diameter may keep >1 label — conservative,
     never wrong-merges). Shared by the MinHash and SimHash group queries;
-    docs absent from `edges` (too short to sign) keep their own label."""
+    docs absent from `edges` (too short to sign) keep their own label.
+    n_iter is a fixed budget that does not raise when spent: the oracles
+    unroll exactly n_iter pushes, so the result is defined at that depth."""
     from pyspark import StorageLevel
     # Persist the doc-bucket graph: every iteration joins against it, and
     # without the persist each join would recompute the whole

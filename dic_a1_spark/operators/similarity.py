@@ -375,6 +375,10 @@ def embedding_neardup_pairs(
 # corpora would run the same plan at 0.9.
 NEARDUP_SIM = 0.4
 NEARDUP_NPROBE = 3
+# Round budget of embedding_neardup_groups' label loop. Convergence
+# measured 3 (sf0.001/sf0.01) and 8 (sf0.1) rounds; a graph that needs
+# more raises rather than returning unconverged labels.
+EMB_LP_MAX_ROUNDS = 50
 
 
 def _data_sized_k(n: int) -> int:
@@ -835,7 +839,7 @@ def embedding_neardup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
         "bucket", F.col("bucket.root").alias("label")
     ).localCheckpoint()
     prev_sum = None
-    for _ in range(50):
+    for _ in range(EMB_LP_MAX_ROUNDS):
         new_labels = (
             symx.join(labels, symx.src == labels.bucket)
             .groupBy("dst")
@@ -850,6 +854,11 @@ def embedding_neardup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
         if cur_sum == prev_sum:
             break
         prev_sum = cur_sum
+    else:
+        raise RuntimeError(
+            "embedding_neardup_groups: label propagation did not converge"
+            f" within EMB_LP_MAX_ROUNDS={EMB_LP_MAX_ROUNDS} rounds"
+        )
 
     doc_group = (
         edges.join(labels, "bucket")

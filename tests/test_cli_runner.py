@@ -19,6 +19,7 @@ import json
 import os
 import subprocess
 import sys
+from pathlib import Path
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF = "/root/testdata/sf0.001"
@@ -61,6 +62,18 @@ def test_cli_query_echoes_result_json_on_stdout():
     assert payload["elapsed_sec"] > 0
     assert 0 < len(payload["sample"]) <= 3
     assert {"vec_id", "l2_norm"} <= set(payload["sample"][0])
+
+
+def test_cli_bench_resolves_bench_py_outside_the_repo_root(monkeypatch, tmp_path):
+    """`cli bench` must find bench.py from the package, not the cwd."""
+    from dic_a1_spark import cli
+
+    calls = []
+    monkeypatch.setattr(subprocess, "call", lambda argv, **kw: calls.append(argv) or 0)
+    monkeypatch.chdir(tmp_path)
+    assert cli.main(["bench"]) == 0
+    bench = Path(calls[0][1])
+    assert bench.is_absolute() and bench.is_file() and bench.name == "bench.py"
 
 
 def test_cli_query_list_enumerates_registry():

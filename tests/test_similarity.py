@@ -140,6 +140,15 @@ def test_neardup_groups_cover_pairs_one_row_per_vector(spark):
         assert labels[r["id1"]] == labels[r["id2"]], (r["id1"], r["id2"])
 
 
+def test_neardup_groups_raise_when_label_loop_budget_is_spent(spark, monkeypatch):
+    """The contracted-graph label loop fails loudly instead of returning
+    unconverged labels. (At the real budget, test_similarity_oracle
+    checks the converged rows against the oracle.)"""
+    monkeypatch.setattr(similarity, "EMB_LP_MAX_ROUNDS", 1)
+    with pytest.raises(RuntimeError, match="embedding_neardup_groups.*=1 rounds"):
+        similarity.QUERIES["embedding_neardup_groups"](spark, SF_SMOKE)
+
+
 @pytest.mark.parametrize(
     "sf_dir", [SF_CORRECT, "/root/testdata/sf0.1"], ids=["sf0.01", "sf0.1"]
 )

@@ -23,7 +23,6 @@ import json
 import os
 import subprocess
 import sys
-import time
 from pathlib import Path
 
 _REPO = str(Path(__file__).resolve().parent.parent)
@@ -46,8 +45,8 @@ def _ensure_amplified(work_dir: str, sf_dir: str, factor: int) -> None:
     emb = Path(work_dir) / "embeddings.parquet"
     if docs.exists() and emb.exists():
         return
+    from dic_a1_spark.runner import amplified_table
     from dic_a1_spark.session import get_spark
-    from tools.scale_bench import amplified_table
 
     spark = get_spark(app_name="corescale-amplify")
     _, docs_amp = amplified_table(spark, sf_dir, "documents", "doc_id", factor)
@@ -79,22 +78,17 @@ def _warm_page_cache(work_dir: str) -> None:
 
 
 def _child(work_dir: str) -> None:
-    from pyspark.sql import functions as F
-
     from dic_a1_spark.registry import all_queries
+    from dic_a1_spark.runner import timed, warm_up
     from dic_a1_spark.session import get_spark
 
     spark = get_spark(app_name="corescale-child")
     qs = all_queries()
-    # Warmup: JVM + Python fleet (the bench.py posture).
-    qs["chisq_top75"](spark, work_dir).count()
-    spark.range(64).select(F.pandas_udf(lambda s: s, "long")(F.col("id"))).count()
-    out = {}
-    for name in PROBE_QUERIES:
-        spark.catalog.clearCache()
-        t0 = time.perf_counter()
-        qs[name](spark, work_dir).count()
-        out[name] = round(time.perf_counter() - t0, 3)
+    warm_up(spark, lambda: qs["chisq_top75"](spark, work_dir))
+    out = {
+        name: timed(spark, lambda: qs[name](spark, work_dir))[0]
+        for name in PROBE_QUERIES
+    }
     print("CORESCALE_CHILD " + json.dumps(out))
     spark.stop()
 

@@ -2,10 +2,10 @@
 """Isolated re-runs of bench queries whose round-over-round numbers
 drifted — the evidence tool behind the BENCH "pinned as noise" notes.
 
-For each named query: run `repeats` cold-cache materializations in one
-warm JVM on an otherwise idle machine (the in-bench numbers share the
-session with 60 other queries and whatever verify jobs run alongside),
-and print min/median/max next to the recorded r6/r7 values.
+For each named query: time `repeats` runs through
+dic_a1_spark.runner.timed in one session warmed by runner.warm_up (the
+in-bench numbers share the session with 77 other queries and whatever
+else runs alongside), and print min/median/max.
 
     python tools/drift_check.py [--sf-dir /root/testdata/sf0.1]
         [--repeats 4] name [name ...]
@@ -16,7 +16,6 @@ from __future__ import annotations
 import argparse
 import statistics
 import sys
-import time
 from pathlib import Path
 
 _REPO = str(Path(__file__).resolve().parent.parent)
@@ -32,19 +31,17 @@ def main() -> None:
     args = ap.parse_args()
 
     from dic_a1_spark.registry import all_queries
+    from dic_a1_spark.runner import timed, warm_up
     from dic_a1_spark.session import get_spark
 
     spark = get_spark(app_name="dic_a1_spark-drift-check")
     qs = all_queries()
-    # warmup: absorb JVM class-loading/codegen like bench.py does
-    qs[args.names[0]](spark, args.sf_dir).count()
+    warm_up(spark, lambda: qs[args.names[0]](spark, args.sf_dir))
     for name in args.names:
-        ts = []
-        for _ in range(args.repeats):
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            qs[name](spark, args.sf_dir).count()
-            ts.append(time.perf_counter() - t0)
+        ts = [
+            timed(spark, lambda: qs[name](spark, args.sf_dir))[0]
+            for _ in range(args.repeats)
+        ]
         print(
             f"{name}: min={min(ts):.3f} med={statistics.median(ts):.3f} "
             f"max={max(ts):.3f} (n={args.repeats})",

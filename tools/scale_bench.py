@@ -25,8 +25,9 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import statistics
 import sys
-import time
+from functools import reduce
 from pathlib import Path
 
 _REPO = str(Path(__file__).resolve().parent.parent)
@@ -164,20 +165,6 @@ HEADLINE_DOC_QUERIES = [
 ]
 
 
-def amplified_table(spark, sf_dir: str, table: str, id_col: str, factor: int):
-    from pyspark.sql import functions as F
-
-    from dic_a1_spark.sources.readers import load_table
-
-    d = load_table(spark, sf_dir, table)
-    n = d.count()
-    return n, (
-        d.crossJoin(F.broadcast(spark.range(factor).withColumnRenamed("id", "rep")))
-        .withColumn(id_col, F.col(id_col) + F.col("rep") * F.lit(n * 10))
-        .drop("rep")
-    )
-
-
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--factor", type=int, default=50)
@@ -217,9 +204,22 @@ def main() -> None:
     args = ap.parse_args()
 
     from dic_a1_spark.registry import all_queries
+    from dic_a1_spark.runner import amplified_table, timed, warm_up
     from dic_a1_spark.session import get_spark
+    from dic_a1_spark.sources.readers import load_table
 
     spark = get_spark(app_name="dic_a1_spark-scale-bench")
+    wd = args.work_dir
+
+    def record(out: dict, name: str, build, n: int, rate_key: str) -> dict:
+        sec, rows_out, _ = timed(spark, build)
+        out[name] = {
+            "sec": sec,
+            "rows_out": rows_out,
+            rate_key: round(n / sec, 1) if sec > 0 else None,
+        }
+        print(f"# {name}: {sec}s, {rows_out} rows", file=sys.stderr, flush=True)
+        return out[name]
 
     # Materialize the amplified corpus once; timed runs then scan parquet
     # exactly like any other sf_dir. Repartition before writing — the
@@ -231,14 +231,14 @@ def main() -> None:
     # stats never prune and id predicates (e.g. decontam's benchmark
     # slice) decode the whole corpus. Range layout is the data layout a
     # real corpus store would use.
-    docs_path = os.path.join(args.work_dir, "documents.parquet")
+    docs_path = os.path.join(wd, "documents.parquet")
     _, docs_amp = amplified_table(spark, args.sf_dir, "documents", "doc_id", args.factor)
     docs_amp.repartitionByRange(64, "doc_id").write.mode("overwrite").parquet(
         docs_path
     )
     n_docs = spark.read.parquet(docs_path).count()
 
-    emb_path = os.path.join(args.work_dir, "embeddings.parquet")
+    emb_path = os.path.join(wd, "embeddings.parquet")
     n_vec_base, emb_amp = amplified_table(
         spark, args.sf_dir, "embeddings", "vec_id", args.embed_factor
     )
@@ -250,56 +250,27 @@ def main() -> None:
     qs = all_queries()
     names = [n for n in HEADLINE_DOC_QUERIES if n in qs]
 
-    # Untimed warmup run absorbs JVM codegen/classloading; each query is
-    # then timed on its first cold-cache materialization (persists inside a
-    # query are paid inside its own measured run). The Arrow identity pass
-    # warms the Python UDF workers too — steady-state for a long-running
-    # app, and without it whichever pandas-backed query happens to run
-    # first absorbs the one-time ~10 s worker spin-up into its number.
-    qs[names[0]](spark, args.work_dir).count()
-    import pandas as _pd  # noqa: F401
-
-    spark.read.parquet(emb_path).select("vec_id").mapInPandas(
-        lambda batches: batches, "vec_id long"
-    ).count()
-
+    warm_up(spark, lambda: qs[names[0]](spark, wd))
     queries: dict[str, dict] = {}
     for name in names:
-        spark.catalog.clearCache()
-        # Build INSIDE the timed region: plan construction is free for
-        # declarative queries, but iterative operators (labelprop) run
-        # convergence actions during construction and must be charged.
-        t0 = time.perf_counter()
-        rows_out = qs[name](spark, args.work_dir).count()
-        sec = round(time.perf_counter() - t0, 3)
-        queries[name] = {
-            "sec": sec,
-            "rows_out": rows_out,
-            "docs_per_sec": round(n_docs / sec, 1) if sec > 0 else None,
-        }
-        print(f"# {name}: {sec}s, {rows_out} rows", file=sys.stderr, flush=True)
-    spark.catalog.clearCache()
+        record(queries, name, lambda: qs[name](spark, wd), n_docs, "docs_per_sec")
 
     if args.jaccard_ceiling > 0:
         from dic_a1_spark.operators.dedup import (
             _with_shingles,
             jaccard_pairs_from_index,
         )
-        from dic_a1_spark.sources.readers import load_table
 
-        sh = _with_shingles(load_table(spark, args.work_dir, "documents"))
-        t0 = time.perf_counter()
-        rows_out = jaccard_pairs_from_index(
-            sh, max_shingle_df=args.jaccard_ceiling
-        ).count()
-        sec = round(time.perf_counter() - t0, 3)
-        name = f"dedup_jaccard_pairs_ceiling{args.jaccard_ceiling}"
-        queries[name] = {
-            "sec": sec,
-            "rows_out": rows_out,
-            "docs_per_sec": round(n_docs / sec, 1) if sec > 0 else None,
-        }
-        print(f"# {name}: {sec}s, {rows_out} rows", file=sys.stderr, flush=True)
+        record(
+            queries,
+            f"dedup_jaccard_pairs_ceiling{args.jaccard_ceiling}",
+            lambda: jaccard_pairs_from_index(
+                _with_shingles(load_table(spark, wd, "documents")),
+                max_shingle_df=args.jaccard_ceiling,
+            ),
+            n_docs,
+            "docs_per_sec",
+        )
 
     # Embedding queries over the amplified vector corpus. The registered
     # fixed-K blocked near-dup is OMITTED on purpose: with K=8 blocks its
@@ -333,33 +304,15 @@ def main() -> None:
         # shape
         "ml_kmeans_clusters",
     ]:
-        spark.catalog.clearCache()
-        t0 = time.perf_counter()
-        rows_out = qs[name](spark, args.work_dir).count()
-        sec = round(time.perf_counter() - t0, 3)
-        emb_queries[name] = {
-            "sec": sec,
-            "rows_out": rows_out,
-            "vecs_per_sec": round(n_vecs / sec, 1) if sec > 0 else None,
-        }
-        print(f"# {name}: {sec}s, {rows_out} rows", file=sys.stderr, flush=True)
+        record(emb_queries, name, lambda: qs[name](spark, wd), n_vecs, "vecs_per_sec")
 
     scaled_k = max(8, min(n_vec_base, n_vecs * NEARDUP_NPROBE // 200))
-    spark.catalog.clearCache()
-    t0 = time.perf_counter()
-    rows_out = embedding_neardup_blocked(
-        spark, args.work_dir, ivf_k=scaled_k
-    ).count()
-    sec = round(time.perf_counter() - t0, 3)
-    emb_queries[f"embedding_neardup_blocked_k{scaled_k}"] = {
-        "sec": sec,
-        "rows_out": rows_out,
-        "vecs_per_sec": round(n_vecs / sec, 1) if sec > 0 else None,
-    }
-    print(
-        f"# embedding_neardup_blocked_k{scaled_k}: {sec}s, {rows_out} rows",
-        file=sys.stderr,
-        flush=True,
+    record(
+        emb_queries,
+        f"embedding_neardup_blocked_k{scaled_k}",
+        lambda: embedding_neardup_blocked(spark, wd, ivf_k=scaled_k),
+        n_vecs,
+        "vecs_per_sec",
     )
 
     # SemDeDup at scale: the registered fixed-K query is quadratic inside
@@ -368,46 +321,30 @@ def main() -> None:
     # bit-identical matmul assignment twin.
     from dic_a1_spark.operators.semdedup import semdedup_keep
 
-    spark.catalog.clearCache()
-    t0 = time.perf_counter()
-    rows_out = semdedup_keep(spark, args.work_dir, ivf_k=scaled_k).count()
-    sec = round(time.perf_counter() - t0, 3)
-    emb_queries[f"semdedup_keep_k{scaled_k}"] = {
-        "sec": sec,
-        "rows_out": rows_out,
-        "vecs_per_sec": round(n_vecs / sec, 1) if sec > 0 else None,
-    }
-    print(
-        f"# semdedup_keep_k{scaled_k}: {sec}s, {rows_out} rows",
-        file=sys.stderr,
-        flush=True,
+    record(
+        emb_queries,
+        f"semdedup_keep_k{scaled_k}",
+        lambda: semdedup_keep(spark, wd, ivf_k=scaled_k),
+        n_vecs,
+        "vecs_per_sec",
     )
 
     # Group assignment over the verified pair graph: the registered query
     # sizes its own codebook from the data (same formula as scaled_k), so
     # it runs here unmodified — label propagation cost is linear in the
     # verified edge count plus per-iteration shuffles.
-    spark.catalog.clearCache()
-    t0 = time.perf_counter()
-    rows_out = qs["embedding_neardup_groups"](spark, args.work_dir).count()
-    sec = round(time.perf_counter() - t0, 3)
-    emb_queries["embedding_neardup_groups"] = {
-        "sec": sec,
-        "rows_out": rows_out,
-        "vecs_per_sec": round(n_vecs / sec, 1) if sec > 0 else None,
-    }
-    print(
-        f"# embedding_neardup_groups: {sec}s, {rows_out} rows",
-        file=sys.stderr,
-        flush=True,
+    record(
+        emb_queries,
+        "embedding_neardup_groups",
+        lambda: qs["embedding_neardup_groups"](spark, wd),
+        n_vecs,
+        "vecs_per_sec",
     )
 
     # --- events stream at amplified scale -------------------------------
     import shutil
 
     from pyspark.sql import functions as F
-
-    from dic_a1_spark.sources.readers import load_table
 
     ev = load_table(spark, args.sf_dir, "events")
     n_ev_base = ev.count()
@@ -426,7 +363,7 @@ def main() -> None:
         )
         .drop("rep")
     )
-    ev_path = os.path.join(args.work_dir, "events.parquet")
+    ev_path = os.path.join(wd, "events.parquet")
     ev_amp.repartitionByRange(64, "user_id", "ts").write.mode(
         "overwrite"
     ).parquet(ev_path)
@@ -441,23 +378,16 @@ def main() -> None:
         "events_seasonal_deviation",
         "events_dow_hour_profile",
     ]:
-        spark.catalog.clearCache()
-        t0 = time.perf_counter()
-        rows_out = qs[name](spark, args.work_dir).count()
-        sec = round(time.perf_counter() - t0, 3)
-        event_queries[name] = {
-            "sec": sec,
-            "rows_out": rows_out,
-            "events_per_sec": round(n_events / sec, 1) if sec > 0 else None,
-        }
-        print(f"# {name}: {sec}s, {rows_out} rows", file=sys.stderr, flush=True)
+        record(
+            event_queries, name, lambda: qs[name](spark, wd), n_events, "events_per_sec"
+        )
 
     # --- trade graph at amplified fan-in --------------------------------
     # graph_* discover their edges from lineitem/orders/customer/supplier;
     # copy the dims unchanged and replicate the fact rows.
     for t in ("region", "nation", "customer", "supplier", "part", "orders"):
         src = Path(args.sf_dir) / f"{t}.parquet"
-        dst = Path(args.work_dir) / f"{t}.parquet"
+        dst = Path(wd) / f"{t}.parquet"
         if dst.is_dir():
             shutil.rmtree(dst)
         shutil.copy(src, dst)
@@ -466,27 +396,19 @@ def main() -> None:
     li_amp = li.crossJoin(
         F.broadcast(spark.range(args.graph_factor).select(F.lit(1).alias("_r")))
     ).drop("_r")
-    li_path = os.path.join(args.work_dir, "lineitem.parquet")
+    li_path = os.path.join(wd, "lineitem.parquet")
     li_amp.repartition(64).write.mode("overwrite").parquet(li_path)
     n_li = spark.read.parquet(li_path).count()
 
     graph_queries: dict[str, dict] = {}
     for name in ["graph_nation_edges", "graph_degree_census", "graph_pagerank"]:
-        spark.catalog.clearCache()
-        t0 = time.perf_counter()
-        rows_out = qs[name](spark, args.work_dir).count()
-        sec = round(time.perf_counter() - t0, 3)
-        graph_queries[name] = {
-            "sec": sec,
-            "rows_out": rows_out,
-            "lineitems_per_sec": round(n_li / sec, 1) if sec > 0 else None,
-        }
-        print(f"# {name}: {sec}s, {rows_out} rows", file=sys.stderr, flush=True)
+        record(
+            graph_queries, name, lambda: qs[name](spark, wd), n_li, "lineitems_per_sec"
+        )
 
-    # --- BM25 batch fan-out flatness (r9: VERDICT item 6) -----------------
-    # The r8 tagged-fold re-shape's contract is that batch scoring pays
-    # ONE corpus pass regardless of B (the r7 shape paid B corpus folds).
-    # The plan-shape test pins the exchange count; this measures the
+    # --- BM25 batch fan-out flatness ---------------------------------------
+    # Batch scoring pays ONE tagged corpus fold regardless of B. The
+    # plan-shape test pins the exchange count; this measures the
     # wall-clock consequence on the amplified corpus: B=3 (the registered
     # batch) vs B=12 must be near-flat, not ~4x.
     from pyspark.sql import Window
@@ -498,20 +420,15 @@ def main() -> None:
         "stream", "batch", "window", "join", "vector", "table",
     ]
 
+    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
+
     def _batch_topk_sec(batch) -> tuple[float, int]:
-        docs = load_table(spark, args.work_dir, "documents")
-        w = Window.partitionBy("query_id").orderBy(
-            F.desc("score"), F.asc("doc_id")
-        )
-        spark.catalog.clearCache()
-        t0 = time.perf_counter()
-        rows_out = (
-            _scored_batch(docs, batch)
+        return timed(
+            spark,
+            lambda: _scored_batch(load_table(spark, wd, "documents"), batch)
             .withColumn("rank", F.row_number().over(w).cast("bigint"))
-            .where(F.col("rank") <= BM25_BATCH_K)
-            .count()
-        )
-        return round(time.perf_counter() - t0, 3), rows_out
+            .where(F.col("rank") <= BM25_BATCH_K),
+        )[:2]
 
     big_batch = tuple(
         (
@@ -520,12 +437,10 @@ def main() -> None:
         )
         for i in range(12)
     )
-    # ADVICE r9: a single unrepeated timing with B=3 always first let
-    # residual JVM/codegen warm-up land on the B=3 run and bias the
-    # b12/b3 ratio optimistically flat. Discard one warm-up pass, then
-    # take the median of 3 repeats per width.
-    import statistics
-
+    # A single unrepeated timing with B=3 always first lets residual
+    # JVM/codegen warm-up land on the B=3 run and bias the b12/b3 ratio
+    # optimistically flat: discard one warm-up pass, then take the median
+    # of 3 repeats per width.
     _batch_topk_sec(BM25_BATCH)  # discarded JVM/codegen warm-up
 
     def _median_topk_sec(batch) -> tuple[float, int]:
@@ -556,25 +471,20 @@ def main() -> None:
     if args.bpe_rounds > 0:
         from dic_a1_spark.operators.bpe import _rounds
 
-        spark.catalog.clearCache()
-        t0 = time.perf_counter()
-        _, tops = _rounds(spark, args.work_dir, n_rounds=args.bpe_rounds)
-        merges = tops[0]
-        for t in tops[1:]:
-            merges = merges.unionByName(t)
-        rows_out = merges.count()
-        sec = round(time.perf_counter() - t0, 3)
+        def deep_merges():
+            _, tops = _rounds(spark, wd, n_rounds=args.bpe_rounds)
+            return reduce(lambda a, b: a.unionByName(b), tops)
+
         bpe_row = {
-            "sec": sec,
             "rounds": args.bpe_rounds,
-            "rows_out": rows_out,
-            "docs_per_sec": round(n_docs / sec, 1) if sec > 0 else None,
+            **record(
+                {},
+                f"bpe_merges_rounds{args.bpe_rounds}",
+                deep_merges,
+                n_docs,
+                "docs_per_sec",
+            ),
         }
-        print(
-            f"# bpe_merges_rounds{args.bpe_rounds}: {sec}s, {rows_out} rows",
-            file=sys.stderr,
-            flush=True,
-        )
 
     result = {
         "metric": "amplified-corpus throughput",

@@ -11,7 +11,9 @@ a window over a low-cardinality key. Usage:
 
     python tools/scale_smoke.py [--factor 20] [--sf-dir /root/testdata/sf0.1]
 
-Prints one JSON line per operator with rows_in/rows_out/seconds.
+Prints one JSON line per operator with rows_in/rows_out/seconds, each
+timed by dic_a1_spark.runner.timed (cache cleared, build included) after
+runner.warm_up.
 """
 
 from __future__ import annotations
@@ -19,28 +21,11 @@ from __future__ import annotations
 import argparse
 import json
 import sys
-import time
 from pathlib import Path
 
 _REPO = str(Path(__file__).resolve().parent.parent)
 if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
-
-
-def amplified_documents(spark, sf_dir: str, factor: int):
-    from pyspark.sql import functions as F
-
-    from dic_a1_spark.sources.readers import load_table
-
-    d = load_table(spark, sf_dir, "documents")
-    n = d.count()
-    # replicate with distinct doc_ids; texts repeat, which *stresses* dedup
-    # (every text has `factor` exact copies + its original near-dups)
-    return (
-        d.crossJoin(F.broadcast(spark.range(factor).withColumnRenamed("id", "rep")))
-        .withColumn("doc_id", F.col("doc_id") + F.col("rep") * F.lit(n * 10))
-        .drop("rep")
-    )
 
 
 def main() -> None:
@@ -53,18 +38,26 @@ def main() -> None:
 
     from dic_a1_spark.operators.chisq import chi2_topk
     from dic_a1_spark.operators.dedup import (
-        dedup_exact_groups,
         minhash_candidate_pairs,
+        minhash_label_groups,
     )
+    from dic_a1_spark.runner import amplified_table, timed, warm_up
     from dic_a1_spark.session import get_spark
 
     spark = get_spark(app_name="dic_a1_spark-scale-smoke")
-    docs = amplified_documents(spark, args.sf_dir, args.factor).persist()
+    # Eager localCheckpoint: materialized once, outside every timer, and
+    # not a cache entry, so the cache clear inside timed() keeps it.
+    _, docs = amplified_table(spark, args.sf_dir, "documents", "doc_id", args.factor)
+    docs = docs.localCheckpoint()
     rows_in = docs.count()
 
-    def run(name, df):
-        t0 = time.perf_counter()
-        rows_out = df.count()
+    def chisq():
+        return chi2_topk(docs.withColumnRenamed("lang", "category"))
+
+    warm_up(spark, chisq)
+
+    def run(name, build):
+        sec, rows_out, _ = timed(spark, build)
         print(
             json.dumps(
                 {
@@ -72,43 +65,26 @@ def main() -> None:
                     "factor": args.factor,
                     "rows_in": rows_in,
                     "rows_out": rows_out,
-                    "sec": round(time.perf_counter() - t0, 2),
+                    "sec": sec,
                 }
             ),
             flush=True,
         )
 
-    run(
-        "chisq_top75",
-        chi2_topk(docs.withColumnRenamed("lang", "category")),
-    )
+    run("chisq_top75", chisq)
     run(
         "dedup_exact_groups_amplified",
-        docs.groupBy(F.md5(F.encode("text", "UTF-8")).alias("h")).agg(
+        lambda: docs.groupBy(F.md5(F.encode("text", "UTF-8")).alias("h")).agg(
             F.count("*").alias("n")
         ),
     )
-    run("minhash_candidates_pairwise", minhash_candidate_pairs(docs))
-
+    run("minhash_candidates_pairwise", lambda: minhash_candidate_pairs(docs))
     # The scale path: group labels via label propagation — linear in the
     # doc-bucket edge count with convergence early-exit, immune to the
     # quadratic pair blowup above (note rows_out: groups vs pairs).
-    from dic_a1_spark.operators.dedup import minhash_label_groups
-
-    t0 = time.perf_counter()
-    labels = minhash_label_groups(docs)
-    n_groups = labels.select("group_id").distinct().count()
-    print(
-        json.dumps(
-            {
-                "op": "minhash_groups_labelprop",
-                "factor": args.factor,
-                "rows_in": rows_in,
-                "rows_out": n_groups,
-                "sec": round(time.perf_counter() - t0, 2),
-            }
-        ),
-        flush=True,
+    run(
+        "minhash_groups_labelprop",
+        lambda: minhash_label_groups(docs).select("group_id").distinct(),
     )
     spark.stop()
 

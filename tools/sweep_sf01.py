@@ -73,7 +73,7 @@ def main() -> int:
         # decontam_bloom arrays, ml_ops features) and can't unpersist
         # before their action runs; dropping cached blocks between
         # entries keeps a 150-query sweep from accumulating
-        # MEMORY_AND_DISK blocks (same hygiene as tools/scale_bench.py).
+        # MEMORY_AND_DISK blocks (same hygiene as dic_a1_spark.runner.timed).
         spark.catalog.clearCache()
         status = "ok" if "err" not in entry else "FAIL"
         print(f"# {name}: {status} ({entry['sec']}s)", file=sys.stderr, flush=True)
