@@ -84,17 +84,35 @@ def assert_spark_output_types(sdf, name: str = "?") -> None:
     )
 
 
+# (oracle SQL, schemas of the views it reads) -> [(column, DuckDB type)].
+# The result types are a function of those two alone, and binding a
+# generated oracle (xxh64-in-SQL) costs DuckDB 10-25 s, so each pair is
+# bound for its types once per session instead of once per comparison.
+_RESULT_TYPES: dict = {}
+
+
+def _result_types(con: duckdb.DuckDBPyConnection, sql: str) -> list:
+    schemas = con.execute(
+        "SELECT table_name, column_name, data_type"
+        " FROM information_schema.columns ORDER BY ALL"
+    ).fetchall()
+    key = (sql, tuple(schemas))
+    if key not in _RESULT_TYPES:
+        rel = con.sql(sql)
+        _RESULT_TYPES[key] = [(c, str(t)) for c, t in zip(rel.columns, rel.types)]
+    return _RESULT_TYPES[key]
+
+
 def assert_oracle_types(con: duckdb.DuckDBPyConnection, sql: str, name: str = "?") -> None:
     """Fail if the oracle SQL produces a result type Spark cannot emit.
 
     Mirrors the driver's typed value-hash: values may match while types
     diverge, so oracles must CAST integer sums to BIGINT explicitly.
     """
-    rel = con.sql(sql)
     hazards = [
-        (c, str(t))
-        for c, t in zip(rel.columns, rel.types)
-        if str(t) in _HAZARD_DUCK_TYPES
+        (c, t)
+        for c, t in _result_types(con, sql)
+        if t in _HAZARD_DUCK_TYPES
     ]
     assert not hazards, (
         f"{name}: oracle result types unrepresentable in Spark (driver's typed "

@@ -189,18 +189,22 @@ def test_output_files_byte_stable_across_shuffle_partitions(spark, fixture_paths
     assert runs[0] == runs[1]
 
 
-def _sql_executions(spark) -> dict[int, str]:
-    """{execution id: final physical plan text} from Spark's SQL status
-    store, after the listener bus has delivered every event. The store is
-    a private API (the same one perfbench reads); this is the one place
-    that touches it, so a Spark upgrade that changes it fails here."""
+def _sql_executions(spark) -> dict:
+    """{execution id: execution record} from Spark's SQL status store,
+    after the listener bus has delivered every event. A record's
+    physicalPlanDescription() is its final physical plan text; read it
+    only for the executions of interest, because the store keeps the
+    whole session's plans and moving all of them over py4j takes tens of
+    seconds. The store is a private API (the same one perfbench reads);
+    this is the one place that touches it, so a Spark upgrade that
+    changes it fails here."""
     spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
     store = spark._jsparkSession.sharedState().statusStore()
     it = store.executionsList().iterator()
     out = {}
     while it.hasNext():
         e = it.next()
-        out[e.executionId()] = e.physicalPlanDescription()
+        out[e.executionId()] = e
     return out
 
 
@@ -215,7 +219,11 @@ def test_run_pipeline_is_one_scan_one_action(spark, fixture_paths, tmp_path):
     persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
     seen = _sql_executions(spark)
     run_pipeline(spark, reviews_path, str(tmp_path / "out"), stopwords_path=stopwords_path)
-    new = {i: plan for i, plan in _sql_executions(spark).items() if i not in seen}
+    new = {
+        i: e.physicalPlanDescription()
+        for i, e in _sql_executions(spark).items()
+        if i not in seen
+    }
 
     assert len(new) == 1, f"expected one SQL execution, got {len(new)}"
     (plan,) = new.values()
