@@ -530,20 +530,9 @@ def label_propagate(docs: DataFrame, edges: DataFrame, n_iter: int = 3) -> DataF
     # Persist the doc-bucket graph: every iteration joins against it, and
     # without the persist each join would recompute the whole
     # tokenize->signature chain (iterative algorithms are THE case for
-    # explicit materialization in Spark).
-    #
-    # r12 measurement note — pre-partitioned DOUBLE persistence (one copy
-    # repartition("doc_id"), one repartition("bucket"), so the cached
-    # InMemoryTableScan partitioning would absorb both per-iteration join
-    # exchanges, guide §2.4) was implemented and A/B-measured here:
-    # interleaved sf0.1 medians came out 0.3-0.8 s SLOWER per groups
-    # query (simhash 4.15 -> 4.64, minhash_md5 3.21 -> 3.48, minhash
-    # 1.55 -> 2.31): the two up-front materialization shuffles cost more
-    # than the per-iteration exchanges they save, because the early-exit
-    # loop runs few rounds and AQE already coalesces the tiny per-round
-    # exchanges. At 100 TB the trade flips (per-round edge re-shuffles
-    # dominate); the bucket-key copy is the first thing to restore when
-    # edges stop fitting the shuffle budget. Kept single-copy.
+    # explicit materialization in Spark). One copy: a second copy
+    # partitioned by bucket measured slower (OPTIMIZATION_r13.md,
+    # "Rejected alternatives").
     edges = edges.persist(StorageLevel.MEMORY_AND_DISK)
 
     # Labels are LINEAGE-TRUNCATED each iteration (eager localCheckpoint),
@@ -606,6 +595,63 @@ def label_propagate(docs: DataFrame, edges: DataFrame, n_iter: int = 3) -> DataF
         if changed == 0:
             break
     return labels.select("doc_id", F.col("label").alias("group_id"))
+
+
+def min_label_loop(
+    adj: DataFrame, labels: DataFrame, max_rounds: int
+) -> tuple[DataFrame, bool]:
+    """((node, label), converged): up to max_rounds rounds of
+    label(v) <- min label over v's closed neighbourhood.
+
+    ``adj`` is (src, dst) in both directions and carries one self-loop
+    per node, so a round is one join and one aggregate. Labels never
+    increase, so an unchanged label sum means no label changed: the loop
+    stops there and reports converged. The same sum is the round's one
+    action, which materializes its lazy local checkpoint, so each round
+    is one job. Stopping early skips only rounds that change nothing,
+    so the labels equal those of max_rounds unrolled rounds, the form
+    the pair-graph oracles state. An empty graph converges with no rows.
+
+    ``adj`` is coalesced to one partition per core (every round scans it,
+    and each extra task is launch cost with a few rows behind it),
+    persisted for the loop, and released before the return: by then
+    every round's checkpoint has been materialized."""
+    from pyspark import StorageLevel
+
+    cores = adj.sparkSession.sparkContext.defaultParallelism
+    adj = adj.coalesce(cores).persist(StorageLevel.MEMORY_AND_DISK)
+    prev_sum, converged = None, False
+    for _ in range(max_rounds):
+        labels = (
+            adj.join(labels.withColumnRenamed("node", "src"), "src")
+            .groupBy(F.col("dst").alias("node"))
+            .agg(F.min("label").alias("label"))
+            .localCheckpoint(eager=False)
+        )
+        cur_sum = labels.agg(
+            F.sum(F.col("label").cast("decimal(38,0)"))
+        ).collect()[0][0]
+        if cur_sum == prev_sum:
+            converged = True
+            break
+        prev_sum = cur_sum
+    adj.unpersist()
+    return labels, converged
+
+
+def unpersist_plan(df: DataFrame) -> None:
+    """Unpersist every persisted frame in df's plan, df included. A
+    frame persisted twice shares one cache entry, and this releases it
+    for both holders, as DataFrame.unpersist does."""
+    jspark = df.sparkSession._jsparkSession
+    cache = jspark.sharedState().cacheManager()
+    todo = [df._jdf.queryExecution().analyzed()]
+    while todo:
+        plan = todo.pop()
+        if cache.lookupCachedData(jspark, plan).isDefined():
+            cache.uncacheQuery(jspark, plan, False, False)
+        children = plan.children()
+        todo.extend(children.apply(i) for i in range(children.size()))
 
 
 def minhash_label_groups(docs: DataFrame, n_iter: int = 3) -> DataFrame:
@@ -1028,6 +1074,43 @@ lp{k} AS MATERIALIZED (
 )"""
         )
     parts.append(f"\nSELECT doc_id, label AS group_id FROM lp{n_iter}")
+    return "".join(parts)
+
+
+def _pair_graph_lp_sql(
+    pairs_sql: str, a: str, b: str, node: str, table: str, n_iter: int
+) -> str:
+    """Unrolled min-label propagation over the pair graph whose edges are
+    columns `a`, `b` of `pairs_sql`: n_iter iterations of
+    label(v) <- min(label(v), min neighbour label) over every `node` of
+    `table`, each one CTE (no recursion: both sides run the same fixed
+    depth, see min_label_loop). Nodes outside the graph keep their own
+    id."""
+    parts = [
+        f"""
+        WITH pairs AS MATERIALIZED (SELECT {a}, {b} FROM ({pairs_sql})),
+        edges AS MATERIALIZED (
+            SELECT {a} AS src, {b} AS dst FROM pairs
+            UNION ALL
+            SELECT {b} AS src, {a} AS dst FROM pairs
+        ),
+        lp0 AS MATERIALIZED (SELECT {node}, {node} AS label FROM {table})"""
+    ]
+    for k in range(1, n_iter + 1):
+        parts.append(
+            f""",
+        lp{k} AS MATERIALIZED (
+            SELECT d.{node},
+                   least(d.label, coalesce(m.minlab, d.label)) AS label
+            FROM lp{k - 1} d
+            LEFT JOIN (
+                SELECT e.src AS {node}, min(p.label) AS minlab
+                FROM edges e JOIN lp{k - 1} p ON p.{node} = e.dst
+                GROUP BY e.src
+            ) m ON m.{node} = d.{node}
+        )"""
+        )
+    parts.append(f"\n        SELECT {node}, label AS group_id FROM lp{n_iter}")
     return "".join(parts)
 
 

@@ -46,7 +46,10 @@ from dic_a1_spark.operators.dedup import (
     MINHASH_HASHES,
     MINHASH_ROWS,
     _SHINGLE_CTE,
+    _pair_graph_lp_sql,
     _with_shingle_arrays,
+    min_label_loop,
+    unpersist_plan,
 )
 from dic_a1_spark.sources.readers import load_table
 
@@ -234,50 +237,44 @@ def dedup_minhash_md5_pairs(
     )
 
 
-# Label-propagation budget for the groups form. Both the Spark query and
-# the unrolled oracle run EXACTLY this many min-label pushes (Spark's
-# early-exit only skips iterations that would be no-ops, so converged-or-
-# not the final labels are identical on both sides).
+# Min-label rounds of the groups form: the oracle unrolls this depth, and
+# the Spark loop's early stop skips only rounds that change nothing.
 LP_ITERS = 8
+
+
+def _pair_groups(
+    spark: SparkSession, sf_dir: str, pairs: DataFrame, n_iter: int
+) -> DataFrame:
+    """(doc_id, group_id): connected components over the verified pair
+    graph `pairs` (doc1, doc2), by dedup.min_label_loop at the fixed
+    depth n_iter. Each document carries a self-loop, so every document
+    keeps one row and unpaired documents keep their own id. The budget
+    does not raise when spent: the oracle unrolls exactly that depth.
+
+    The loop's last action materializes the labels, so the frames the
+    pair builder persisted are released before the return."""
+    docs = load_table(spark, sf_dir, "documents")
+    # One scan of the pairs emits both directions.
+    adj = pairs.selectExpr(
+        "inline(array(struct(doc1 AS src, doc2 AS dst),"
+        " struct(doc2 AS src, doc1 AS dst)))"
+    ).unionByName(docs.selectExpr("doc_id AS src", "doc_id AS dst"))
+    ids = docs.selectExpr("doc_id AS node", "doc_id AS label")
+    labels, _ = min_label_loop(adj, ids, n_iter)
+    unpersist_plan(pairs)
+    return labels.selectExpr("node AS doc_id", "label AS group_id")
 
 
 def dedup_minhash_md5_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, group_id): connected components over the VERIFIED md5-LSH
-    near-dup pair graph — the first groups-family query under the FULL
-    driver value-hash gate.
-
-    Every other groups query (MinHash/SimHash/embedding label
-    propagation) is rows-only because its hash family (xxhash64) or its
-    float arithmetic has no DuckDB twin. This one closes that gap: the
-    edge set is dedup_minhash_md5_pairs (hash-certified, integer-exact in
-    both engines), each verified pair becomes a 2-member bucket keyed by
-    the injective struct(doc1, doc2), and dedup.label_propagate runs
-    LP_ITERS bipartite min-label pushes. With 2-member buckets one push
-    is exactly label(d) <- min(label(d), min over neighbors of their
-    labels), which the oracle restates as LP_ITERS unrolled SQL
-    iterations — deterministic integer arithmetic end to end, so the
-    driver's typed value-hash certifies the label-propagation logic that
-    the whole groups ladder shares. Docs that never paired keep their own
-    label (singleton groups), one row per document."""
-    from pyspark import StorageLevel
-
-    from dic_a1_spark.operators.dedup import label_propagate
-
-    d = load_table(spark, sf_dir, "documents")
-    # Verified pairs persisted (r13, guide §2.4): the edge union reads
-    # the pair frame TWICE (doc1 side + doc2 side), so without the
-    # persist the whole band-join + Jaccard-verification chain runs
-    # twice before label propagation even starts.
-    pairs = dedup_minhash_md5_pairs(spark, sf_dir).persist(
-        StorageLevel.MEMORY_AND_DISK
+    near-dup pair graph (dedup_minhash_md5_pairs, integer-exact in both
+    engines), LP_ITERS min-label rounds deep. Its oracle restates the
+    rounds as LP_ITERS unrolled SQL iterations, so the driver's typed
+    value-hash certifies the min-label loop that this query,
+    dedup_simhash_md5_groups and embedding_neardup_groups share."""
+    return _pair_groups(
+        spark, sf_dir, dedup_minhash_md5_pairs(spark, sf_dir), LP_ITERS
     )
-    bucket = F.struct(F.col("doc1"), F.col("doc2"))
-    edges = pairs.select(
-        F.col("doc1").alias("doc_id"), bucket.alias("bucket")
-    ).unionByName(
-        pairs.select(F.col("doc2").alias("doc_id"), bucket.alias("bucket"))
-    )
-    return label_propagate(d.select("doc_id"), edges, n_iter=LP_ITERS)
 
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
@@ -342,43 +339,14 @@ ORACLES: dict[str, str] = {
 }
 
 
-def _groups_oracle() -> str:
-    """Unrolled fixed-iteration min-label propagation over the verified
-    pair graph — the pairs oracle embedded as a derived table, then
-    LP_ITERS iterations of label(d) <- min(label(d), min(neighbor
-    labels)), each as one CTE (no recursion: the iteration count is a
-    fixed constant on both sides, and unrolled CTEs keep the SQL inside
-    DuckDB's plain aggregate/join surface)."""
-    pairs_sql = ORACLES["dedup_minhash_md5_pairs"]
-    parts = [
-        f"""
-        WITH pairs AS MATERIALIZED (SELECT doc1, doc2 FROM ({pairs_sql})),
-        edges AS MATERIALIZED (
-            SELECT doc1 AS src, doc2 AS dst FROM pairs
-            UNION ALL
-            SELECT doc2 AS src, doc1 AS dst FROM pairs
-        ),
-        lp0 AS MATERIALIZED (SELECT doc_id, doc_id AS label FROM documents)"""
-    ]
-    for k in range(1, LP_ITERS + 1):
-        parts.append(
-            f""",
-        lp{k} AS MATERIALIZED (
-            SELECT d.doc_id,
-                   least(d.label, coalesce(m.minlab, d.label)) AS label
-            FROM lp{k - 1} d
-            LEFT JOIN (
-                SELECT e.src AS doc_id, min(p.label) AS minlab
-                FROM edges e JOIN lp{k - 1} p ON p.doc_id = e.dst
-                GROUP BY e.src
-            ) m ON m.doc_id = d.doc_id
-        )"""
-        )
-    parts.append(f"\n        SELECT doc_id, label AS group_id FROM lp{LP_ITERS}")
-    return "".join(parts)
-
-
-ORACLES["dedup_minhash_md5_groups"] = _groups_oracle()
+ORACLES["dedup_minhash_md5_groups"] = _pair_graph_lp_sql(
+    ORACLES["dedup_minhash_md5_pairs"],
+    "doc1",
+    "doc2",
+    "doc_id",
+    "documents",
+    LP_ITERS,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -506,43 +474,18 @@ def dedup_simhash_md5_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # differing by one bit link transitively), so its components have larger
 # diameter: measured convergence is 13 synchronous min-label rounds at
 # sf0.001/sf0.01/sf0.1 vs the minhash family's < 8. 16 gives margin;
-# Spark's early-exit skips converged iterations and the oracle's extra
-# unrolled iterations are no-ops, so both sides still emit identical
-# labels at any corpus that converges within the budget.
-#
-# Cost profile (r10 drift check, VERDICT r9 item 5): isolated sf0.1
-# median 13.5 s across cold-cache repeats, STABLE — the r8 sweep's
-# 7.2 s was the outlier, not r9's 16.9. The wall-clock is ~13 LP rounds
-# x the per-round scheduling floor plus the banded md5 pair join; both
-# are the certification price (md5 restated in SQL both engines), and
-# the production twin (dedup_simhash_groups, xxhash64) carries the
-# bench headline instead.
+# Spark's early stop skips converged rounds and the oracle's extra
+# unrolled rounds are no-ops, so both sides emit identical labels.
 SIMHASH_LP_ITERS = 16
 
 
 def dedup_simhash_md5_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, group_id): connected components over the verified
-    md5-SimHash pair graph — same construction (and same unrolled
-    fixed-iteration oracle device) as dedup_minhash_md5_groups, so the
-    driver gate certifies label propagation over BOTH sketch families'
-    edges."""
-    from pyspark import StorageLevel
-
-    from dic_a1_spark.operators.dedup import label_propagate
-
-    d = load_table(spark, sf_dir, "documents")
-    # Verified pairs persisted (r13): the edge union reads the pair
-    # frame twice — see dedup_minhash_md5_groups.
-    pairs = dedup_simhash_md5_pairs(spark, sf_dir).persist(
-        StorageLevel.MEMORY_AND_DISK
+    md5-SimHash pair graph, the dedup_minhash_md5_groups body at
+    SIMHASH_LP_ITERS rounds."""
+    return _pair_groups(
+        spark, sf_dir, dedup_simhash_md5_pairs(spark, sf_dir), SIMHASH_LP_ITERS
     )
-    bucket = F.struct(F.col("doc1"), F.col("doc2"))
-    edges = pairs.select(
-        F.col("doc1").alias("doc_id"), bucket.alias("bucket")
-    ).unionByName(
-        pairs.select(F.col("doc2").alias("doc_id"), bucket.alias("bucket"))
-    )
-    return label_propagate(d.select("doc_id"), edges, n_iter=SIMHASH_LP_ITERS)
 
 
 QUERIES["dedup_simhash_md5_pairs"] = dedup_simhash_md5_pairs
@@ -595,38 +538,11 @@ ORACLES["dedup_simhash_md5_pairs"] = f"""
 """
 
 
-def _simhash_groups_oracle() -> str:
-    """The minhash groups device, over the simhash pair SQL, unrolled to
-    SIMHASH_LP_ITERS (the chainier graph needs 13 measured rounds)."""
-    pairs_sql = ORACLES["dedup_simhash_md5_pairs"]
-    parts = [
-        f"""
-        WITH pairs AS MATERIALIZED (SELECT doc1, doc2 FROM ({pairs_sql})),
-        edges AS MATERIALIZED (
-            SELECT doc1 AS src, doc2 AS dst FROM pairs
-            UNION ALL
-            SELECT doc2 AS src, doc1 AS dst FROM pairs
-        ),
-        lp0 AS MATERIALIZED (SELECT doc_id, doc_id AS label FROM documents)"""
-    ]
-    for k in range(1, SIMHASH_LP_ITERS + 1):
-        parts.append(
-            f""",
-        lp{k} AS MATERIALIZED (
-            SELECT d.doc_id,
-                   least(d.label, coalesce(m.minlab, d.label)) AS label
-            FROM lp{k - 1} d
-            LEFT JOIN (
-                SELECT e.src AS doc_id, min(p.label) AS minlab
-                FROM edges e JOIN lp{k - 1} p ON p.doc_id = e.dst
-                GROUP BY e.src
-            ) m ON m.doc_id = d.doc_id
-        )"""
-        )
-    parts.append(
-        f"\n        SELECT doc_id, label AS group_id FROM lp{SIMHASH_LP_ITERS}"
-    )
-    return "".join(parts)
-
-
-ORACLES["dedup_simhash_md5_groups"] = _simhash_groups_oracle()
+ORACLES["dedup_simhash_md5_groups"] = _pair_graph_lp_sql(
+    ORACLES["dedup_simhash_md5_pairs"],
+    "doc1",
+    "doc2",
+    "doc_id",
+    "documents",
+    SIMHASH_LP_ITERS,
+)

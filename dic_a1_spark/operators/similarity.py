@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType
 
+from dic_a1_spark.operators.dedup import _pair_graph_lp_sql, min_label_loop
 from dic_a1_spark.sources.readers import load_table, table_rowcount
 
 N_QUERIES = 10       # vec_id < 10 act as the query set
@@ -737,8 +738,8 @@ def embedding_neardup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     similarity matrix once and union-finds the >= threshold adjacency
     locally (see _neardup_block_component_edges — identical components to
     the pair graph, since every candidate pair lives inside a shared
-    block), then dedup.label_propagate stitches blocks through their
-    shared multi-probe members and early-exits once labels stop changing.
+    block), then dedup.min_label_loop stitches blocks through their
+    shared multi-probe members and stops once labels stop changing.
     The r3 composition scored every pair exactly (69 s / 2K vectors) and
     the r4 pair-edge rebase was still output-quadratic on dup-heavy data
     (4.56M verified pairs at the 100K amplified corpus); this form is
@@ -762,7 +763,12 @@ def embedding_neardup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     EMB_LP_ITERS min-label iterations over the verified pair graph (the
     lsh.dedup_minhash_md5_groups device); Spark iterates the contracted
     graph to convergence, the oracle past the measured convergence
-    depth, so both equal the true pair-graph components."""
+    depth, so both equal the true pair-graph components.
+
+    The loop releases its adjacency, but `edges` stays persisted: the
+    returned frame folds the labels onto docs through it lazily, so it
+    can only be released after the caller's action (ROADMAP direction 4,
+    a per-query scope)."""
     from pyspark import StorageLevel
 
     e = load_table(spark, sf_dir, "embeddings")
@@ -770,12 +776,10 @@ def embedding_neardup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     # count(*) — saves one corpus action per invocation (r9).
     n = table_rowcount(sf_dir, "embeddings")
     k = max(IVF_K, min(n, n * NEARDUP_NPROBE // 200, 1500))
-    # One partition per core for every frame of the label loop: the
-    # edges and the contracted graph hold a few rows per vector, every
-    # round scans them, and each extra task is launch cost with nothing
-    # to compute. Edges leave the scoring stage in its per-block
-    # partitioning; spread them over the cores before the persist —
-    # three consumers below scan the cached frame.
+    # Edges leave the scoring stage in its per-block partitioning; spread
+    # them over one partition per core (a few rows per vector, and each
+    # extra task is launch cost with nothing to compute) before the
+    # persist — three consumers below scan the cached frame.
     cores = spark.sparkContext.defaultParallelism
     edges = (
         _neardup_block_component_edges(spark, sf_dir, ivf_k=k)
@@ -783,85 +787,37 @@ def embedding_neardup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
 
-    # Bucket adjacency via shared docs: each doc links the <= nprobe
-    # buckets it belongs to pairwise, then distinct — the contraction.
-    per_doc = edges.groupBy("doc_id").agg(
-        F.array_sort(F.collect_set("bucket")).alias("bs")
-    )
-    bucket_edges = (
-        per_doc.where(F.size("bs") >= 2)
-        .select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(bs, (x, i) ->"
-                    " transform(slice(bs, i + 2, size(bs)),"
-                    " y -> named_struct('src', x, 'dst', y))))"
-                )
-            ).alias("p")
+    # Min-label propagation to convergence (dedup.min_label_loop) on the
+    # contracted graph: each doc links the <= nprobe buckets it belongs
+    # to, every ordered pair and every bucket to itself, then distinct.
+    # Every bucket root is a member doc, so a bucket's converged label is
+    # its component's min doc id. Pointer jumping did not cut the rounds
+    # (OPTIMIZATION_r13.md, "Rejected alternatives").
+    adj = (
+        edges.groupBy("doc_id")
+        .agg(F.collect_set("bucket").alias("bs"))
+        .selectExpr(
+            "inline(flatten(transform(bs, x ->"
+            " transform(bs, y -> named_struct('src', x, 'dst', y)))))"
         )
-        .select(F.col("p.src").alias("src"), F.col("p.dst").alias("dst"))
         .distinct()
     )
-    # Both directions; persisted once self-loops are attached below (sym
-    # itself has a single consumer now, so the persist lives on symx).
-    sym = bucket_edges.unionByName(
-        bucket_edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    ids = (
+        edges.select("bucket")
+        .distinct()
+        .selectExpr("bucket AS node", "bucket.root AS label")
     )
-
-    # Min-label propagation on the contracted graph, to convergence.
-    # r13 restructure (guide §2.4): the adjacency carries an explicit
-    # SELF-LOOP per bucket, so one round is a single join + groupBy —
-    # min over the CLOSED neighborhood IS least(own label, neighbor min),
-    # the exact per-round values of the former nbr-min + left-join form,
-    # with the second join and the `_old` bookkeeping gone. Convergence
-    # is detected from the label sum (exact decimal — labels are doc ids,
-    # non-increasing per round, and at least one strictly decreases in
-    # any non-converged round, so sum-unchanged <=> no label changed),
-    # which rides the SAME action that materializes the round's lazy
-    # checkpoint: one job per round instead of the former two.
-    # (Pointer jumping / path compression was also implemented and
-    # simulated on the real sf0.1 contracted graph: convergence stayed at
-    # 8 rounds — the slow tail is scattered 1-2-bucket updates, not one
-    # long pointer chain — while its extra groupBy+join slowed every
-    # round. Rejected by measurement.)
-    # symx unions three shuffle outputs (sym's two halves and the
-    # self-loops), so uncoalesced it would hold three times the shuffle
-    # partition count and every round would scan it in that many tasks.
-    buckets = edges.select("bucket").distinct()
-    symx = (
-        sym.unionByName(
-            buckets.select(F.col("bucket").alias("src"), F.col("bucket").alias("dst"))
-        )
-        .coalesce(cores)
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    labels, converged = min_label_loop(
+        adj, ids.localCheckpoint(), EMB_LP_MAX_ROUNDS
     )
-    labels = buckets.select(
-        "bucket", F.col("bucket.root").alias("label")
-    ).localCheckpoint()
-    prev_sum = None
-    for _ in range(EMB_LP_MAX_ROUNDS):
-        new_labels = (
-            symx.join(labels, symx.src == labels.bucket)
-            .groupBy("dst")
-            .agg(F.min("label").alias("label"))
-            .select(F.col("dst").alias("bucket"), "label")
-            .localCheckpoint(eager=False)  # materialized by the agg below
-        )
-        cur_sum = new_labels.agg(
-            F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
-        ).collect()[0][0]
-        labels = new_labels
-        if cur_sum == prev_sum:
-            break
-        prev_sum = cur_sum
-    else:
+    if not converged:
         raise RuntimeError(
             "embedding_neardup_groups: label propagation did not converge"
             f" within EMB_LP_MAX_ROUNDS={EMB_LP_MAX_ROUNDS} rounds"
         )
 
     doc_group = (
-        edges.join(labels, "bucket")
+        edges.join(labels.withColumnRenamed("node", "bucket"), "bucket")
         .groupBy("doc_id")
         .agg(F.min("label").alias("grp"))
     )
@@ -1124,43 +1080,11 @@ _FAST_PAIRS_SQL = f"""
 ORACLES["embedding_neardup_blocked_fast"] = _FAST_PAIRS_SQL
 
 
-def _neardup_groups_oracle() -> str:
-    """Unrolled fixed-iteration min-label propagation over the verified
-    fast-pair graph (the lsh.py dedup_minhash_md5_groups device):
-    label(v) <- min(label(v), min neighbor labels), EMB_LP_ITERS times.
-    Spark's block-local union-find + contracted stitching converges to
-    the pair-graph components (every candidate pair lives inside a
-    shared block), so both sides equal the true components once the
-    unroll depth covers the min-label convergence (measured <= 8 on the
-    driver corpora; 16 unrolled)."""
-    parts = [
-        f"""
-        WITH pairs AS MATERIALIZED (SELECT id1, id2 FROM ({_FAST_PAIRS_SQL})),
-        edges AS MATERIALIZED (
-            SELECT id1 AS src, id2 AS dst FROM pairs
-            UNION ALL
-            SELECT id2 AS src, id1 AS dst FROM pairs
-        ),
-        lp0 AS MATERIALIZED (SELECT vec_id, vec_id AS label FROM embeddings)"""
-    ]
-    for k in range(1, EMB_LP_ITERS + 1):
-        parts.append(
-            f""",
-        lp{k} AS MATERIALIZED (
-            SELECT d.vec_id,
-                   least(d.label, coalesce(m.minlab, d.label)) AS label
-            FROM lp{k - 1} d
-            LEFT JOIN (
-                SELECT e.src AS vec_id, min(p.label) AS minlab
-                FROM edges e JOIN lp{k - 1} p ON p.vec_id = e.dst
-                GROUP BY e.src
-            ) m ON m.vec_id = d.vec_id
-        )"""
-        )
-    parts.append(
-        f"\n        SELECT vec_id, label AS group_id FROM lp{EMB_LP_ITERS}"
-    )
-    return "".join(parts)
-
-
-ORACLES["embedding_neardup_groups"] = _neardup_groups_oracle()
+# The groups oracle: the min-label device of lsh.dedup_minhash_md5_groups
+# over the verified fast-pair graph. Spark's block-local union-find plus
+# contracted stitching converges to the pair-graph components (every
+# candidate pair lives inside a shared block), so both sides equal the
+# true components once the unroll covers the convergence depth.
+ORACLES["embedding_neardup_groups"] = _pair_graph_lp_sql(
+    _FAST_PAIRS_SQL, "id1", "id2", "vec_id", "embeddings", EMB_LP_ITERS
+)

@@ -109,3 +109,22 @@ def _md5_minhash_signatures_fold(hashed_shingles: DataFrame) -> DataFrame:
             F.array(*[f"h{i}" for i in range(MINHASH_HASHES)]).alias("sig"),
         )
     )
+
+
+# --- Min-label rounds -------------------------------------------------------
+
+def min_label_rounds(
+    edges: list[tuple[int, int]], nodes: list[int], k: int
+) -> dict[int, int]:
+    """Labels after exactly k synchronous rounds of
+    label(v) <- min(label(v), min neighbour label), from label(v) = v, over
+    the undirected graph `edges` on `nodes`: the fixed-depth recurrence
+    the pair-graph groups oracles unroll."""
+    nbrs: dict[int, set[int]] = {v: set() for v in nodes}
+    for a, b in edges:
+        nbrs[a].add(b)
+        nbrs[b].add(a)
+    lab = {v: v for v in nodes}
+    for _ in range(k):
+        lab = {v: min([lab[v]] + [lab[u] for u in nbrs[v]]) for v in nodes}
+    return lab

@@ -229,3 +229,38 @@ def test_minhash_sig_batch_matches_fold_form(spark):
     got = {r["doc_id"]: r["sig"] for r in hostile.select("doc_id", sig("hs").alias("sig")).collect()}
     exp = {r["doc_id"]: r["sig"] for r in reference_impl._minhash_signatures_fold(hostile).collect()}
     assert got == exp
+
+
+def _min_label_loop_rows(spark, edges, nodes, max_rounds):
+    adj = spark.createDataFrame(
+        edges
+        + [(b, a) for a, b in edges]
+        + [(v, v) for v in nodes],
+        "src long, dst long",
+    )
+    ids = spark.createDataFrame([(v, v) for v in nodes], "node long, label long")
+    labels, converged = dedup.min_label_loop(adj, ids, max_rounds)
+    return {r["node"]: r["label"] for r in labels.collect()}, converged
+
+
+def test_min_label_loop_keeps_the_fixed_depth_contract(spark):
+    """A path whose minimum id sits at one end needs one round per hop:
+    below the diameter the loop gives exactly the depth-k labels and
+    reports no convergence; with rounds to spare it gives one label and
+    reports convergence. The md5 groups oracles rely on both."""
+    nodes = [5, 9, 2, 8, 6, 3, 0]  # a path, 6 hops from end to end
+    edges = list(zip(nodes, nodes[1:]))
+    for k in (1, 3):
+        got, converged = _min_label_loop_rows(spark, edges, nodes, k)
+        assert got == reference_impl.min_label_rounds(edges, nodes, k)
+        assert converged is False
+        assert len(set(got.values())) > 1
+    got, converged = _min_label_loop_rows(spark, edges, nodes, 3 * len(nodes))
+    assert got == {v: 0 for v in nodes}
+    assert converged is True
+
+
+def test_min_label_loop_on_an_empty_graph_converges_with_no_rows(spark):
+    got, converged = _min_label_loop_rows(spark, [], [], 5)
+    assert got == {}
+    assert converged is True

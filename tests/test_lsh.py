@@ -72,8 +72,10 @@ def test_signatures_map_only(spark):
 @pytest.mark.parametrize("sf_dir", [SF_SMOKE, SF_CORRECT], ids=["sf0.001", "sf0.01"])
 def test_groups_match_oracle(spark, sf_dir):
     """The unrolled fixed-iteration label-propagation oracle must agree
-    with label_propagate exactly — the hash certificate for the logic the
-    whole groups ladder shares."""
+    with dedup.min_label_loop exactly — the hash certificate for the loop
+    the md5 groups and embedding_neardup_groups share. (label_propagate
+    is certified by the xxh64 oracles of dedup_minhash_groups and
+    dedup_simhash_groups.)"""
     compare(
         spark,
         lsh.ORACLES["dedup_minhash_md5_groups"],
@@ -81,6 +83,15 @@ def test_groups_match_oracle(spark, sf_dir):
         sf_dir,
         "dedup_minhash_md5_groups",
     )
+
+
+def test_md5_groups_release_what_they_persist(spark):
+    """The labels are materialized before the query returns, so nothing
+    it persisted (pairs, their signatures and shingle arrays, the loop's
+    adjacency) stays in the session's cache."""
+    spark.catalog.clearCache()
+    lsh.dedup_minhash_md5_groups(spark, SF_SMOKE).collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_groups_cover_pairs_one_row_per_doc(spark):
