@@ -18,7 +18,9 @@ Reference mapping (SURVEY.md §2.1):
 Scale notes: ``spark.read.parquet`` scans are splittable and prune both
 columns and row-groups; at 100 TB the same call works unchanged — predicate
 pushdown and partition pruning come from expressing filters declaratively
-on the returned DataFrame, not from anything this module does.
+on the returned DataFrame, not from anything this module does. The schema
+memo of ``load_table`` stats local files; on an object store it would key
+on the catalog's table version instead.
 """
 
 from __future__ import annotations
@@ -69,17 +71,57 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     int64 (legacy conf, runtime-settable) and convert to microsecond
     TIMESTAMP_NTZ via integer division — same truncation DuckDB applies
     when coercing ns->us, so oracle comparisons line up exactly.
+
+    Each table's schema is inferred once per process (one Spark job that
+    reads the footers) and memoized; later calls read through
+    ``spark.read.schema(memo).parquet(path)``, which starts no job. The
+    memo key is the file's identity (``_file_identity``: absolute path,
+    inode, size and ``mtime_ns``, of every file under a directory too)
+    plus every ``*parquet*`` SQL conf currently set (``inferTimestampNTZ``,
+    ``nanosAsLong``, ``binaryAsString``, ...), so a rewritten file or a
+    flipped conf gets a fresh inference. Every call still returns a new
+    relation with fresh attribute ids, so self-joins behave as before.
     """
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
+        df = _read_parquet(spark, path)
         if dict(df.dtypes).get("ts") == "bigint":
             df = df.withColumn(
                 "ts", F.expr("cast(timestamp_micros(ts div 1000) as timestamp_ntz)")
             )
         return df
-    return spark.read.parquet(path)
+    return _read_parquet(spark, path)
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    # The set confs as one string ("key -> value" lines): one py4j call,
+    # where spark.conf.getAll pays a round trip per entry (~20 ms).
+    confs = spark.conf._jconf.getAll().mkString("\n").split("\n")
+    key = (_file_identity(path), tuple(sorted(c for c in confs if "parquet" in c)))
+    schema = _SCHEMA_MEMO.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMA_MEMO[key] = df.schema
+    return df
+
+
+def _file_identity(path: str) -> tuple:
+    """(absolute path, inode, size, mtime_ns) of ``path`` and, for a
+    directory (a table Spark wrote), of every file under it: a rewrite at
+    the same path changes at least one of them."""
+    path = os.path.abspath(path)
+    paths = [path]
+    if os.path.isdir(path):
+        paths += sorted(
+            os.path.join(root, f) for root, _, files in os.walk(path) for f in files
+        )
+    out = []
+    for p in paths:
+        st = os.stat(p)
+        out.append((p, st.st_ino, st.st_size, st.st_mtime_ns))
+    return tuple(out)
 
 
 def table_rowcount(sf_dir: str, name: str) -> int:
@@ -90,31 +132,27 @@ def table_rowcount(sf_dir: str, name: str) -> int:
     full (column-pruned) corpus action per invocation. Parquet footers
     carry the exact ``num_rows``, so this is a metadata-only read —
     the same number DuckDB's metadata-only ``count(*)`` sees, byte-equal
-    to ``load_table(...).count()``. Cached per path: the driver tables
-    are immutable fixtures. At 100 TB the equivalent is catalog/table
+    to ``load_table(...).count()``. Cached per file identity (as
+    ``load_table``'s schema memo), so a table rewritten at the same path
+    is counted again. At 100 TB the equivalent is catalog/table
     statistics (or a cached count in the pipeline's control plane) —
     either way, not a per-invocation scan.
     """
     import pyarrow.parquet as pq
 
     path = os.path.join(sf_dir, f"{name}.parquet")
-    cached = _ROWCOUNT_CACHE.get(path)
+    key = _file_identity(path)
+    cached = _ROWCOUNT_CACHE.get(key)
     if cached is not None:
         return cached
-    if os.path.isdir(path):
-        n = sum(
-            pq.read_metadata(os.path.join(root, f)).num_rows
-            for root, _, files in os.walk(path)
-            for f in files
-            if f.endswith(".parquet")
-        )
-    else:
-        n = pq.read_metadata(path).num_rows
-    _ROWCOUNT_CACHE[path] = n
+    files = [p for p, *_ in key[1:] if p.endswith(".parquet")] if os.path.isdir(path) else [path]
+    n = sum(pq.read_metadata(f).num_rows for f in files)
+    _ROWCOUNT_CACHE[key] = n
     return n
 
 
-_ROWCOUNT_CACHE: dict[str, int] = {}
+_SCHEMA_MEMO: dict[tuple, StructType] = {}
+_ROWCOUNT_CACHE: dict[tuple, int] = {}
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

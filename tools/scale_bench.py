@@ -206,7 +206,7 @@ def main() -> None:
     from dic_a1_spark.registry import all_queries
     from dic_a1_spark.runner import amplified_table, timed, warm_up
     from dic_a1_spark.session import get_spark
-    from dic_a1_spark.sources.readers import load_table
+    from dic_a1_spark.sources.readers import load_table, table_rowcount
 
     spark = get_spark(app_name="dic_a1_spark-scale-bench")
     wd = args.work_dir
@@ -236,7 +236,7 @@ def main() -> None:
     docs_amp.repartitionByRange(64, "doc_id").write.mode("overwrite").parquet(
         docs_path
     )
-    n_docs = spark.read.parquet(docs_path).count()
+    n_docs = table_rowcount(wd, "documents")
 
     emb_path = os.path.join(wd, "embeddings.parquet")
     n_vec_base, emb_amp = amplified_table(
@@ -245,7 +245,7 @@ def main() -> None:
     emb_amp.repartitionByRange(64, "vec_id").write.mode("overwrite").parquet(
         emb_path
     )
-    n_vecs = spark.read.parquet(emb_path).count()
+    n_vecs = table_rowcount(wd, "embeddings")
 
     qs = all_queries()
     names = [n for n in HEADLINE_DOC_QUERIES if n in qs]
@@ -367,7 +367,7 @@ def main() -> None:
     ev_amp.repartitionByRange(64, "user_id", "ts").write.mode(
         "overwrite"
     ).parquet(ev_path)
-    n_events = spark.read.parquet(ev_path).count()
+    n_events = table_rowcount(wd, "events")
 
     event_queries: dict[str, dict] = {}
     for name in [
@@ -398,7 +398,7 @@ def main() -> None:
     ).drop("_r")
     li_path = os.path.join(wd, "lineitem.parquet")
     li_amp.repartition(64).write.mode("overwrite").parquet(li_path)
-    n_li = spark.read.parquet(li_path).count()
+    n_li = table_rowcount(wd, "lineitem")
 
     graph_queries: dict[str, dict] = {}
     for name in ["graph_nation_edges", "graph_degree_census", "graph_pagerank"]:
