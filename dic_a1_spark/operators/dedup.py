@@ -34,7 +34,7 @@ from dic_a1_spark.config import (
     duckdb_tokens_sql,
     duckdb_tokenset_md5_sql,
 )
-from dic_a1_spark.functions.text import tokenize, tokens_nonempty
+from dic_a1_spark.functions.text import tokens_nonempty
 from dic_a1_spark.sources.readers import load_table
 
 JACCARD_THRESHOLD = 0.5
@@ -47,10 +47,6 @@ MINHASH_BANDS = 4
 MINHASH_ROWS = MINHASH_HASHES // MINHASH_BANDS
 
 
-def _tokens(col: Column) -> Column:
-    return tokens_nonempty(col)
-
-
 def tokenset_hash(col: Column) -> Column:
     """md5 over the sorted distinct non-empty token set — the
     order-insensitive content identity shared by dedup_tokenset_groups,
@@ -58,7 +54,7 @@ def tokenset_hash(col: Column) -> Column:
     construction so the three can never drift apart."""
     return F.md5(
         F.encode(
-            F.concat_ws(" ", F.array_sort(F.array_distinct(_tokens(col)))),
+            F.concat_ws(" ", F.array_sort(F.array_distinct(tokens_nonempty(col)))),
             "UTF-8",
         )
     )
@@ -77,7 +73,7 @@ def _with_shingle_arrays(docs: DataFrame) -> DataFrame:
     pure filter overhead at 250K docs). With the filter in place,
     size(toks) - 2 >= 1, so the sequence is always ascending and needs no
     empty-array guard (Spark's sequence(1, 0) would count DOWN)."""
-    toks = docs.select("doc_id", _tokens(F.col("text")).alias("toks")).where(
+    toks = docs.select("doc_id", tokens_nonempty(F.col("text")).alias("toks")).where(
         F.size("toks") >= SHINGLE_WIDTH
     )
     shingles = F.expr(
@@ -215,9 +211,7 @@ def dedup_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ground truth)
 # ---------------------------------------------------------------------------
 
-def _with_hashed_shingles(
-    docs: DataFrame, shingle_arrays: DataFrame | None = None
-) -> DataFrame:
+def _with_hashed_shingles(docs: DataFrame) -> DataFrame:
     """(doc_id, hs: array<bigint>) — per-doc DISTINCT shingles, each
     hashed once with xxhash64. This is the internal currency of the whole
     MinHash pipeline: signatures fold over it and verification intersects
@@ -226,8 +220,7 @@ def _with_hashed_shingles(
     jaccard by one count; at ~50 shingles/doc the chance is ~1e-16 per
     pair — accepted: the oracle hashes the same universe, so a collision
     merges identically in both engines and parity is unaffected.)"""
-    arrs = _with_shingle_arrays(docs) if shingle_arrays is None else shingle_arrays
-    return arrs.select(
+    return _with_shingle_arrays(docs).select(
         "doc_id", F.expr("transform(shingles, s -> xxhash64(s))").alias("hs")
     )
 
@@ -341,9 +334,7 @@ def _minhash_transforms():
 
 
 def minhash_signatures(
-    docs: DataFrame,
-    shingle_arrays: DataFrame | None = None,
-    hashed_shingles: DataFrame | None = None,
+    docs: DataFrame, hashed_shingles: DataFrame | None = None
 ) -> DataFrame:
     """(doc_id, sig: array<bigint>) — MINHASH_HASHES independent min-hashes.
 
@@ -362,25 +353,107 @@ def minhash_signatures(
     guide §4.2; tests/reference_impl.py keeps the interpreted fold form
     as the equality reference)."""
     if hashed_shingles is None:
-        hashed_shingles = _with_hashed_shingles(docs, shingle_arrays)
+        hashed_shingles = _with_hashed_shingles(docs)
     return hashed_shingles.select(
         "doc_id", min_sig_batch(_minhash_transforms())(F.col("hs")).alias("sig")
     )
 
 
-def minhash_candidate_pairs(
-    docs: DataFrame,
-    shingle_arrays: DataFrame | None = None,
-    hashed_shingles: DataFrame | None = None,
-) -> DataFrame:
-    """LSH banding: equal band-hash in any of MINHASH_BANDS bands makes a
-    candidate pair. Join key is (band_id, band_hash) — a plain shuffle
-    join on a compact key, no cross join anywhere.
+def _sig_band(b: int) -> list[Column]:
+    """The MINHASH_ROWS signature entries of band b."""
+    return [F.col("sig")[b * MINHASH_ROWS + r] for r in range(MINHASH_ROWS)]
 
-    A pair agreeing on m bands is emitted m times by the join; dedup is
-    map-side (keep only the row from the FIRST matching band, checked
-    against the carried per-doc band-hash array) instead of a .distinct()
-    shuffle over the whole join output.
+
+# ---------------------------------------------------------------------------
+# Banded LSH, shared by every pair query (MinHash and SimHash, both hash
+# families, self-join and increment-vs-corpus): band rows, the candidate
+# join with its first-shared-band rule, and the exact-Jaccard verifier.
+# Each query keeps its own hash family, band keys, pair order or broadcast
+# side, and verification.
+# ---------------------------------------------------------------------------
+
+def band_rows(sig: DataFrame, keys: list[Column], *carry: str) -> DataFrame:
+    """(doc_id, *carry, keys, band_id, band_key): one row per band of each
+    `sig` row, band_key = keys[band_id]. The frame is projected to these
+    columns BEFORE the explode, so a wide signature is never copied onto
+    every band row. The key array rides along for band_pairs'
+    first-shared-band test, and the band count rides in its column
+    metadata."""
+    n = len(keys)
+    return (
+        sig.select("doc_id", *carry, F.array(*keys).alias("keys", metadata={"bands": n}))
+        .select(
+            "doc_id", *carry, "keys",
+            F.explode(F.sequence(F.lit(0), F.lit(n - 1))).alias("band_id"),
+        )
+        .select(
+            "doc_id", *carry, "keys", "band_id",
+            F.element_at("keys", F.col("band_id") + 1).alias("band_key"),
+        )
+    )
+
+
+def band_pairs(left: DataFrame, right: DataFrame) -> DataFrame:
+    """band_rows frames `left` AS a and `right` AS b joined on an equal
+    (band_id, band_key) — a plain equi-join on a compact key, no cross
+    join anywhere — with each pair of rows kept once, at its FIRST shared
+    band. A pair sharing m bands meets m times in the join; the filter
+    drops the later meetings map-side, against the carried key arrays,
+    instead of a distinct() shuffle over the whole join output (at 250K
+    amplified docs, ~1B rows). The caller adds its pair order or
+    broadcast side and selects from a.* and b.*."""
+    a, b = left.alias("a"), right.alias("b")
+    earlier = F.lit(False)
+    for j in range(left.schema["keys"].metadata["bands"] - 1):
+        earlier |= (F.col("a.band_id") > j) & (
+            F.element_at("a.keys", j + 1) == F.element_at("b.keys", j + 1)
+        )
+    return a.join(
+        b,
+        (F.col("a.band_id") == F.col("b.band_id"))
+        & (F.col("a.band_key") == F.col("b.band_key")),
+    ).where(~earlier)
+
+
+def jaccard_verified(
+    cand: DataFrame, hs: DataFrame, id1: str, id2: str
+) -> DataFrame:
+    """(id1, id2, jaccard): the candidate pairs of `cand` whose exact
+    Jaccard over the per-doc hashed sets `hs` (doc_id, hs) reaches
+    JACCARD_THRESHOLD. Verification removes every LSH false positive, so
+    precision is exact and only recall depends on the banding.
+
+    It runs over candidates only: two equi-joins on doc_id pull each
+    side's hashed shingle array (array<bigint>, ~8 bytes/shingle instead
+    of a full string) onto the candidate row, and
+    `size(array_intersect(...))` gives the shared count map-side.
+    Candidates are a vanishing fraction of the corpus, so shipping two
+    compact arrays per candidate beats re-shuffling every (doc, shingle)
+    row through an inverted-index join and a per-pair groupBy."""
+
+    def side(name: str, h: str) -> DataFrame:
+        return hs.select(F.col("doc_id").alias(name), F.col("hs").alias(h))
+
+    return (
+        cand.join(side(id1, "h1"), id1)
+        .join(side(id2, "h2"), id2)
+        .withColumn("n_shared", F.size(F.array_intersect("h1", "h2")))
+        .withColumn(
+            "jaccard",
+            F.col("n_shared").cast("double")
+            / (F.size("h1") + F.size("h2") - F.col("n_shared")).cast("double"),
+        )
+        .where(F.col("jaccard") >= JACCARD_THRESHOLD)
+        .select(id1, id2, "jaccard")
+    )
+
+
+def minhash_candidate_pairs(
+    docs: DataFrame, hashed_shingles: DataFrame | None = None
+) -> DataFrame:
+    """(doc1, doc2), doc1 < doc2: the pairs with an equal band hash
+    xxhash64(sig[4b..4b+3]) in any of MINHASH_BANDS bands, each once
+    (band_pairs).
 
     The signature frame is PERSISTED (r13, guide §2.4): the self-join
     plans BOTH band sides as separate subtrees, so without the persist
@@ -390,68 +463,21 @@ def minhash_candidate_pairs(
     first materialization."""
     from pyspark import StorageLevel
 
-    sig = minhash_signatures(
-        docs, shingle_arrays=shingle_arrays, hashed_shingles=hashed_shingles
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    bhs = F.array(
-        *[
-            F.xxhash64(
-                *[F.col("sig")[b * MINHASH_ROWS + r] for r in range(MINHASH_ROWS)]
-            )
-            for b in range(MINHASH_BANDS)
-        ]
+    sig = minhash_signatures(docs, hashed_shingles).persist(
+        StorageLevel.MEMORY_AND_DISK
     )
-    bands = (
-        sig.select("doc_id", bhs.alias("bhs"))
-        .select(
-            "doc_id",
-            "bhs",
-            F.explode(F.sequence(F.lit(0), F.lit(MINHASH_BANDS - 1))).alias(
-                "band_id"
-            ),
-        )
-        .select(
-            "doc_id",
-            "bhs",
-            "band_id",
-            F.element_at("bhs", F.col("band_id") + 1).alias("band_hash"),
-        )
-    )
-    a, b = bands.alias("a"), bands.alias("b")
-    earlier_band_matches = None
-    for j in range(MINHASH_BANDS - 1):
-        m = (F.col("a.band_id") > j) & (
-            F.element_at(F.col("a.bhs"), j + 1) == F.element_at(F.col("b.bhs"), j + 1)
-        )
-        earlier_band_matches = m if earlier_band_matches is None else (
-            earlier_band_matches | m
-        )
+    bands = band_rows(sig, [F.xxhash64(*_sig_band(b)) for b in range(MINHASH_BANDS)])
     return (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .where(~earlier_band_matches)
+        band_pairs(bands, bands)
+        .where(F.col("a.doc_id") < F.col("b.doc_id"))
         .select(F.col("a.doc_id").alias("doc1"), F.col("b.doc_id").alias("doc2"))
     )
 
 
 def dedup_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash-LSH candidates verified with exact Jaccard — LSH prunes the
-    pair space; verification removes false positives, so output precision
-    is exact and only recall depends on the banding parameters.
-
-    Verification is computed ONLY over candidate pairs — the whole point
-    of LSH at scale is never materializing the full pair space. It runs
-    as two equi-joins on doc_id that pull each side's HASHED shingle
-    array (array<bigint>, ~8 bytes/shingle instead of a full string) onto
-    the candidate row, then `size(array_intersect(...))` gives the shared
-    count map-side. This replaces an exploded inverted-index double-join
-    + per-pair groupBy: candidates are a vanishing fraction of the
-    corpus, so shipping two compact arrays per candidate beats
-    re-shuffling every (doc, shingle) row of the corpus through a join.
+    """MinHash-LSH candidates verified with exact Jaccard
+    (jaccard_verified) — LSH prunes the pair space; verification removes
+    false positives.
 
     The per-doc HASHED shingles feed both consumers (map-only signatures
     and verification); without a persist Spark recomputes the
@@ -462,48 +488,17 @@ def dedup_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     hsf = _with_hashed_shingles(docs).persist(StorageLevel.MEMORY_AND_DISK)
-    cand = minhash_candidate_pairs(docs, hashed_shingles=hsf)
-    return (
-        cand.join(
-            hsf.select(F.col("doc_id").alias("doc1"), F.col("hs").alias("h1")),
-            "doc1",
-        )
-        .join(
-            hsf.select(F.col("doc_id").alias("doc2"), F.col("hs").alias("h2")),
-            "doc2",
-        )
-        .withColumn("n_shared", F.size(F.array_intersect("h1", "h2")))
-        .withColumn(
-            "jaccard",
-            F.col("n_shared").cast("double")
-            / (F.size("h1") + F.size("h2") - F.col("n_shared")).cast("double"),
-        )
-        .where(F.col("jaccard") >= JACCARD_THRESHOLD)
-        .select("doc1", "doc2", "jaccard")
-    )
+    return jaccard_verified(minhash_candidate_pairs(docs, hsf), hsf, "doc1", "doc2")
 
 
-def minhash_band_buckets(
-    docs: DataFrame,
-    shingle_arrays: DataFrame | None = None,
-    hashed_shingles: DataFrame | None = None,
-) -> DataFrame:
+def minhash_band_buckets(docs: DataFrame) -> DataFrame:
     """(doc_id, bucket): one row per (doc, LSH band) with the bucket key
     collapsed to a single hash — the bipartite doc-bucket graph."""
-    sig = minhash_signatures(
-        docs, shingle_arrays=shingle_arrays, hashed_shingles=hashed_shingles
-    )
-    return sig.select(
+    return minhash_signatures(docs).select(
         "doc_id",
         F.explode(
             F.array(
-                *[
-                    F.xxhash64(
-                        F.lit(b),
-                        *[F.col("sig")[b * MINHASH_ROWS + r] for r in range(MINHASH_ROWS)],
-                    )
-                    for b in range(MINHASH_BANDS)
-                ]
+                *[F.xxhash64(F.lit(b), *_sig_band(b)) for b in range(MINHASH_BANDS)]
             )
         ).alias("bucket"),
     )
@@ -745,7 +740,7 @@ def simhash_signatures(docs: DataFrame) -> DataFrame:
     the pairs query). Docs with zero tokens are excluded (as before,
     when explode dropped them)."""
     toks = docs.select(
-        "doc_id", F.array_distinct(_tokens(F.col("text"))).alias("toks")
+        "doc_id", F.array_distinct(tokens_nonempty(F.col("text"))).alias("toks")
     ).where(F.size("toks") > 0)
     hs = toks.select(
         "doc_id",
@@ -754,10 +749,18 @@ def simhash_signatures(docs: DataFrame) -> DataFrame:
     return hs.select("doc_id", simhash_pack_batch(64)(F.col("hs")).alias("simhash"))
 
 
+def _simhash_bands() -> list[Column]:
+    """The four 16-bit bands of the 64-bit `simhash`."""
+    return [
+        F.shiftrightunsigned(F.col("simhash"), 16 * k).bitwiseAND(F.lit(0xFFFF))
+        for k in range(4)
+    ]
+
+
 def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs: block on four 16-bit bands (a pair within
-    hamming distance 3 must agree on at least one band), then verify
-    hamming <= 3 via bit_count(xor).
+    hamming distance 3 must agree on at least one band; band_pairs), then
+    verify hamming <= 3 via bit_count(xor).
 
     The signature frame is persisted before the self-join: signatures are
     now computed map-only (no exchange in the plan), so without an
@@ -768,50 +771,10 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     sig = simhash_signatures(docs).persist(StorageLevel.MEMORY_AND_DISK)
-    bands = sig.select(
-        "doc_id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(k).alias("band_id"),
-                        F.shiftrightunsigned(F.col("simhash"), 16 * k)
-                        .bitwiseAND(F.lit(0xFFFF))
-                        .alias("band_val"),
-                    )
-                    for k in range(4)
-                ]
-            )
-        ).alias("band"),
-    ).select("doc_id", "simhash", "band.band_id", "band.band_val")
-    a, b = bands.alias("a"), bands.alias("b")
-
-    def _band(col: Column, k: int) -> Column:
-        return F.shiftrightunsigned(col, 16 * k).bitwiseAND(F.lit(0xFFFF))
-
-    # A pair agreeing on m bands is emitted m times by the join. Dedup
-    # WITHOUT a shuffle: keep the row only when no LOWER band also
-    # matches — each pair survives exactly once, from its first matching
-    # band. (The previous .distinct() shuffled the entire join output —
-    # at 250K amplified docs, ~1B rows — before the hamming filter.)
-    earlier_band_matches = None
-    for j in range(3):
-        m = (F.col("a.band_id") > j) & (
-            _band(F.col("a.simhash"), j) == _band(F.col("b.simhash"), j)
-        )
-        earlier_band_matches = m if earlier_band_matches is None else (
-            earlier_band_matches | m
-        )
-
+    bands = band_rows(sig, _simhash_bands(), "simhash")
     return (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .where(~earlier_band_matches)
+        band_pairs(bands, bands)
+        .where(F.col("a.doc_id") < F.col("b.doc_id"))
         .select(
             F.col("a.doc_id").alias("doc1"),
             F.col("b.doc_id").alias("doc2"),
@@ -827,21 +790,10 @@ def simhash_band_buckets(docs: DataFrame) -> DataFrame:
     """(doc_id, bucket): one row per (doc, 16-bit SimHash band) with the
     bucket key collapsed to a single hash — the bipartite doc-bucket
     graph, same shape as minhash_band_buckets."""
-    sig = simhash_signatures(docs)
-    return sig.select(
+    return simhash_signatures(docs).select(
         "doc_id",
         F.explode(
-            F.array(
-                *[
-                    F.xxhash64(
-                        F.lit(k),
-                        F.shiftrightunsigned(F.col("simhash"), 16 * k).bitwiseAND(
-                            F.lit(0xFFFF)
-                        ),
-                    )
-                    for k in range(4)
-                ]
-            )
+            F.array(*[F.xxhash64(F.lit(k), v) for k, v in enumerate(_simhash_bands())])
         ).alias("bucket"),
     )
 

@@ -184,28 +184,27 @@ ORACLES: dict[str, str] = {
 def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NEAR-duplicate admission screening for the increment: MinHash-LSH
     candidates between incoming docs and the standing corpus, verified
-    by exact Jaccard over the md5-base shingle sets (the lsh.py
-    hash-verified family, so this query sits under the full driver
-    value-hash gate like dedup_minhash_md5_pairs).
+    by exact Jaccard over the md5-base shingle sets. It is the
+    lsh.dedup_minhash_md5_pairs plan (the same md5 signatures and band
+    keys, dedup.band_pairs, dedup.jaccard_verified), so it sits under the
+    same full DuckDB value-hash oracle too. Only the join side is its own.
 
     The tokenset pass above catches reorderings; this catches partial
     edits. Join direction mirrors dedup_incremental_keep: the
-    increment's (band_id, band_hash) rows broadcast, the corpus band
-    stream is probed without repartitioning corpus rows, and multi-band
-    matches collapse map-side via the first-matching-band predicate —
-    no distinct() shuffle. Verification joins pull each side's md5-base
-    array onto the (candidate-sized) pair frame.
+    increment's band rows broadcast, and the corpus band stream is
+    probed without repartitioning corpus rows.
 
     Output: one row per verified (incoming, corpus) near-dup pair."""
     from pyspark import StorageLevel
 
     from dic_a1_spark.operators.dedup import (
-        JACCARD_THRESHOLD,
         _with_shingle_arrays,
+        band_pairs,
+        band_rows,
+        jaccard_verified,
     )
     from dic_a1_spark.operators.lsh import (
-        _earlier_band_matches,
-        _md5_band_frame,
+        _md5_band_keys,
         _md5_hashed_shingles,
         _md5_minhash_signatures,
     )
@@ -214,42 +213,12 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     arrs = _md5_hashed_shingles(_with_shingle_arrays(d)).persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    bands = _md5_band_frame(_md5_minhash_signatures(arrs))
+    bands = band_rows(_md5_minhash_signatures(arrs), _md5_band_keys())
     is_inc = F.col("doc_id") % INC_MOD == INC_REM
-    inc_bands = bands.where(is_inc)
-    corpus_bands = bands.where(~is_inc)
-    cand = (
-        corpus_bands.alias("c")
-        .join(
-            F.broadcast(inc_bands.alias("i")),
-            (F.col("c.band_id") == F.col("i.band_id"))
-            & (F.col("c.band_hash") == F.col("i.band_hash")),
-        )
-        .where(~_earlier_band_matches("c", "i"))
-        .select(
-            F.col("i.doc_id").alias("doc_id"),
-            F.col("c.doc_id").alias("dup_doc_id"),
-        )
+    cand = band_pairs(bands.where(~is_inc), F.broadcast(bands.where(is_inc))).select(
+        F.col("b.doc_id").alias("doc_id"), F.col("a.doc_id").alias("dup_doc_id")
     )
-    return (
-        cand.join(
-            arrs.select(F.col("doc_id"), F.col("hs").alias("s1")), "doc_id"
-        )
-        .join(
-            arrs.select(
-                F.col("doc_id").alias("dup_doc_id"), F.col("hs").alias("s2")
-            ),
-            "dup_doc_id",
-        )
-        .withColumn("n_shared", F.size(F.array_intersect("s1", "s2")))
-        .withColumn(
-            "jaccard",
-            F.col("n_shared").cast("double")
-            / (F.size("s1") + F.size("s2") - F.col("n_shared")).cast("double"),
-        )
-        .where(F.col("jaccard") >= JACCARD_THRESHOLD)
-        .select("doc_id", "dup_doc_id", "jaccard")
-    )
+    return jaccard_verified(cand, arrs, "doc_id", "dup_doc_id")
 
 
 QUERIES["dedup_incremental_minhash"] = dedup_incremental_minhash

@@ -42,11 +42,11 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dic_a1_spark.config import duckdb_tokens_sql
-from dic_a1_spark.functions.text import tokenize
+from dic_a1_spark.functions.text import tokens_nonempty
 from dic_a1_spark.sources.readers import load_table
 
 # Terms present in more than this many documents are dropped from the
@@ -59,10 +59,6 @@ DOCSIM_MIN_SIM = 0.05
 GRAM_WIDTH = 8  # token 8-grams, the repeated-substring stand-in
 
 
-def _tokens(col: Column) -> Column:
-    return F.filter(tokenize(col), lambda w: w != "")
-
-
 def _doc_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, term) with per-doc DISTINCT word-3-gram shingle terms.
 
@@ -73,7 +69,7 @@ def _doc_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     which is also the realistic regime: real corpora weight phrases, not
     stopword-dense unigrams, for similarity."""
     d = load_table(spark, sf_dir, "documents")
-    toks = d.select("doc_id", _tokens(F.col("text")).alias("toks")).where(
+    toks = d.select("doc_id", tokens_nonempty(F.col("text")).alias("toks")).where(
         F.size("toks") >= 3
     )
     return toks.select(
@@ -232,7 +228,7 @@ def dedup_repeated_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cross-doc filter, the hit counts, and the position totals — and
     # without the persist each re-runs tokenize+slide from the scan.
     gram_arrays = (
-        d.select("doc_id", _tokens(F.col("text")).alias("toks"))
+        d.select("doc_id", tokens_nonempty(F.col("text")).alias("toks"))
         .where(F.size("toks") >= GRAM_WIDTH)
         .select(
             "doc_id",

@@ -1,15 +1,13 @@
-"""Oracle-verifiable MinHash-LSH over an md5-derived hash family.
+"""Oracle-verifiable MinHash-LSH and SimHash over an md5-derived hash
+family.
 
-The production MinHash pipeline (operators/dedup.py) uses xxhash64, which
-DuckDB lacks natively — when this module was written its band-join logic
-had only rows-only driver checks, so this module re-expresses the SAME
-pipeline shape (map-only signatures -> band-bucket self-join ->
-exact-Jaccard verification) over a hash family both engines compute
-bit-identically — ONE md5 per shingle feeding an affine universal family
-(constants defined below at _A/_B/_M). (Since then the production
-queries gained their own generated-xxhash64 oracles via
-functions/xxh64_sql.py; this family stays registered as the
-cheap-to-verify twin and the recall-report vehicle.)
+The production pair queries (operators/dedup.py) hash with xxhash64. The
+queries here run the SAME banded-LSH code — dedup.band_rows,
+dedup.band_pairs and, for MinHash, dedup.jaccard_verified — over a hash
+family that both Spark and DuckDB compute bit-identically by plain SQL:
+ONE md5 per shingle feeding an affine universal family (constants defined
+below at _A/_B/_M). Only the hash family and the band keys are this
+module's own:
 
     base(s)  = bigint(first 10 hex chars of md5(s))        in [0, 2^40)
     h_i(s)   = (A[i] * base(s) + B[i]) mod (2^61 - 1)
@@ -21,12 +19,11 @@ Spark (conv(substr(md5(s),1,10),16,10)) and DuckDB
 A[i]*base below 2^61 — no int64 overflow in either engine. Asserted
 equal in tests/test_lsh.py and by the driver's value-hash gate.
 
-This entry exists to put the LSH band-join logic itself under the
-hash-verified driver gate; the xxhash64 family in dedup.py remains the
-production path (integer mixing, no per-hash string materialization —
-~16 md5-of-string evaluations per shingle here vs one xxhash64).
-The plan shape is identical, so a green driver row here certifies the
-banding/dedup/verification logic both variants share.
+The oracles here are short hand-written SQL, where the xxhash64 ones are
+generated from functions/xxh64_sql.py, so this family stays registered
+as the cheap-to-verify twin and the recall-report vehicle
+(evalops.lsh_recall_report). The xxhash64 family remains the production
+path: integer mixing, no per-hash string materialization.
 
 Reference: the reference has no dedup at all; this extends SURVEY.md §2
 per the LLM-data-pipeline mandate (same ladder as operators/dedup.py).
@@ -37,7 +34,7 @@ from __future__ import annotations
 from collections.abc import Callable
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dic_a1_spark.operators.dedup import (
@@ -47,7 +44,11 @@ from dic_a1_spark.operators.dedup import (
     MINHASH_ROWS,
     _SHINGLE_CTE,
     _pair_graph_lp_sql,
+    _sig_band,
     _with_shingle_arrays,
+    band_pairs,
+    band_rows,
+    jaccard_verified,
     min_label_loop,
     unpersist_plan,
 )
@@ -124,77 +125,27 @@ def _md5_minhash_signatures(hashed_shingles: DataFrame) -> DataFrame:
     )
 
 
-def _md5_band_frame(sig: DataFrame) -> DataFrame:
-    """(doc_id, bhs: array<string>, band_id, band_hash) — one row per
-    (doc, band), carrying the full band-hash array so joins can dedup
-    multi-band matches map-side (see _earlier_band_matches)."""
-    band_cols = [
+def _md5_band_keys() -> list[Column]:
+    """The md5 family's band keys: md5 of each band's comma-joined rows."""
+    return [
         F.md5(
-            F.concat_ws(
-                ",",
-                *[
-                    F.col("sig")[b * MINHASH_ROWS + r].cast("string")
-                    for r in range(MINHASH_ROWS)
-                ],
-            ).cast("binary")
+            F.concat_ws(",", *[c.cast("string") for c in _sig_band(b)]).cast("binary")
         )
         for b in range(MINHASH_BANDS)
     ]
-    return (
-        sig.select("doc_id", F.array(*band_cols).alias("bhs"))
-        .select(
-            "doc_id",
-            "bhs",
-            F.explode(F.sequence(F.lit(0), F.lit(MINHASH_BANDS - 1))).alias(
-                "band_id"
-            ),
-        )
-        .select(
-            "doc_id",
-            "bhs",
-            "band_id",
-            F.element_at("bhs", F.col("band_id") + 1).alias("band_hash"),
-        )
-    )
-
-
-def _earlier_band_matches(left: str = "a", right: str = "b"):
-    """Predicate TRUE iff the joined sides ALSO match on some band with a
-    smaller index — negating it keeps each candidate pair exactly once
-    (at its first matching band) without a distinct() shuffle."""
-    pred = None
-    for j in range(MINHASH_BANDS - 1):
-        m = (F.col(f"{left}.band_id") > j) & (
-            F.element_at(F.col(f"{left}.bhs"), j + 1)
-            == F.element_at(F.col(f"{right}.bhs"), j + 1)
-        )
-        pred = m if pred is None else (pred | m)
-    return pred
 
 
 def dedup_minhash_md5_pairs(
     spark: SparkSession, sf_dir: str, arrs: DataFrame | None = None
 ) -> DataFrame:
-    """MinHash-LSH near-dup pairs with a DuckDB-twin hash family.
+    """MinHash-LSH near-dup pairs with a DuckDB-twin hash family: the
+    dedup.dedup_minhash_pairs plan (map-only signatures, band_pairs with
+    doc1 < doc2, jaccard_verified) over md5-affine signatures and md5
+    band keys.
 
     ``arrs`` lets a caller that already holds the persisted
     (doc_id, hs) md5-base frame (evalops.lsh_recall_report) share it
-    instead of re-tokenizing the corpus and double-caching.
-
-    Plan (mirrors dedup.dedup_minhash_pairs):
-      1. map-only signatures over per-doc shingle arrays (no exchange);
-      2. band hashes md5(csv of band rows), exploded to (doc, band) rows;
-      3. self-join on (band_id, band_hash) with doc1 < doc2 — the only
-         shuffle keyed on a compact 2-tuple, never a cross join;
-      4. map-side pair dedup: keep only the first matching band (checked
-         against the carried band-hash array) instead of a .distinct()
-         shuffle over the join output;
-      5. exact-Jaccard verification computed only on candidates, via two
-         equi-joins pulling each side's DISTINCT md5-base array onto the
-         row (bigint, ~8 B/shingle — shipping the string shingle arrays
-         here was 72.9 s of the 250K-amplified-doc run; this form and
-         dedup_minhash_pairs now share the same verification economics).
-    """
+    instead of re-tokenizing the corpus and double-caching."""
     from pyspark import StorageLevel
 
     if arrs is None:
@@ -205,36 +156,13 @@ def dedup_minhash_md5_pairs(
     # separate subtrees, so the Arrow affine-min pass would otherwise
     # run twice per query (the dedup_simhash_md5_pairs stance).
     sig = _md5_minhash_signatures(arrs).persist(StorageLevel.MEMORY_AND_DISK)
-    bands = _md5_band_frame(sig)
-    a, b = bands.alias("a"), bands.alias("b")
+    bands = band_rows(sig, _md5_band_keys())
     cand = (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .where(~_earlier_band_matches("a", "b"))
+        band_pairs(bands, bands)
+        .where(F.col("a.doc_id") < F.col("b.doc_id"))
         .select(F.col("a.doc_id").alias("doc1"), F.col("b.doc_id").alias("doc2"))
     )
-    return (
-        cand.join(
-            arrs.select(F.col("doc_id").alias("doc1"), F.col("hs").alias("s1")),
-            "doc1",
-        )
-        .join(
-            arrs.select(F.col("doc_id").alias("doc2"), F.col("hs").alias("s2")),
-            "doc2",
-        )
-        .withColumn("n_shared", F.size(F.array_intersect("s1", "s2")))
-        .withColumn(
-            "jaccard",
-            F.col("n_shared").cast("double")
-            / (F.size("s1") + F.size("s2") - F.col("n_shared")).cast("double"),
-        )
-        .where(F.col("jaccard") >= JACCARD_THRESHOLD)
-        .select("doc1", "doc2", "jaccard")
-    )
+    return jaccard_verified(cand, arrs, "doc1", "doc2")
 
 
 # Min-label rounds of the groups form: the oracle unrolls this depth, and
@@ -352,10 +280,8 @@ ORACLES["dedup_minhash_md5_groups"] = _pair_graph_lp_sql(
 # ---------------------------------------------------------------------------
 # SimHash twin over the md5 base family — extends the module's charter
 # (hash-certify the sketch-dedup logic) from MinHash banding to SimHash's
-# bit-vote + chunk-band + hamming-verify pipeline. The production SimHash
-# (dedup.simhash_signatures, 64-bit xxhash64) stays rows-only; this twin
-# reuses ITS plan shape over the 40-bit md5 base so the driver's typed
-# value-hash certifies the shared logic.
+# bit-vote + chunk-band + hamming-verify pipeline, on the same band_rows /
+# band_pairs path as dedup.dedup_simhash_pairs, over the 40-bit md5 base.
 # ---------------------------------------------------------------------------
 
 SIMHASH_MD5_BITS = 40          # md5 base width — packs into a positive bigint
@@ -407,66 +333,29 @@ def _md5_simhash_signatures(hashed_tokens: DataFrame) -> DataFrame:
 def dedup_simhash_md5_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs under the full value-hash gate: 10-bit
     chunk banding (a pair within hamming distance SIMHASH_MD5_HAMMING
-    must agree on >= 1 of the 4 chunks), first-matching-band map-side
-    dedup (no distinct() shuffle — the _earlier_band_matches device over
-    band VALUES), then exact hamming verification via
-    bit_count(sig1 XOR sig2). Every step is integer arithmetic both
-    engines execute identically."""
+    must agree on >= 1 of the 4 chunks; dedup.band_pairs), then exact
+    hamming verification via bit_count(sig1 XOR sig2). Every step is
+    integer arithmetic both engines execute identically."""
     from pyspark import StorageLevel
 
     sig = _md5_simhash_signatures(
         _md5_token_bases(load_table(spark, sf_dir, "documents"))
     ).persist(StorageLevel.MEMORY_AND_DISK)
-    band_vals = F.array(
-        *[
-            F.shiftrightunsigned(F.col("sig"), SIMHASH_MD5_BAND_BITS * k)
-            .bitwiseAND(F.lit((1 << SIMHASH_MD5_BAND_BITS) - 1))
-            for k in range(SIMHASH_MD5_BANDS)
-        ]
-    )
-    bands = (
-        sig.select("doc_id", "sig", band_vals.alias("bvs"))
-        .select(
-            "doc_id",
-            "sig",
-            "bvs",
-            F.explode(
-                F.sequence(F.lit(0), F.lit(SIMHASH_MD5_BANDS - 1))
-            ).alias("band_id"),
-        )
-        .select(
-            "doc_id",
-            "sig",
-            "bvs",
-            "band_id",
-            F.element_at("bvs", F.col("band_id") + 1).alias("band_val"),
-        )
-    )
-    a, b = bands.alias("a"), bands.alias("b")
-    earlier = None
-    for j in range(SIMHASH_MD5_BANDS - 1):
-        m = (F.col("a.band_id") > j) & (
-            F.element_at(F.col("a.bvs"), j + 1)
-            == F.element_at(F.col("b.bvs"), j + 1)
-        )
-        earlier = m if earlier is None else (earlier | m)
-    hamming = F.expr("bit_count(s1 ^ s2)")
+    band_vals = [
+        F.shiftrightunsigned(F.col("sig"), SIMHASH_MD5_BAND_BITS * k)
+        .bitwiseAND(F.lit((1 << SIMHASH_MD5_BAND_BITS) - 1))
+        for k in range(SIMHASH_MD5_BANDS)
+    ]
+    bands = band_rows(sig, band_vals, "sig")
     return (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .where(~earlier)
+        band_pairs(bands, bands)
+        .where(F.col("a.doc_id") < F.col("b.doc_id"))
         .select(
             F.col("a.doc_id").alias("doc1"),
             F.col("b.doc_id").alias("doc2"),
-            F.col("a.sig").alias("s1"),
-            F.col("b.sig").alias("s2"),
+            F.bit_count(F.col("a.sig").bitwiseXOR(F.col("b.sig"))).alias("hamming"),
         )
-        .where(hamming <= SIMHASH_MD5_HAMMING)
-        .select("doc1", "doc2", hamming.cast("int").alias("hamming"))
+        .where(F.col("hamming") <= SIMHASH_MD5_HAMMING)
     )
 
 

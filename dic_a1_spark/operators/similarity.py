@@ -775,7 +775,7 @@ def embedding_neardup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Footer-metadata count, byte-equal to e.count() and the oracle's
     # count(*) — saves one corpus action per invocation (r9).
     n = table_rowcount(sf_dir, "embeddings")
-    k = max(IVF_K, min(n, n * NEARDUP_NPROBE // 200, 1500))
+    k = _data_sized_k(n)
     # Edges leave the scoring stage in its per-block partitioning; spread
     # them over one partition per core (a few rows per vector, and each
     # extra task is launch cost with nothing to compute) before the

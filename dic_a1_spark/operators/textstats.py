@@ -12,11 +12,11 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dic_a1_spark.config import SPARK_WS_REGEX, sql_stopword_list, duckdb_tokenset_md5_sql
-from dic_a1_spark.functions.text import tokenize
+from dic_a1_spark.functions.text import tokens_nonempty
 from dic_a1_spark.sources.readers import load_table
 
 # Marker words for the n-gram-free language-ID heuristic. Deterministic and
@@ -34,14 +34,10 @@ _LANG_MARKERS: dict[str, tuple[str, ...]] = {
 _STOPLIST = sql_stopword_list()
 
 
-def _tokens(col: Column) -> Column:
-    return F.filter(tokenize(col), lambda w: w != "")
-
-
 def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document token accounting: counts, distinct counts, lengths."""
     d = load_table(spark, sf_dir, "documents")
-    toks = _tokens(F.col("text"))
+    toks = tokens_nonempty(F.col("text"))
     return d.select(
         "doc_id",
         F.size(toks).alias("n_tokens"),
@@ -58,7 +54,7 @@ def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct ratio, and a composite score. All ratios are a single division
     of exact integers, so cross-engine floats match bit-exactly."""
     d = load_table(spark, sf_dir, "documents")
-    toks = _tokens(F.col("text"))
+    toks = tokens_nonempty(F.col("text"))
     n = F.size(toks).cast("double")
     n_stop = F.size(
         F.filter(toks, lambda w: w.isin(*_stop_list()))
@@ -85,7 +81,7 @@ def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     argmax with fixed precedence (en > de > es > fr > zh, then 'und' for
     no hits). Compared against the table's labeled lang column."""
     d = load_table(spark, sf_dir, "documents")
-    toks = F.array_distinct(_tokens(F.col("text")))
+    toks = F.array_distinct(tokens_nonempty(F.col("text")))
     scores = {
         lang: F.size(F.array_intersect(toks, F.array(*[F.lit(m) for m in markers])))
         for lang, markers in _LANG_MARKERS.items()
@@ -110,7 +106,7 @@ def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     insensitive token-set fingerprint (md5 of the sorted distinct tokens) —
     the cheap exact-dedup key for shuffled-word duplicates."""
     d = load_table(spark, sf_dir, "documents")
-    toks = F.array_sort(F.array_distinct(_tokens(F.col("text"))))
+    toks = F.array_sort(F.array_distinct(tokens_nonempty(F.col("text"))))
     return d.select(
         "doc_id",
         F.md5(F.encode("text", "UTF-8")).alias("md5_text"),
@@ -123,7 +119,7 @@ def text_source_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus profiling per source: doc counts, token totals, vocabulary
     size (exact distinct across the source)."""
     d = load_table(spark, sf_dir, "documents")
-    toks = _tokens(F.col("text"))
+    toks = tokens_nonempty(F.col("text"))
     per_doc = d.select("source", F.explode(F.array_distinct(toks)).alias("word"))
     # LEFT join FROM the doc census: a source whose documents are all
     # token-free has no exploded word rows at all, and the former inner
@@ -214,7 +210,7 @@ def text_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     flag column (auditable: you can aggregate drop reasons), `keep` is
     their conjunction. Map-only plan: scales with input splits, no shuffle."""
     d = load_table(spark, sf_dir, "documents")
-    toks = _tokens(F.col("text"))
+    toks = tokens_nonempty(F.col("text"))
     n = F.size(toks).cast("double")
     n_stop = F.size(F.filter(toks, lambda w: w.isin(*_stop_list()))).cast("double")
     n_distinct = F.size(F.array_distinct(toks)).cast("double")
@@ -243,7 +239,7 @@ def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     ratios in both engines."""
     d = load_table(spark, sf_dir, "documents")
     tok = d.select(
-        "doc_id", "source", F.explode(F.array_distinct(_tokens(F.col("text")))).alias("word")
+        "doc_id", "source", F.explode(F.array_distinct(tokens_nonempty(F.col("text")))).alias("word")
     ).where(F.col("word") != "")
     tf = tok.groupBy("word", "source").agg(F.count("*").alias("tf"))
     word_win = Window.partitionBy("word")
@@ -444,7 +440,7 @@ def doc_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     |buckets|-sized aggregate: nothing here shuffles more than ~60 rows
     at any corpus size."""
     d = load_table(spark, sf_dir, "documents")
-    n = F.size(_tokens(F.col("text")))
+    n = F.size(tokens_nonempty(F.col("text")))
     bucketed = d.select(
         F.when(n == 0, F.lit(0)).otherwise(F.length(F.bin(n))).alias("bucket"),
         n.alias("n_tokens"),
@@ -479,7 +475,7 @@ def text_ngram_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     the HLL twin is the scale path, and this query certifies the swap is
     safe by computing both while the corpus still fits."""
     d = load_table(spark, sf_dir, "documents")
-    toks = d.select("source", _tokens(F.col("text")).alias("toks")).where(
+    toks = d.select("source", tokens_nonempty(F.col("text")).alias("toks")).where(
         F.size("toks") >= 3
     )
     sh = toks.select(
@@ -599,7 +595,7 @@ def lang_token_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     per = d.select(
         "lang",
-        F.size(_tokens(F.col("text"))).cast("bigint").alias("n_tok"),
+        F.size(tokens_nonempty(F.col("text"))).cast("bigint").alias("n_tok"),
         F.col("n_chars").cast("bigint").alias("n_ch"),
     ).where(F.col("n_tok") > 0)
     # the n_tok > 0 guard keeps an all-empty-text language from dividing

@@ -267,8 +267,10 @@ def test_dedup_family_exchange_budgets(spark):
     all-pairs self-join regression shows up here as extra exchanges
     long before a cluster run finds it.
 
-    - minhash/simhash pairs+groups: everything below the band join is
-      map-side; zero exchanges at this SF.
+    - minhash/simhash pairs+groups, both hash families, and the
+      increment-vs-corpus screen: everything below the band join is
+      map-side; zero exchanges at this SF. All five pair queries share
+      dedup.band_pairs, so each one is pinned.
     - exact/tokenset groups: exactly the ONE census aggregation their
       docstrings promise.
     - decontam_ngram_overlap_fast: the zero-exchange broadcast-probe
@@ -280,6 +282,9 @@ def test_dedup_family_exchange_budgets(spark):
         "dedup_minhash_groups": 0,
         "dedup_simhash_pairs": 0,
         "dedup_simhash_groups": 0,
+        "dedup_minhash_md5_pairs": 0,
+        "dedup_simhash_md5_pairs": 0,
+        "dedup_incremental_minhash": 0,
         "dedup_exact_groups": 1,
         "dedup_tokenset_groups": 1,
         "decontam_ngram_overlap_fast": 0,
