@@ -177,8 +177,8 @@ def decontam_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     size), and a corpus shingle counts as a hit iff ALL of its positions
     are set. Deterministic false positives included, both engines compute
     the identical filter, so this is value-hash-exact — the scale twin of
-    decontam_ngram_overlap the way decontam_ngram_overlap_fast is, but
-    with a hash-verifiable oracle instead of rows-only.
+    decontam_ngram_overlap whose broadcast stays constant-size as the
+    benchmark grows.
 
     Plan (the decontam_ngram_overlap lessons applied):
       1. ONE persisted pass producing per-doc DISTINCT base arrays —

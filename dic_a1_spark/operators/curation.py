@@ -12,12 +12,12 @@ arithmetic, DuckDB value oracles.
 
 Scale notes (the 100 TB plan):
   - decontam: the benchmark side is ALWAYS small (eval sets are MBs while
-    the corpus is TBs), so its distinct shingle set broadcasts and the
+    the corpus is TBs), so its distinct shingle-hash set broadcasts and the
     corpus side stays map-only — one explode, one broadcast hash join,
     one groupBy(doc_id) whose input is bounded by corpus shingle count.
     No shuffle ever carries the corpus text. At extreme benchmark sizes
     the same query degrades gracefully: Catalyst falls back to a shuffle
-    hash join on the shingle key.
+    hash join on the shingle hash.
   - rebalance: per-language counts are a dimension-sized aggregate
     (|langs| rows) broadcast back; the keep/drop decision is a pure
     row-local hash comparison — deterministic under retries and
@@ -37,8 +37,8 @@ from pyspark.sql import functions as F
 
 from dic_a1_spark.config import DUCKDB_WS_REGEX, duckdb_lower_sql, duckdb_tokens_sql
 from dic_a1_spark.functions.sweeps import sweep_agg_columns, sweep_sql_columns
-from dic_a1_spark.functions.text import tokenize
-from dic_a1_spark.operators.dedup import SHINGLE_WIDTH, _with_shingle_arrays
+from dic_a1_spark.functions.text import tokens_nonempty
+from dic_a1_spark.operators.dedup import SHINGLE_WIDTH
 from dic_a1_spark.sources.readers import load_table
 
 # Java-casefold-mirrored lower(text) for the whitespace-only tokenizer
@@ -68,162 +68,54 @@ CHUNK_STRIDE = 56
 def decontam_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark decontamination via word-3-gram overlap: for every corpus
     document, the fraction of its distinct shingles that also occur in the
-    (broadcast) benchmark set, and the contamination verdict.
+    (broadcast) benchmark set, and the contamination verdict. Registered
+    under both decontam names.
 
-    Plan (the hits-only shape; 42 s -> 23.7 s at 250K amplified docs):
-      1. one shingle-array pass over the corpus, persisted — the single
-         expensive stage, shared by both consumers below (without the
-         persist each would re-run tokenize+shingle; and an UNpersisted
-         explode(hs) alongside size(hs) trips the expression-inlining
-         trap — Catalyst re-evaluates the whole shingle transform per
-         exploded element, measured 143 s for this query's shape);
-      2. per-doc sizes map-side from the persisted arrays;
-      3. overlap via explode + broadcast INNER probe against the
-         benchmark's distinct shingles — only HIT rows (a vanishing
-         fraction of corpus shingles) reach the groupBy, unlike the
-         round-2 LEFT-join shape that re-aggregated every corpus
-         shingle row;
-      4. hit counts (dimension-sized) join back to the sizes frame —
-         AQE broadcasts it.
-    Rejected alternative: aggregating the benchmark into one array and
-    `size(array_intersect(...))` per row is corpus-side exchange-free but
-    rebuilds the benchmark hash set PER ROW inside ArrayIntersect —
-    measured 102 s. See decontam_ngram_overlap_fast for the hashed
-    variant (no string shingles at all) at ~3x this throughput."""
+    A shingle is the token-triple hash xxhash64(t1, t2, t3); no shingle
+    string is built. Tokens hold no whitespace, so triples and
+    space-joined string shingles are the same sets: counts differ from
+    the string oracle only if two distinct triples collide at 64 bits,
+    and the hash oracle (bottom of module) recomputes the same hashes.
+
+    Plan (hits-only): one persisted hash-array pass (an UNpersisted
+    explode(hs) beside size(hs) re-runs the transform per exploded
+    element); per-doc sizes map-side; explode + broadcast INNER probe
+    against the benchmark's distinct hashes, so only hit rows reach the
+    groupBy; hit counts join back to the sizes (AQE broadcasts them).
+    Slower alternatives: `size(array_intersect(...))` against one
+    benchmark array rebuilds its hash set per row (102 s at 250K docs);
+    a driver-sorted benchmark array probed by binary search in Arrow
+    batches was exchange-free but slower at sf0.01, sf0.1 and 50x sf0.1."""
     from pyspark import StorageLevel
 
     d = load_table(spark, sf_dir, "documents")
-    arrs = _with_shingle_arrays(d).persist(StorageLevel.MEMORY_AND_DISK)
-    bench = (
-        arrs.where(F.col("doc_id") < BENCH_DOCS)
-        .select(F.explode("shingles").alias("shingle"))
-        .distinct()
+    toks = d.select("doc_id", tokens_nonempty(F.col("text")).alias("toks")).where(
+        F.size("toks") >= SHINGLE_WIDTH
     )
-    corpus = arrs.where(F.col("doc_id") >= BENCH_DOCS)
-    hits = (
-        corpus.select("doc_id", F.explode("shingles").alias("shingle"))
-        .join(F.broadcast(bench), "shingle", "inner")
-        .groupBy("doc_id")
-        .agg(F.count("*").alias("n_overlap"))
-    )
-    base = corpus.select(
-        "doc_id", F.size("shingles").cast("bigint").alias("n_shingles")
-    )
-    per_doc = base.join(hits, "doc_id", "left").select(
-        "doc_id",
-        "n_shingles",
-        F.coalesce("n_overlap", F.lit(0)).alias("n_overlap"),
-    )
-    ratio = F.col("n_overlap") / F.col("n_shingles")
-    return per_doc.select(
-        "doc_id",
-        "n_shingles",
-        "n_overlap",
-        F.round(ratio, 4).alias("overlap_ratio"),
-        (ratio >= F.lit(CONTAM_RATIO)).alias("contaminated"),
-    )
-
-
-def decontam_ngram_overlap_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The 100 TB decontamination shape: identical semantics to
-    decontam_ngram_overlap, but shingles are 64-bit xxhash64(t1, t2, t3)
-    token-triple hashes — no shingle STRING is ever materialized (the
-    string concat + per-doc distinct over strings is over half the exact
-    query's cost).
-
-    Plan: ZERO exchanges. The benchmark side is always small (eval sets
-    are MBs vs a TB corpus), so its distinct hash set is collected to the
-    driver, sorted, and broadcast as a numpy array (same bounded-collect
-    stance as the ANN codebooks, similarity.py); the corpus side is then
-    ONE map pass — tokenize -> hash (scan-fused Columns) -> an Arrow
-    batch probe that counts per-doc membership via binary search
-    (np.searchsorted over the sorted benchmark hashes). The r3 shape
-    (persist + explode every corpus shingle through a broadcast join +
-    groupBy + join-back) moved every corpus shingle as a shuffle-format
-    row; here shingles live and die inside their batch. The
-    ratio/verdict arithmetic stays in the SAME Spark expressions as the
-    exact query, so the pytest value-equality pin compares like with
-    like. Overlap counts differ from the exact form only if two distinct
-    shingles collide at 64 bits AND straddle the benchmark/corpus split
-    (~1e-9 at test scale) — the generated oracle (bottom of module)
-    recomputes the SAME xxhash64 triple hashes in DuckDB via
-    functions/xxh64_sql.py, so parity is unaffected by collisions; the
-    query is additionally pytest-pinned value-equal to the exact query
-    at sf0.01 and sf0.1 (tests/test_curation.py)."""
-    import numpy as np
-    import pandas as pd
-    import pyspark.sql.types as T
-
-    d = load_table(spark, sf_dir, "documents")
-    toks = d.select(
-        "doc_id", F.filter(tokenize(F.col("text")), lambda w: w != "").alias("toks")
-    ).where(F.size("toks") >= SHINGLE_WIDTH)
-    # Token-triple hash, hardcoded to 3 adjacent tokens: keep the literal
-    # expression in sync with the exact query's shingle width.
-    assert SHINGLE_WIDTH == 3, "decontam_fast hash expr assumes 3-token shingles"
-    hsh = toks.select(
+    arrs = toks.select(
         "doc_id",
         F.expr(
             "array_distinct(transform(sequence(1, size(toks) - 2),"
             " i -> xxhash64(toks[i-1], toks[i], toks[i+1])))"
         ).alias("hs"),
-    )
-    # Benchmark probe set: driver-bounded (BENCH_DOCS documents; the scan
-    # below prunes to doc_id < BENCH_DOCS via parquet pushdown). Collect
-    # the per-doc hash ARRAYS and unique them driver-side — exploding the
-    # unpersisted `hs` expression instead trips Catalyst expression
-    # inlining (the transform re-evaluates per exploded element: measured
-    # 42.8 s for 50 bench docs at the 250K amplified corpus, vs 0.6 s for
-    # this direct collect).
-    bench_rows = hsh.where(F.col("doc_id") < BENCH_DOCS).select("hs").collect()
+    ).persist(StorageLevel.MEMORY_AND_DISK)
     bench = (
-        np.unique(
-            np.concatenate(
-                [np.asarray(r["hs"], dtype=np.int64) for r in bench_rows]
-            )
-        )
-        if bench_rows
-        else np.empty(0, dtype=np.int64)
+        arrs.where(F.col("doc_id") < BENCH_DOCS)
+        .select(F.explode("hs").alias("h"))
+        .distinct()
     )
-    bc = spark.sparkContext.broadcast(bench)
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("n_shingles", T.LongType()),
-            T.StructField("n_overlap", T.LongType()),
-        ]
+    corpus = arrs.where(F.col("doc_id") >= BENCH_DOCS)
+    hits = (
+        corpus.select("doc_id", F.explode("hs").alias("h"))
+        .join(F.broadcast(bench), "h", "inner")
+        .groupBy("doc_id")
+        .agg(F.count("*").alias("n_overlap"))
     )
-
-    def probe_batches(batches):
-        b = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            arrs = [np.asarray(a, dtype=np.int64) for a in pdf["hs"].to_numpy()]
-            lens = np.array([len(a) for a in arrs], dtype=np.int64)
-            flat = (
-                np.concatenate(arrs) if lens.sum() else np.empty(0, dtype=np.int64)
-            )
-            if len(b) and len(flat):
-                idx = np.minimum(np.searchsorted(b, flat), len(b) - 1)
-                hit = (b[idx] == flat).astype(np.float64)
-            else:
-                hit = np.zeros(len(flat), dtype=np.float64)
-            doc_idx = np.repeat(np.arange(len(arrs)), lens)
-            n_overlap = np.bincount(
-                doc_idx, weights=hit, minlength=len(arrs)
-            ).astype(np.int64)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].to_numpy(),
-                    "n_shingles": lens,
-                    "n_overlap": n_overlap,
-                }
-            )
-
-    per_doc = hsh.where(F.col("doc_id") >= BENCH_DOCS).mapInPandas(
-        probe_batches, schema
+    base = corpus.select("doc_id", F.size("hs").cast("bigint").alias("n_shingles"))
+    per_doc = base.join(hits, "doc_id", "left").select(
+        "doc_id",
+        "n_shingles",
+        F.coalesce("n_overlap", F.lit(0)).alias("n_overlap"),
     )
     ratio = F.col("n_overlap") / F.col("n_shingles")
     return per_doc.select(
@@ -571,7 +463,7 @@ def doc_pack_concat(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "decontam_ngram_overlap": decontam_ngram_overlap,
-    "decontam_ngram_overlap_fast": decontam_ngram_overlap_fast,
+    "decontam_ngram_overlap_fast": decontam_ngram_overlap,
     "lang_rebalance_sample": lang_rebalance_sample,
     "doc_chunk_windows": doc_chunk_windows,
     "doc_pack_bins": doc_pack_bins,

@@ -1,10 +1,13 @@
-"""Spark ML integration: the library path for clustering and LSH.
+"""Spark ML integration: the library path for LSH, and a deterministic
+k-means codebook.
 
 The hand-rolled operators elsewhere (operators/similarity.py IVF,
 operators/dedup.py MinHash) show the algorithms as explicit DataFrame
-plans; this module shows the same capabilities through spark.ml — the
-route a production pipeline usually takes (Pipeline persistence,
-mergeable models, distributed fit).
+plans; ml_minhash_neardups shows the same capability through spark.ml —
+the route a production pipeline usually takes (Pipeline persistence,
+mergeable models, distributed fit). ml_kmeans_clusters replaces the
+spark.ml KMeans fit, whose k-means|| init is partition-dependent, with
+an explicit Lloyd's plan.
 
 Oracle status (the ledger, fully closed in round 11):
   * ml_minhash_neardups — HASH-GATED. MinHashLSHModel's hash family is
@@ -43,18 +46,14 @@ Oracle status (the ledger, fully closed in round 11):
     the per-cluster aggregation is order-independent in both engines
     and the distance doubles derive from bit-identical integers with
     one fixed expression shape. Empty clusters DROP (the documented
-    cluster-death variant; the oracle mirrors). The spark.ml fit is
-    kept below as `ml_kmeans_spark` — the library-path quality
-    yardstick, pytest-gated, deliberately NOT registered (k-means||
-    init RNG is partition-dependent, the r9 ledger reason).
+    cluster-death variant; the oracle mirrors).
 
 Scale notes: the Lloyd's entry is iterative map-reduce — per round one
 broadcast of K x (DIM+1) longs and one exact-integer groupBy, linear
 per iteration, no global sort except the seed top-K (WindowGroupLimit
-pushes it to a per-partition top-K + 1-row merge); spark.ml KMeans fit
-is the same shape with library centroids; MinHashLSH transform is a
-map-only signature computation with approxSimilarityJoin doing the
-same band-bucket equi-join our hand-rolled LSH does.
+pushes it to a per-partition top-K + 1-row merge); MinHashLSH
+transform is a map-only signature computation with approxSimilarityJoin
+doing the same band-bucket equi-join our hand-rolled LSH does.
 """
 
 from __future__ import annotations
@@ -88,17 +87,6 @@ MINHASH_DIST = 0.5  # approxSimilarityJoin threshold (STRICT <)
 # driver footprint CountVectorizer.fit itself has — spark.ml collects
 # the vocabulary to build the model either way).
 _VOCAB_CAP = 2_000_000
-
-
-def _features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.ml.functions import array_to_vector
-
-    e = load_table(spark, sf_dir, "embeddings")
-    return e.select(
-        "vec_id",
-        "label",
-        array_to_vector(F.col("embedding").cast("array<double>")).alias("features"),
-    )
 
 
 #: Fixed Lloyd's assignment rounds (KMEANS_ITERS assignments, with a
@@ -165,8 +153,7 @@ def _kmeans_dist(xq: F.Column, s: F.Column, n: F.Column, c2n2: F.Column) -> F.Co
 def ml_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, label, cluster): deterministic Lloyd's k-means — the
     trained-codebook path of the IVF index, as an explicit DataFrame plan
-    (module docstring has the full determinism argument; the spark.ml
-    library fit lives in ml_kmeans_spark as the pytest yardstick).
+    (module docstring has the full determinism argument).
 
     Shape per round: broadcast K x (DIM+1) longs -> per-vector argmin
     over K literal-free centroid rows -> exact-integer groupBy(cluster).
@@ -244,48 +231,6 @@ def ml_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .localCheckpoint()
             )
     return assigned.select("vec_id", "label", "cluster")
-
-
-def ml_kmeans_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """spark.ml KMeans fit with a fixed seed — the library quality
-    yardstick (Pipeline persistence, mergeable models, distributed fit).
-    NOT registered: k-means|| init draws from a partition-seeded private
-    RNG, so the fitted centroids are split-dependent and not
-    SQL-restatable (the r9 ledger reason, now retired from the registry
-    by the deterministic Lloyd's entry above)."""
-    from pyspark.ml.clustering import KMeans
-
-    from dic_a1_spark.sources.readers import table_rowcount
-
-    n = table_rowcount(sf_dir, "embeddings")
-    if n == 0:
-        # KMeans.fit raises on an empty dataset (r10 empty-corpus
-        # probe); the footer-metadata count costs no corpus action.
-        import pyspark.sql.types as T
-
-        return spark.createDataFrame(
-            [],
-            T.StructType(
-                [
-                    T.StructField("vec_id", T.LongType()),
-                    T.StructField("label", T.IntegerType()),
-                    T.StructField("cluster", T.IntegerType()),
-                ]
-            ),
-        )
-    feats = _features(spark, sf_dir)
-    if n < 2:
-        # spark.ml KMeans requires k >= 2; a single-vector slice has
-        # exactly one possible clustering (r10 one-row-corpus probe).
-        return feats.select(
-            "vec_id", "label", F.lit(0).cast("int").alias("cluster")
-        )
-    # k > n also fails the fit (r10 one-row-corpus probe); a slice
-    # smaller than the configured k clusters to one point per row.
-    model = KMeans(k=min(KMEANS_K, n), seed=SEED, maxIter=10).fit(feats)
-    return model.transform(feats).select(
-        "vec_id", "label", F.col("prediction").alias("cluster")
-    )
 
 
 def ml_minhash_neardups(spark: SparkSession, sf_dir: str) -> DataFrame:

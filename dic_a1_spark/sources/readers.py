@@ -66,11 +66,13 @@ REVIEW_SCHEMA = StructType(
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one driver parquet table (TESTDATA.md).
 
-    The ``events`` table stores TIMESTAMP(NANOS), which Spark's parquet
-    reader rejects outright (PARQUET_TYPE_ILLEGAL). Read nanos as raw
-    int64 (legacy conf, runtime-settable) and convert to microsecond
-    TIMESTAMP_NTZ via integer division — same truncation DuckDB applies
-    when coercing ns->us, so oracle comparisons line up exactly.
+    The ``events`` fixtures (and the benchmark's generated tables) store
+    ``ts`` as ``timestamp[us]``, which Spark reads as is. An ``events``
+    file that stores TIMESTAMP(NANOS) instead would be rejected outright
+    (PARQUET_TYPE_ILLEGAL), so nanos are read as raw int64 (legacy conf,
+    runtime-settable) and converted to microsecond TIMESTAMP_NTZ via
+    integer division — same truncation DuckDB applies when coercing
+    ns->us, so oracle comparisons line up exactly.
 
     Each table's schema is inferred once per process (one Spark job that
     reads the footers) and memoized; later calls read through

@@ -34,27 +34,12 @@ def test_decontam_benchmark_side_broadcasts(spark):
     assert "BroadcastHashJoin" in plan
 
 
-def test_decontam_fast_plan_has_no_exchange(spark):
-    """The fast path is one map pass: scan -> tokenize/hash -> Arrow
-    binary-search probe. Any Exchange here means corpus shingles are
-    traveling as shuffle rows again (the pre-r4 shape)."""
-    plan = formatted_plan(curation.decontam_ngram_overlap_fast(spark, SF_CORRECT))
-    assert "Exchange" not in plan
-
-
-def test_decontam_fast_matches_exact(spark):
-    """The hashed (rows-only) variant must be value-identical to the
-    oracle-gated exact variant — collisions would show up here first."""
-    cols = ["doc_id", "n_shingles", "n_overlap", "overlap_ratio", "contaminated"]
-    exact = sorted(
-        tuple(r[c] for c in cols)
-        for r in curation.decontam_ngram_overlap(spark, SF_CORRECT).collect()
+def test_decontam_names_share_one_body():
+    """Both registered decontam names run the one hash-probe body."""
+    assert (
+        curation.QUERIES["decontam_ngram_overlap_fast"]
+        is curation.QUERIES["decontam_ngram_overlap"]
     )
-    fast = sorted(
-        tuple(r[c] for c in cols)
-        for r in curation.decontam_ngram_overlap_fast(spark, SF_CORRECT).collect()
-    )
-    assert exact == fast
 
 
 def test_rebalance_caps_heavy_language_keeps_light_whole(spark):

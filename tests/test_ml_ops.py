@@ -17,17 +17,6 @@ def test_kmeans_clusters_all_vectors(spark):
     assert len(clusters) > 1, "degenerate clustering"
 
 
-def test_kmeans_spark_yardstick_all_vectors(spark):
-    """The unregistered spark.ml fit (library path) still covers every
-    vector and produces a non-degenerate clustering."""
-    rows = ml_ops.ml_kmeans_spark(spark, SF_SMOKE).collect()
-    n_vecs = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet").count()
-    assert len(rows) == n_vecs
-    clusters = {r["cluster"] for r in rows}
-    assert clusters <= set(range(ml_ops.KMEANS_K))
-    assert len(clusters) > 1, "degenerate clustering"
-
-
 def test_kmeans_oracle_parity(spark):
     """The r11 hash gate, run in-suite: exact-integer centroid state
     makes the deterministic Lloyd's bit-restatable in DuckDB."""

@@ -273,8 +273,9 @@ def test_dedup_family_exchange_budgets(spark):
       dedup.band_pairs, so each one is pinned.
     - exact/tokenset groups: exactly the ONE census aggregation their
       docstrings promise.
-    - decontam_ngram_overlap_fast: the zero-exchange broadcast-probe
-      contract (benchmark hashes collected + broadcast, corpus map-only).
+    - decontam_ngram_overlap (both names): the benchmark's distinct
+      hashes and the hit-count aggregate, the only two exchanges; the
+      corpus side reaches the probe map-only.
     - line_dedup_kept: census + kept-join + rebuild = 3.
     """
     pins = {
@@ -287,7 +288,8 @@ def test_dedup_family_exchange_budgets(spark):
         "dedup_incremental_minhash": 0,
         "dedup_exact_groups": 1,
         "dedup_tokenset_groups": 1,
-        "decontam_ngram_overlap_fast": 0,
+        "decontam_ngram_overlap": 2,
+        "decontam_ngram_overlap_fast": 2,
         "line_dedup_kept": 3,
     }
     for name, pin in pins.items():

@@ -12,8 +12,10 @@ measured claim where the data is big enough to show it.
     python tools/core_scaling_probe.py [--work-dir /tmp/dic_a1_scale]
 
 Reuses scale_bench's amplified parquet if already present (writes it
-otherwise); each core count runs in its own subprocess so the JVM is
-fresh and `local[N]` is honest.
+otherwise); each run is its own subprocess so the JVM is fresh and
+`local[N]` is honest. The core counts run in ABBA order (32, 8, 8, 32)
+and each query's time is the mean of its two runs, so neither count
+gets the page cache or a drifting host to itself.
 """
 
 from __future__ import annotations
@@ -93,6 +95,25 @@ def _child(work_dir: str) -> None:
     spark.stop()
 
 
+def _run_child(cpus: str, work_dir: str) -> dict:
+    env = dict(os.environ, SPARK_GRAFT_CPUS=cpus)
+    try:
+        p = subprocess.run(
+            [sys.executable, __file__, "--child", "--work-dir", work_dir],
+            env=env,
+            capture_output=True,
+            text=True,
+            check=True,
+        )
+    except subprocess.CalledProcessError as e:
+        sys.stderr.write(e.stderr)
+        raise SystemExit(f"local[{cpus}] child failed (exit {e.returncode})") from e
+    line = [
+        ln for ln in p.stdout.splitlines() if ln.startswith("CORESCALE_CHILD ")
+    ][-1]
+    return json.loads(line.removeprefix("CORESCALE_CHILD "))
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--work-dir", default="/tmp/dic_a1_scale")
@@ -110,23 +131,14 @@ def main() -> None:
     _ensure_amplified(args.work_dir, args.sf_dir, args.factor)
     _warm_page_cache(args.work_dir)
 
-    results: dict[str, dict] = {}
-    for cpus in (32, 8):
-        env = dict(os.environ, SPARK_GRAFT_CPUS=str(cpus))
-        p = subprocess.run(
-            [sys.executable, __file__, "--child", "--work-dir", args.work_dir],
-            env=env,
-            capture_output=True,
-            text=True,
-        )
-        if p.returncode != 0:
-            sys.stderr.write(p.stderr)
-            raise SystemExit(f"local[{cpus}] child failed (exit {p.returncode})")
-        line = [
-            ln for ln in p.stdout.splitlines() if ln.startswith("CORESCALE_CHILD ")
-        ][-1]
-        results[str(cpus)] = json.loads(line.removeprefix("CORESCALE_CHILD "))
-        print(f"local[{cpus}]:", results[str(cpus)])
+    runs: dict[str, list[dict]] = {"32": [], "8": []}
+    for cpus in ("32", "8", "8", "32"):
+        runs[cpus].append(_run_child(cpus, args.work_dir))
+        print(f"local[{cpus}]:", runs[cpus][-1])
+    results = {
+        cpus: {q: round(sum(r[q] for r in rs) / len(rs), 3) for q in PROBE_QUERIES}
+        for cpus, rs in runs.items()
+    }
 
     ratios = {
         q: round(results["8"][q] / results["32"][q], 2)
